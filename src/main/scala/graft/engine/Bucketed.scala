@@ -108,41 +108,12 @@ object Bucketed {
     // is retention's job ([[expire]]), not the read path's.
     val ident = s"graft_bkt_${name}_" + digest(
       s"$sfDir|$name|$key|$n|${df.schema.toDDL}|${SourceId.fingerprint(s, df)}")
-    val path = s"$root/$ident"
-    val conf = s.sparkContext.hadoopConfiguration
-    val pathP = new org.apache.hadoop.fs.Path(path)
-    val fs = pathP.getFileSystem(conf)
+    val (fs, pathP) = qualified(s, s"$root/$ident")
+    val path = pathP.toString
     if (!s.catalog.tableExists(ident)) {
-      if (!fs.exists(pathP)) {
-        // pay the layout shuffle once; repartition on the bucket key
-        // so each task holds whole buckets → one file per bucket,
-        // which is also the condition under which Spark trusts the
-        // written sortBy order and drops the per-task sort below a
-        // sort-merge join (zero exchange AND zero sort)
-        val tag = java.util.UUID.randomUUID().toString.take(8)
-        val staging = new org.apache.hadoop.fs.Path(
-          s"$path.__staging__$tag")
-        val tmpIdent = s"${ident}_stg_$tag"
-        try {
-          df.repartition(n, org.apache.spark.sql.functions.col(key))
-            .write.format("parquet")
-            .bucketBy(n, key)
-            .sortBy(key)
-            .option("path", staging.toString)
-            .saveAsTable(tmpIdent)
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            fs.getUri, conf)
-          try fc.rename(staging, pathP,
-            org.apache.hadoop.fs.Options.Rename.NONE)
-          catch {
-            // lost the publish race — the winner's copy is identical
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-          }
-        } finally {
-          s.sql(s"DROP TABLE IF EXISTS $tmpIdent") // external: keeps files
-          if (fs.exists(staging)) fs.delete(staging, true)
-        }
-      }
+      // pay the layout shuffle once; losing the publish race is fine —
+      // the winner's copy is identical
+      if (!fs.exists(pathP)) commitStaged(s, fs, pathP, df, key, n, verify = false)
       // attach the bucket spec to the committed files (metadata only)
       s.sql(s"""CREATE TABLE $ident (${df.schema.toDDL})
         USING PARQUET CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS
@@ -155,9 +126,9 @@ object Bucketed {
   }
 
   /** Publish `df` at `dest` as an IMMUTABLE BUCKETED GENERATION — the
-    * serving-shape twin of [[graft.engine.Snapshot.publishAtomic]]
-    * (r17, VERDICT r16 next #7): same create-if-absent atomic-rename
-    * commit and same immutability contract, but the files are written
+    * serving-shape twin of [[graft.engine.Snapshot.publishAtomic]]:
+    * same create-if-absent atomic-rename commit, verification and
+    * immutability contract, but the files are written
     * `bucketBy(n, key).sortBy(key)` with one file per bucket, so a
     * consumer that attaches the generation ([[attachGeneration]]) gets
     * sort-merge joins on `key` with ZERO exchange and ZERO sort. This
@@ -174,46 +145,66 @@ object Bucketed {
       s: SparkSession, df: DataFrame, dest: String,
       key: String, n: Int): Unit = {
     require(n > 0, s"bucket count must be positive: $n")
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = destPath.getFileSystem(conf)
+    val (fs, destPath) = qualified(s, dest)
     if (fs.exists(destPath)) throw new Snapshot.SnapshotExistsException(
       s"generation $dest already exists — snapshots are immutable")
+    if (!commitStaged(s, fs, destPath, df, key, n, verify = true))
+      throw new Snapshot.SnapshotExistsException(
+        s"generation $dest already exists — lost the publish race; " +
+          "snapshots are immutable")
+  }
+
+  /** Write `df` bucketed on `key` beside `dest` and commit it with one
+    * create-if-absent rename; false when `dest` won the race first.
+    * The write repartitions on the bucket key, so each task holds whole
+    * buckets → one file per bucket, the condition under which Spark
+    * trusts the written sortBy order and drops the per-task sort below
+    * a sort-merge join (zero exchange AND zero sort). With `verify`,
+    * the write is Snapshot.publishAtomic's: the manifest rides the
+    * commit and the staged content is verified BEFORE it can become
+    * visible. Staging and its throwaway catalog ident are removed on
+    * every exit path. */
+  private def commitStaged(
+      s: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      dest: org.apache.hadoop.fs.Path, df: DataFrame, key: String, n: Int,
+      verify: Boolean): Boolean = {
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(s"$dest.__staging__$tag")
-    val tmpIdent = s"graft_bktgen_stg_$tag"
+    val tmpIdent = s"graft_bkt_stg_$tag"
     try {
-      // repartition on the bucket key → whole buckets per task → one
-      // file per bucket, the condition for trusting the written order
-      df.repartition(n, org.apache.spark.sql.functions.col(key))
+      val write = (d: DataFrame) => d
+        .repartition(n, org.apache.spark.sql.functions.col(key))
         .write.format("parquet")
         .bucketBy(n, key)
         .sortBy(key)
         .option("path", staging.toString)
         .saveAsTable(tmpIdent)
-      // same publish discipline as Snapshot.publishAtomic: manifest
-      // rides the commit rename (a generation is never visible without
-      // it) and the staged content is verified against the source
-      // BEFORE it can become visible
-      Snapshot.writeManifest(s, staging.toString)
-      val rt = Snapshot.verifyContent(s, df, staging.toString)
-      require(rt.verified,
-        s"staged bucketed generation failed verification: " +
+      if (!verify) write(df)
+      else {
+        val rt = Snapshot.writeVerified(s, df, staging.toString, manifest = true)(write)
+        require(rt.verified, s"staged bucketed generation failed verification: " +
           s"missing=${rt.missing} extra=${rt.extra}")
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, conf)
-      try fc.rename(staging, destPath,
-        org.apache.hadoop.fs.Options.Rename.NONE)
-      catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new Snapshot.SnapshotExistsException(
-            s"generation $dest already exists — lost the publish race; " +
-              "snapshots are immutable", e)
       }
+      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+        fs.getUri, s.sparkContext.hadoopConfiguration)
+      try { fc.rename(staging, dest, org.apache.hadoop.fs.Options.Rename.NONE); true }
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $tmpIdent") // external: keeps files
       if (fs.exists(staging)) fs.delete(staging, true)
     }
+  }
+
+  /** `p` made absolute against its filesystem's working directory.
+    * `saveAsTable` and `CREATE TABLE … LOCATION` resolve a relative
+    * path against the warehouse directory while `FileContext.rename`
+    * resolves it against the working directory, so every path handed
+    * to them is qualified first, here. */
+  private def qualified(s: SparkSession, p: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(path))
   }
 
   /** Attach a generation published by [[publishGeneration]] as a
@@ -233,7 +224,7 @@ object Bucketed {
     if (!s.catalog.tableExists(ident))
       s.sql(s"""CREATE TABLE $ident (${schema.toDDL})
         USING PARQUET CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS
-        LOCATION '$dest'""")
+        LOCATION '${qualified(s, dest)._2}'""")
     s.table(ident)
   }
 

@@ -216,6 +216,13 @@ object Snapshot {
     * temp-dump → upload → cleanup flow (backup.sh:209-220,370), with
     * verification moved BEFORE visibility instead of after.
     *
+    * Verification ([[writeVerified]]) checks the staged files against
+    * the rows the write consumed, observed on its own pass. That
+    * observed digest only decides the fast path: any disagreement
+    * falls back to a full recomputation ([[verifyContent]]). A source
+    * that changes between two reads (a live JDBC table) therefore no
+    * longer fails the publish because of the verifier's re-read.
+    *
     * The staging name deliberately does not match the `snapshotName`
     * layout, so retention ([[expireGenerations]]) and time travel
     * ([[readAsOf]]) never see half-written data even mid-publish.
@@ -250,25 +257,7 @@ object Snapshot {
     val staging = new org.apache.hadoop.fs.Path(
       dest + ".__staging__" + java.util.UUID.randomUUID().toString.take(8))
     try {
-      val n = write(df, staging.toString)
-      // Manifest lands INSIDE staging, so the commit rename publishes
-      // data + stats as one atomic unit — a generation is never
-      // visible without its manifest.
-      writeManifest(spark, staging.toString)
-      // Caller metadata (e.g. a compaction's replaces-list) rides the
-      // same atomic rename: visible iff the generation is. Names must
-      // start with '_' or '.' so scans ignore them.
-      extras.foreach { case (name, body) =>
-        require(name.startsWith("_") || name.startsWith("."),
-          s"extra file $name would be read as data — prefix with _ or .")
-        val out = fs.create(new org.apache.hadoop.fs.Path(staging, name), true)
-        try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      val rt = verifyContent(spark, df, staging.toString)
-        .copy(originalRows = n)
-      require(rt.verified,
-        s"staged snapshot failed verification: missing=${rt.missing} extra=${rt.extra}")
+      val rt = stage(spark, df, fs, staging, extras)
       // Bind the context to the RESOLVED filesystem's URI: a local
       // dest path has no scheme, and toUri would leave the context on
       // whatever the default FS is rather than the one `fs` resolved.
@@ -286,6 +275,29 @@ object Snapshot {
     } finally {
       if (fs.exists(staging)) fs.delete(staging, true)
     }
+  }
+
+  /** The uncommitted half of both publish modes: a verified write of
+    * `df` into `dir`, then the caller's `extras` beside the manifest,
+    * so the commit publishes data + stats + metadata as one atomic
+    * unit. Extra names must start with '_' or '.' so scans ignore
+    * them. Throws unless verified. */
+  private def stage(
+      spark: SparkSession, df: DataFrame, fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, extras: Map[String, String]): RoundTrip = {
+    extras.keys.foreach(name =>
+      require(name.startsWith("_") || name.startsWith("."),
+        s"extra file $name would be read as data — prefix with _ or ."))
+    val rt = writeVerified(spark, df, dir.toString, manifest = true)(
+      _.write.mode("overwrite").parquet(dir.toString))
+    require(rt.verified,
+      s"staged snapshot failed verification: missing=${rt.missing} extra=${rt.extra}")
+    extras.foreach { case (name, body) =>
+      val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), true)
+      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    rt
   }
 
   /** A publisher lost to an existing generation — either a pre-flight
@@ -380,19 +392,8 @@ object Snapshot {
     val obj = new org.apache.hadoop.fs.Path(s"$root/$ObjectsDir/$objName")
     var committed = false
     try {
-      val n = write(df, obj.toString)
-      writeManifest(spark, obj.toString)
-      extras.foreach { case (name, body) =>
-        require(name.startsWith("_") || name.startsWith("."),
-          s"extra file $name would be read as data — prefix with _ or .")
-        val out = fs.create(new org.apache.hadoop.fs.Path(obj, name), true)
-        try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      val rt = verifyContent(spark, df, obj.toString).copy(originalRows = n)
-      require(rt.verified,
-        s"staged snapshot failed verification: missing=${rt.missing} extra=${rt.extra}")
-      val body = s"""{"object":"$objName","rows":$n}"""
+      val rt = stage(spark, df, fs, obj, extras)
+      val body = s"""{"object":"$objName","rows":${rt.restoredRows}}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       try {
         createExclusive(fs, ptr, body)
@@ -435,11 +436,7 @@ object Snapshot {
     val ptr = pointerPath(root, gen)
     val fs = ptr.getFileSystem(conf)
     if (!fs.exists(ptr)) return None
-    val in = fs.open(ptr)
-    val bytes =
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    val objName = jsonMapper.readTree(bytes).get("object").asText()
+    val objName = jsonMapper.readTree(readBytes(fs, ptr)).get("object").asText()
     val obj = s"$root/$ObjectsDir/$objName"
     if (!fs.exists(new org.apache.hadoop.fs.Path(obj)))
       throw new IllegalStateException(
@@ -542,12 +539,8 @@ object Snapshot {
     val referenced = (if (!fs.exists(ptrsDir)) Seq.empty[String]
       else fs.listStatus(ptrsDir).toSeq.filter(_.isFile)
         .map(_.getPath.getName)).flatMap { gen =>
-      val ptr = pointerPath(root, gen)
-      val in = fs.open(ptr)
-      val bytes =
-        try org.apache.commons.io.IOUtils.toByteArray(in)
-        finally in.close()
-      Option(jsonMapper.readTree(bytes).get("object")).map(_.asText())
+      Option(jsonMapper.readTree(readBytes(fs, pointerPath(root, gen)))
+        .get("object")).map(_.asText())
     }.toSet
     val horizon = System.currentTimeMillis() - minAgeMs
     fs.listStatus(objsDir)
@@ -566,45 +559,29 @@ object Snapshot {
   final case class ColumnStats(min: String, max: String, dtype: String)
   final case class Manifest(rowCount: Long, columns: Map[String, ColumnStats])
 
-  private def jsonMapper = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    m
+  private def jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def readBytes(
+      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): Array[Byte] = {
+    val in = fs.open(p)
+    try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
   }
 
-  /** Compute and write `dest/_graft_manifest.json`: row count plus
-    * per-column min/max for every atomic orderable column, ONE scalar
-    * aggregation pass (at 100 TB parquet footer stats answer it
-    * per-file without row reads). The manifest is what lets later
-    * maintenance answer "is this generation non-empty" (the A15 guard,
-    * backup.sh:215) and "can this generation contain k ∈ [lo,hi]"
-    * from one tiny file read instead of listing and footer-scanning
-    * every parquet part — the role Iceberg/Delta give their manifest
-    * and stats files. Values serialize as strings with the dtype
-    * alongside; consumers compare in the domain the dtype names.
-    * All-null columns are omitted (no stats ≠ stats of empty string). */
-  def writeManifest(spark: SparkSession, dest: String): Manifest = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    import org.apache.spark.sql.types._
-    val df = spark.read.parquet(dest)
-    val statFields = df.schema.fields.filter(f => f.dataType match {
-      case _: NumericType | StringType | BooleanType | DateType |
-           TimestampType | TimestampNTZType => true
-      case _ => false
-    })
-    val aggs = count(lit(1)).as("__n") +: statFields.flatMap(f =>
-      Seq(min(col(f.name)), max(col(f.name)))).toSeq
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val cols = statFields.zipWithIndex.flatMap { case (f, i) =>
-      val (lo, hi) = (row.get(1 + 2 * i), row.get(2 + 2 * i))
-      if (lo == null || hi == null) None
-      else Some(f.name -> ColumnStats(
-        String.valueOf(lo), String.valueOf(hi), f.dataType.typeName))
-    }.toMap
-    val manifest = Manifest(row.getLong(0), cols)
+  /** Write `dest/_graft_manifest.json`: row count plus per-column
+    * min/max from [[writeVerified]]'s read-back aggregate. The manifest
+    * is what lets later maintenance answer "is this generation
+    * non-empty" (the A15 guard, backup.sh:215) and "can this generation
+    * contain k ∈ [lo,hi]" from one tiny file read instead of listing
+    * and footer-scanning every parquet part — the role Iceberg/Delta
+    * give their manifest and stats files. Values serialize as strings
+    * with the dtype alongside; consumers compare in the domain the
+    * dtype names. All-null columns are omitted (no stats ≠ stats of
+    * empty string). */
+  private def writeManifest(spark: SparkSession, dest: String, m: Manifest): Unit = {
     val root = jsonMapper.createObjectNode()
-    root.put("rowCount", manifest.rowCount)
+    root.put("rowCount", m.rowCount)
     val colsNode = root.putObject("columns")
-    manifest.columns.toSeq.sortBy(_._1).foreach { case (name, st) =>
+    m.columns.toSeq.sortBy(_._1).foreach { case (name, st) =>
       val n = colsNode.putObject(name)
       n.put("min", st.min); n.put("max", st.max); n.put("dtype", st.dtype)
     }
@@ -613,7 +590,6 @@ object Snapshot {
     val out = fs.create(path, true)
     try out.write(root.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    manifest
   }
 
   /** Read a generation's manifest, if present. */
@@ -621,11 +597,7 @@ object Snapshot {
     val path = new org.apache.hadoop.fs.Path(dest, ManifestFile)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return None
-    val in = fs.open(path)
-    val bytes =
-      try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-    val node = jsonMapper.readTree(bytes)
+    val node = jsonMapper.readTree(readBytes(fs, path))
     import scala.jdk.CollectionConverters._
     val cols = Option(node.get("columns")).map { cn =>
       cn.properties().asScala.map { e =>
@@ -687,7 +659,8 @@ object Snapshot {
     * file, and the driver pays listing). Sizing reads the actual byte
     * count from the filesystem, not a guess; `repartition` (round-robin)
     * balances rows across the target files. Content is verified equal
-    * via the digest check before the result is trusted.
+    * ([[writeVerified]], so an empty input fails its non-empty guard)
+    * before the result is trusted.
     *
     * @return file/byte stats of the SOURCE and the target file count */
   def compact(
@@ -699,9 +672,8 @@ object Snapshot {
     val summary = fs.getContentSummary(hPath)
     val n = math.max(1, math.min(summary.getLength / targetBytes + 1,
       Int.MaxValue.toLong).toInt)
-    val df = spark.read.parquet(src)
-    df.repartition(n).write.mode("overwrite").parquet(dest)
-    val rt = verifyContent(spark, df, dest)
+    val rt = writeVerified(spark, spark.read.parquet(src), dest, manifest = false)(
+      _.repartition(n).write.mode("overwrite").parquet(dest))
     require(rt.verified,
       s"compaction changed content: missing=${rt.missing} extra=${rt.extra}")
     Compaction(summary.getFileCount, summary.getLength, n)
@@ -786,10 +758,7 @@ object Snapshot {
       .repartitionByRange(numFiles, col("__zkey"))
       .sortWithinPartitions("__zkey")
       .drop("__za", "__zb", "__ba", "__bb", "__zkey")
-    laid.write.mode("overwrite").parquet(dest)
-    val n = df.sparkSession.read.parquet(dest).count()
-    if (n == 0L) throw new EmptySnapshotException(s"snapshot at $dest has no data")
-    n
+    write(laid, dest)
   }
 
   /** Write `df` as parquet laid out in Z-order (Morton order) on two
@@ -817,10 +786,7 @@ object Snapshot {
       .repartitionByRange(numFiles, col("__zkey"))
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
-    laid.write.mode("overwrite").parquet(dest)
-    val n = df.sparkSession.read.parquet(dest).count()
-    if (n == 0L) throw new EmptySnapshotException(s"snapshot at $dest has no data")
-    n
+    write(laid, dest)
   }
 
   final case class Incremental(inserted: Long, deleted: Long, unchanged: Long)
@@ -828,11 +794,27 @@ object Snapshot {
   /** Diff two snapshot generations (multiset semantics): rows only in
     * `current` are inserts, rows only in `previous` are deletes. The
     * incremental-backup analog of the reference's full-dump-per-run —
-    * at 100 TB ship only the delta. */
+    * at 100 TB ship only the delta.
+    *
+    * One aggregate over `previous` (+1) ∪ `current` (−1) grouped on
+    * the FULL row, by position: a group's weight d counts the copies
+    * only in previous (d > 0) or only in current (d < 0). That is
+    * Spark's own EXCEPT ALL rewrite, so the multiset and NULL-equality
+    * semantics are exactly `exceptAll`'s both ways, for one shuffle
+    * instead of two. Empty sums coalesce to 0. */
   def incremental(previous: DataFrame, current: DataFrame): Incremental = {
-    val ins = current.exceptAll(previous).count()
-    val del = previous.exceptAll(current).count()
-    Incremental(ins, del, unchanged = current.count() - ins)
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
+    val names = previous.columns.indices.map(i => s"c$i")
+    val signed = previous.toDF(names: _*).withColumn("w", lit(1L))
+      .unionAll(current.toDF(names: _*).withColumn("w", lit(-1L)))
+    def total(c: org.apache.spark.sql.Column) = coalesce(sum(c), lit(0L))
+    val r = signed.groupBy(names.map(col): _*)
+      .agg(sum(col("w")).as("d"), count(when(col("w") < 0, 1)).as("c"))
+      .agg(total(when(col("d") < 0, -col("d"))),
+        total(when(col("d") > 0, col("d"))), total(col("c")))
+      .head()
+    val inserted = r.getLong(0)
+    Incremental(inserted, r.getLong(1), unchanged = r.getLong(2) - inserted)
   }
 
   final case class RoundTrip(
@@ -840,54 +822,106 @@ object Snapshot {
     def verified: Boolean = missing == 0L && extra == 0L && originalRows == restoredRows
   }
 
-  /** Order-insensitive multiset digest of a DataFrame: row count plus
-    * the sum of per-row xxhash64 over all columns, summed in the exact
-    * decimal domain (ANSI-safe — a long sum of 64-bit hashes would
-    * overflow). Equal multisets always produce equal digests; a
-    * differing multiset escaping detection needs a ~2^-64 hash-sum
-    * collision. One narrow scan, no shuffle beyond a scalar agg. */
-  private[graft] def contentDigest(df: DataFrame): (Long, java.math.BigDecimal) = {
-    import org.apache.spark.sql.functions._
-    val rowHash = xxhash64(df.columns.map(col): _*)
+  /** Per-row xxhash64 over every column, widened to DECIMAL(38,0) so
+    * that its sum is exact (a long sum of 64-bit hashes would
+    * overflow). */
+  private def rowHash(df: DataFrame): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    xxhash64(df.columns.toSeq.map(col): _*)
       .cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    val r = df.agg(count(lit(1)), sum(rowHash)).head()
-    (r.getLong(0),
-      if (r.isNullAt(1)) java.math.BigDecimal.ZERO
-      else r.getDecimal(1))
+  }
+
+  /** Order-insensitive multiset digest of a DataFrame: row count plus
+    * the sum of [[rowHash]]. Equal multisets always produce equal
+    * digests; a differing multiset escaping detection needs a ~2^-64
+    * hash-sum collision. One narrow scan, no shuffle beyond a scalar
+    * agg. */
+  private[graft] def contentDigest(df: DataFrame): (Long, java.math.BigDecimal) = {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    val r = df.agg(count(lit(1)), sum(rowHash(df))).head()
+    (r.getLong(0), digestAt(r, 1))
+  }
+
+  private def digestAt(r: org.apache.spark.sql.Row, i: Int): java.math.BigDecimal =
+    if (r.isNullAt(i)) java.math.BigDecimal.ZERO else r.getDecimal(i)
+
+  // observed metrics arrive on the listener bus after the write returns
+  private val ObservedWait = scala.concurrent.duration.Duration(60, "s")
+
+  /** The one verified write behind every publish, [[roundTripVerify]]
+    * and [[compact]], in two passes: `write` puts `df`'s rows at `dest`
+    * as parquet with their count and digest OBSERVED on that pass (as
+    * [[Gate]] does), then one aggregate over the written files gives
+    * the count (the non-empty guard, exit code 2, backup.sh:215), the
+    * restored digest and, with `manifest`, the manifest's min/max.
+    *
+    * Equal counts and digests verify the write. Any disagreement —
+    * a metric counted twice by a retried shuffle-map stage included —
+    * falls back to [[verifyContent]], which recomputes the source and
+    * gives exact missing/extra counts: the observation only decides
+    * the fast path, never the verdict. */
+  private[engine] def writeVerified(
+      spark: SparkSession, df: DataFrame, dest: String, manifest: Boolean)(
+      write: DataFrame => Unit): RoundTrip = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
+    import org.apache.spark.sql.types._
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("n"), sum(rowHash(df)).as("digest")))
+    val back = spark.read.parquet(dest)
+    // the manifest has min/max for every atomic orderable column
+    val stats = if (!manifest) Nil else back.schema.fields.toSeq.filter(_.dataType match {
+      case _: NumericType | StringType | BooleanType | DateType |
+           TimestampType | TimestampNTZType => true
+      case _ => false
+    })
+    val aggs = Seq(count(lit(1)), sum(rowHash(back))) ++
+      stats.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
+    val r = back.agg(aggs.head, aggs.tail: _*).head()
+    val n = r.getLong(0)
+    if (n == 0L) throw new EmptySnapshotException(s"snapshot at $dest has no data")
+    if (manifest) writeManifest(spark, dest, Manifest(n,
+      stats.zipWithIndex.flatMap { case (f, i) =>
+        val (lo, hi) = (r.get(2 + 2 * i), r.get(3 + 2 * i))
+        if (lo == null || hi == null) None
+        else Some(f.name -> ColumnStats(
+          String.valueOf(lo), String.valueOf(hi), f.dataType.typeName))
+      }.toMap))
+    val seen = scala.util.Try(
+      scala.concurrent.Await.result(obs.future, ObservedWait)).toOption
+    if (seen.exists(o => o.getLong(0) == n && digestAt(o, 1).compareTo(digestAt(r, 1)) == 0))
+      RoundTrip(n, n, missing = 0L, extra = 0L)
+    else verifyContent(spark, df, dest)
   }
 
   /** Write `df` to `dest`, read it back, and verify content equality
     * (multiset — stricter than the reference's "restore succeeded"
-    * check, backup.sh:264-299).
+    * check, backup.sh:264-299) in [[writeVerified]]'s two passes, with
+    * scalar digests instead of two full-width EXCEPT ALL shuffles.
     *
-    * Fast path: compare order-insensitive hash digests — two narrow
-    * scans, no shuffle. This is the 100 TB design: a symmetric
-    * EXCEPT ALL is two full-width shuffles of the entire snapshot,
-    * while the digest is a scalar aggregate. Only when the digests
-    * disagree (which a healthy pipeline never hits) does it fall back
-    * to the exact EXCEPT ALL diff to report how many rows went
-    * missing/extra. */
-  def roundTripVerify(spark: SparkSession, df: DataFrame, dest: String): RoundTrip = {
-    val n = write(df, dest)
-    verifyContent(spark, df, dest).copy(originalRows = n)
-  }
+    * The digest observed on the write only decides the fast path: any
+    * disagreement falls back to a full recomputation
+    * ([[verifyContent]]) with exact missing/extra counts. The files
+    * are verified against the rows the write consumed, so a source
+    * that changes between two reads (a live JDBC table) no longer
+    * fails the round trip because of the verifier's re-read. */
+  def roundTripVerify(spark: SparkSession, df: DataFrame, dest: String): RoundTrip =
+    writeVerified(spark, df, dest, manifest = false)(
+      _.write.mode("overwrite").parquet(dest))
 
   /** Verify an EXISTING snapshot at `dest` against the expected `df` —
     * the standalone restore-side check (backup.sh:372-376), also the
-    * slow path of [[roundTripVerify]]. Digest fast path as above;
-    * exact EXCEPT ALL missing/extra counts only on digest mismatch. */
+    * slow path of [[writeVerified]]. Digests of both sides first;
+    * exact EXCEPT ALL missing/extra counts ([[incremental]]) only on
+    * digest mismatch. */
   def verifyContent(spark: SparkSession, df: DataFrame, dest: String): RoundTrip = {
     val restored = spark.read.parquet(dest)
     val (srcN, srcDigest) = contentDigest(df)
     val (rstN, rstDigest) = contentDigest(restored)
     if (srcN == rstN && srcDigest.compareTo(rstDigest) == 0)
-      RoundTrip(originalRows = srcN, restoredRows = rstN,
-        missing = 0L, extra = 0L)
-    else
-      RoundTrip(
-        originalRows = srcN,
-        restoredRows = rstN,
-        missing = df.exceptAll(restored).count(),
-        extra = restored.exceptAll(df).count())
+      RoundTrip(srcN, rstN, missing = 0L, extra = 0L)
+    else {
+      val diff = incremental(df, restored)
+      RoundTrip(srcN, rstN, missing = diff.deleted, extra = diff.inserted)
+    }
   }
 }

@@ -187,33 +187,31 @@ object Aggregates {
   val aggStats: Q = Q(
     "q_agg_stats",
     (s, d) => {
-      // Histogram refinement for the exact median (r19, guide §2.3/§2.5
-      // — the [[aggWeightedMedian]] pattern): Spark's `median()` is a
-      // buffer-everything TypedImperativeAggregate — no partial
-      // aggregation, so at sf20 the "aggregate" shuffled 247 MB of raw
-      // prices into FIVE tasks (one per priority — parallelism capped
-      // by group count at ANY cluster size) and read that exchange
-      // twice (qprofile: 3 × ~5.5 s-span stages, 15.4 s wall). The
-      // rewrite: (1) one map-side-combined pass over (priority,
-      // 64-unit price bucket) carrying count/Σx/Σx²/min/max partials —
-      // every other statistic re-aggregates exactly from these; (2) the
-      // two 0-indexed target ranks of Spark's interpolating median,
-      // r1 = (n−1) DIV 2 and r2 = n DIV 2, located in their buckets by
-      // a prefix window over the ~10k-row histogram; (3) a second
-      // narrow scan keeps ONLY the ≤2 boundary buckets per priority and
-      // ranks inside them. The interpolation replicates Percentile's
-      // arithmetic bit-for-bit: 0.5·lo + 0.5·hi (exact halving, one
-      // rounding add — and ≡ lo when r1 = r2). The decimal re-sums are
-      // exact (decimal addition is associative; only the type widens,
-      // and both sums cast to double from the identical value), so the
-      // whole rewrite is oracle-checked against the unchanged
-      // single-pass SQL.
+      // Histogram refinement for the exact median (the
+      // [[aggWeightedMedian]] pattern): Spark's `median()` buffers every
+      // value with no partial aggregation, capping parallelism at the
+      // five priorities. Instead: (1) one map-side-combined pass over
+      // (priority, FLOOR(price / 64) bucket — monotone in price, signs
+      // included, as the prefix ranks need) carrying count/Σx/Σx²/
+      // min/max partials, from which every other statistic
+      // re-aggregates exactly; (2) the two 0-indexed target ranks of
+      // the interpolating median, r1 = (n−1) DIV 2 and r2 = n DIV 2,
+      // located in their buckets by a prefix window over the histogram;
+      // (3) a second narrow scan ranks inside only the ≤2 boundary
+      // buckets per priority. The midpoint 0.5·lo + 0.5·hi (exact
+      // halvings, one rounding add; ≡ lo when r1 = r2) equals the
+      // oracle's lo + (hi − lo)·0.5 bit for bit only when hi − lo is
+      // exact, which Sterbenz's lemma gives for lo ≤ hi ≤ 2·lo
+      // (adjacent order statistics of one sign within 2×, not
+      // subnormal) — true for o_totalprice. The decimal re-sums are
+      // exact (only the type widens), so the rewrite is oracle-checked
+      // against the unchanged single-pass SQL.
       import org.apache.spark.sql.expressions.Window
       val x = col("o_totalprice")
       val xd = Det.dec(x, 2)
       val withB = Tables.orders(s, d)
         .select(col("o_orderpriority"), col("o_totalprice"))
-        .withColumn("b", expr("CAST(o_totalprice AS INT) DIV 64"))
+        .withColumn("b", expr("FLOOR(o_totalprice / 64)"))
       val hist = withB.groupBy(col("o_orderpriority"), col("b"))
         .agg(count(lit(1)).as("cnt"),
           sum(Det.dec(x, 2, 28)).as("sumd"),

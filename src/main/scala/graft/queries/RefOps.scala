@@ -354,31 +354,19 @@ object RefOps {
     * ~n²/2^129, ~10⁻²² at 10¹⁰ rows. (Caveat: Spark's hash functions
     * skip NULL columns, so rows differing only in null placement would
     * collide — benign for the null-free lineitem schema; schemas with
-    * nullable columns should add an isnull-bitmask column to rowCols.)
-    * Two EXCEPT ALL legs — the naive shape — shuffle both
-    * generations twice and carry full rows; this carries digests once.
-    * The engine's digest fast path (Snapshot.verifyContent) still
-    * answers the cheaper "did anything change" question with scalar
-    * aggs only. */
+    * nullable columns should add an isnull-bitmask column to rowCols;
+    * Snapshot.incremental groups on the full row instead.) */
   val incremental: Q = Q(
     "q_ref_incremental",
     (s, d) => {
-      // r19 refinement (guide §2.3 "aggregate before you shuffle",
-      // taken to its algebraic end): both generations come off ONE
-      // scan, so each input row's (+1, prev-digest) and (−1,
-      // cur-digest) contributions are visible TOGETHER map-side — and
-      // a ±1 pair on the SAME digest cancels inside its group sum no
-      // matter what else shares the digest (group d is a sum;
-      // removing a zero-sum pair changes nothing). Unchanged rows
-      // (the mass) therefore never reach the exchange: only deleted
-      // rows (+1) and repriced rows (+1 prev, −1 cur) ship — the r18
-      // shape's 4.49 GB digest shuffle at sf20 (two full-row scan
-      // branches, 240M rows, partial aggregation combining nothing
-      // because digests are unique) drops to the ~27% of rows whose
-      // digest actually changed. n_unchanged folds out of the group
-      // algebra as |cur| − n_inserted, with |cur| a column-pruned
-      // scalar count. A repriced row whose digests coincide cancels
-      // here exactly as its d = 0 group contributed nothing there.
+      // Both generations come off ONE scan, so each input row's (+1,
+      // prev-digest) and (−1, cur-digest) contributions are visible
+      // TOGETHER map-side, and a ±1 pair on the SAME digest cancels
+      // inside its group sum no matter what else shares the digest.
+      // Unchanged rows (the mass) therefore never reach the exchange:
+      // only deleted rows (+1) and repriced rows (+1 prev, −1 cur)
+      // ship. n_unchanged folds out as |cur| − n_inserted, with |cur|
+      // a column-pruned scalar count.
       val prev = Tables.lineitem(s, d)
       val rowCols = prev.columns.toSeq.map(col)
       val curPrice = when(col("l_orderkey") % 13 === 0,
@@ -406,9 +394,10 @@ object RefOps {
       val diff = changed.groupBy(col("h1"), col("h2"))
         .agg(sum(col("w")).as("d"))
         .agg(
-          sum(when(col("d") < 0, -col("d")).otherwise(0L))
+          // an empty diff sums nothing: 0, not NULL
+          coalesce(sum(when(col("d") < 0, -col("d")).otherwise(0L)), lit(0L))
             .cast("long").as("n_inserted"),
-          sum(when(col("d") > 0, col("d")).otherwise(0L))
+          coalesce(sum(when(col("d") > 0, col("d")).otherwise(0L)), lit(0L))
             .cast("long").as("n_deleted"))
       val curCount = prev.where(survives).agg(count(lit(1)).as("n_cur"))
       diff.crossJoin(curCount)

@@ -115,21 +115,24 @@ object ComposedPipeline {
     if (sessions.isEmpty) return false
     if (pointerGenerationIds(s, root).contains(batchId))
       return false // retry of a done batch
-    val changes = sessions.withColumn("op", lit("U"))
-    val merged = latestSnapshotPointer(s, root) match {
-      case Some(prev) => graft.engine.Snapshot.applyChangelog(
-        prev, changes, Seq("user_id", "session_seq"), "op")
-      case None => changes.drop("op")
-    }
-    try {
-      graft.engine.Snapshot.publishPointer(
-        s, merged, root, s"gen_$batchId", publisherStamp)
-      true
-    } catch {
-      // racing retry of the same batch: first attempt's pointer won
-      case _: graft.engine.Snapshot.SnapshotExistsException => false
-    }
+    publishedOnce(graft.engine.Snapshot.publishPointer(s,
+      merged(latestSnapshotPointer(s, root), sessions), root,
+      s"gen_$batchId", publisherStamp))
   }
+
+  /** This batch's closed sessions upserted into the previous
+    * generation — or alone, for the first one. */
+  private def merged(prev: Option[DataFrame], sessions: DataFrame): DataFrame = {
+    val changes = sessions.withColumn("op", lit("U"))
+    prev.fold(changes.drop("op"))(p => graft.engine.Snapshot.applyChangelog(
+      p, changes, Seq("user_id", "session_seq"), "op"))
+  }
+
+  /** Runs `publish`; false when a racing retry of the same batch
+    * committed the generation first. */
+  private def publishedOnce(publish: => Any): Boolean =
+    try { publish; true }
+    catch { case _: graft.engine.Snapshot.SnapshotExistsException => false }
 
   /** Name of the publisher-identity stamp each generation carries (an
     * `extras` file riding [[graft.engine.Snapshot.publishAtomic]]'s
@@ -167,19 +170,8 @@ object ComposedPipeline {
     val dest = s"$root/gen_$batchId"
     if (generationIds(s, root).contains(batchId))
       return false // retry of a done batch
-    val changes = sessions.withColumn("op", lit("U"))
-    val merged = latestSnapshot(s, root) match {
-      case Some(prev) => graft.engine.Snapshot.applyChangelog(
-        prev, changes, Seq("user_id", "session_seq"), "op")
-      case None => changes.drop("op")
-    }
-    try {
-      graft.engine.Snapshot.publishAtomic(s, merged, dest, publisherStamp)
-      true
-    } catch {
-      // racing retry of the same batch: first attempt's rename won
-      case _: graft.engine.Snapshot.SnapshotExistsException => false
-    }
+    publishedOnce(graft.engine.Snapshot.publishAtomic(s,
+      merged(latestSnapshot(s, root), sessions), dest, publisherStamp))
   }
 
   /** [[applyGeneration]]'s SERVING-SHAPE twin (r17 — VERDICT r16 next
@@ -200,20 +192,8 @@ object ComposedPipeline {
     val dest = s"$root/gen_$batchId"
     if (generationIds(s, root).contains(batchId))
       return false // retry of a done batch
-    val changes = sessions.withColumn("op", lit("U"))
-    val merged = latestSnapshot(s, root) match {
-      case Some(prev) => graft.engine.Snapshot.applyChangelog(
-        prev, changes, Seq("user_id", "session_seq"), "op")
-      case None => changes.drop("op")
-    }
-    try {
-      graft.engine.Bucketed.publishGeneration(
-        s, merged, dest, "user_id", buckets)
-      true
-    } catch {
-      // racing retry of the same batch: first attempt's rename won
-      case _: graft.engine.Snapshot.SnapshotExistsException => false
-    }
+    publishedOnce(graft.engine.Bucketed.publishGeneration(s,
+      merged(latestSnapshot(s, root), sessions), dest, "user_id", buckets))
   }
 
   /** The latest generation attached as a bucketed serving table —

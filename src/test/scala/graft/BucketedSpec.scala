@@ -219,6 +219,30 @@ class BucketedSpec extends SparkSpec {
     } finally cleanup(dir)
   }
 
+  test("a relative bucket dir publishes both a layout and a generation") {
+    // relative to the working directory, which the commit rename uses;
+    // saveAsTable alone would resolve it against the warehouse dir
+    val rel = s"target/graft-bkt-rel-${java.util.UUID.randomUUID().toString.take(8)}"
+    spark.conf.set(graft.engine.Bucketed.DirConf, rel)
+    try {
+      val nation = graft.engine.Tables.nation(spark, sf)
+      assert(graft.engine.Bucketed.table(
+        spark, sf, "nation_rel", nation, "n_nationkey").count() == 25)
+      val dest = s"$rel/gen_1"
+      graft.engine.Bucketed.publishGeneration(spark, nation, dest, "n_nationkey", 4)
+      assert(graft.engine.Bucketed.attachGeneration(
+        spark, dest, nation.schema, "n_nationkey", 4).count() == 25)
+      val left = new java.io.File(rel).listFiles().map(_.getName).toSeq
+      assert(left.contains("gen_1") && !left.exists(_.contains("__staging__")),
+        left.toString)
+    } finally {
+      spark.catalog.listTables().collect()
+        .filter(_.name.startsWith("graft_bktgen_"))
+        .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
+      cleanup(java.nio.file.Paths.get(rel))
+    }
+  }
+
   private def withConf[A](kvs: (String, String)*)(body: => A): A = {
     val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }

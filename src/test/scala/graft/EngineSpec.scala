@@ -454,6 +454,122 @@ class SnapshotSpec extends SparkSpec {
     assert(e.code == 2)
   }
 
+  /** Rows read by the tasks of the jobs `body` starts, and the number
+    * of SQL actions that succeeded meanwhile. */
+  private def passes(body: => Unit): (Long, Int) = {
+    import org.apache.spark.scheduler._
+    val key = "graft.spec.passes"
+    val tag = java.util.UUID.randomUUID().toString
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag))
+          e.stageIds.foreach(stages.add(_))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          rows.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val queries = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { actions.incrementAndGet(); () }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(tasks)
+    spark.listenerManager.register(queries)
+    sc.setLocalProperty(key, tag)
+    try body
+    finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.ListenerBusDrain(sc)
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(tasks)
+    }
+    (rows.get, actions.get)
+  }
+
+  private def parquetRows(dir: String, n: Long): org.apache.spark.sql.DataFrame = {
+    spark.range(0, n, 1, 4).selectExpr("id", "CAST(id % 7 AS STRING) AS s")
+      .write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("publishAtomic, publishGeneration and roundTripVerify read the source " +
+      "once and the written files once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_passes_").toString
+    val src = parquetRows(s"$dir/src", 400L)
+    val (published, _) = passes {
+      assert(Snapshot.publishAtomic(spark, src, s"$dir/db_2024_08_01_000000").verified)
+    }
+    assert(published == 2 * 400L,
+      s"publish read $published rows: expected the source once and the staged files once")
+    val (bucketed, _) = passes {
+      graft.engine.Bucketed.publishGeneration(spark, src, s"$dir/gen_1", "id", 4)
+    }
+    assert(bucketed == 2 * 400L,
+      s"bucketed publish read $bucketed rows: expected the source once and the staged files once")
+    val (roundTripped, _) = passes {
+      assert(Snapshot.roundTripVerify(spark, src, s"$dir/rt").verified)
+    }
+    assert(roundTripped == 2 * 400L,
+      s"round trip read $roundTripped rows: expected the source once and the written files once")
+    Snapshot.delete(spark, dir)
+  }
+
+  test("incremental runs a single aggregation that reads each generation once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_passes_").toString
+    val prev = parquetRows(s"$dir/prev", 300L)
+    val cur = parquetRows(s"$dir/cur", 200L)
+    var inc: Snapshot.Incremental = null
+    val (read, actions) = passes { inc = Snapshot.incremental(prev, cur) }
+    assert(inc == Snapshot.Incremental(inserted = 0L, deleted = 100L, unchanged = 200L))
+    assert(actions == 1, s"incremental ran $actions actions")
+    assert(read == 300L + 200L, s"incremental read $read rows")
+    Snapshot.delete(spark, dir)
+  }
+
+  test("a part file lost while the staged write commits is caught: no " +
+      "generation, no staging, the exact missing count") {
+    import java.nio.file.{Files, Paths}
+    ObjectStoreFileSystem.install(spark.sparkContext.hadoopConfiguration)
+    val work = Files.createTempDirectory("graft_lost_part_")
+    val lost = Files.createDirectory(work.resolve("lost"))
+    val dest = s"objstore://$work/db_2024_08_01_000000"
+    val src = spark.range(0, 400, 1, 4).selectExpr("id", "CAST(id % 7 AS STRING) AS s")
+    // the job commit renames each part file into the staging dir; on this
+    // copy-rename store the gate moves the first one away once copied
+    @volatile var renaming: String = null
+    val dropped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    ObjectStoreFileSystem.renameGate = Some(ObjectStoreFileSystem.RenameGate(
+      dstMatch = { d =>
+        val hit = d.contains("__staging__") && !d.contains("_temporary") &&
+          new org.apache.hadoop.fs.Path(d).getName.startsWith("part-")
+        if (hit) renaming = d
+        hit
+      },
+      afterEachFile = _ => if (dropped.compareAndSet(false, true)) {
+        val f = Paths.get(new org.apache.hadoop.fs.Path(renaming).toUri.getPath)
+        Files.move(f, lost.resolve(f.getFileName))
+        ()
+      }))
+    val e =
+      try intercept[IllegalArgumentException] {
+        Snapshot.publishAtomic(spark, src, dest)
+      } finally ObjectStoreFileSystem.renameGate = None
+    assert(dropped.get, "no part file was renamed into staging")
+    val missing = spark.read.parquet(lost.toString).count()
+    assert(missing > 0L && missing < 400L)
+    assert(e.getMessage.contains(s"missing=$missing extra=0"), e.getMessage)
+    assert(!Files.exists(work.resolve("db_2024_08_01_000000")))
+    val left = work.toFile.listFiles().map(_.getName).toSeq
+    assert(!left.exists(_.contains("__staging__")), left.toString)
+    org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
+  }
+
   test("empty snapshot fails with the exit-code-2 analog") {
     import org.apache.spark.sql.functions.lit
     val empty = Tables.nation(spark, sf).where(lit(false))

@@ -87,6 +87,24 @@ object SparkProps extends Properties("spark") {
       }
     }
 
+  // two nullable columns over tiny domains: NULLs and duplicate rows
+  // are common, and an empty frame is one case in four
+  private val cdcFrame = Gen.frequency(
+    1 -> Gen.const(List.empty[(Option[Int], Option[String])]),
+    3 -> Gen.choose(1, 8).flatMap(Gen.listOfN(_,
+      Gen.zip(Gen.option(Gen.choose(0, 2)), Gen.option(Gen.oneOf("a", "b"))))))
+
+  property("incremental equals exceptAll both ways, and |cur| − inserted") =
+    forAll(cdcFrame, cdcFrame, Gen.oneOf(false, true)) { (p, c0, same) =>
+      val prev = p.toDF("k", "v")
+      val cur = (if (same) p else c0).toDF("k", "v")
+      val inc = graft.engine.Snapshot.incremental(prev, cur)
+      val inserted = cur.exceptAll(prev).count()
+      inc.inserted == inserted &&
+        inc.deleted == prev.exceptAll(cur).count() &&
+        inc.unchanged == cur.count() - inserted
+    }
+
   property("zorder64 clusters: interleave round-trips both operands") =
     forAll(Gen.choose(0L, 0xFFFFFFFFL), Gen.choose(0L, 0xFFFFFFFFL)) {
       (a, b) =>

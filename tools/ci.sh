@@ -4,7 +4,9 @@
 # sf0.001 end-to-end Verify smoke (every declared query executes and
 # writes its result parquet; the DuckDB oracle compare is the driver's
 # sf0.01 job, but tools/check_oracle.py runs here too when duckdb is
-# available).
+# available), and with it the benchmark's cdc smoke: extract, publish,
+# round trip, diff, merge and the streaming pipeline, each checked in
+# DuckDB.
 #
 # Usage: tools/ci.sh [testdata-dir]   (default /root/testdata/sf0.001)
 set -euo pipefail
@@ -29,11 +31,17 @@ echo "== ci: $n_out query results written =="
 
 # oracle compare when the driver-side toolchain is present (optional
 # in minimal CI images; the correctness gate proper runs it at sf0.01)
-if python3 -c 'import duckdb, pyarrow' 2>/dev/null; then
+if python3 -c 'import duckdb, pyarrow, pandas' 2>/dev/null; then
   echo "== ci: oracle compare =="
   python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
+  echo "== ci: cdc smoke @ $SF_DIR =="
+  # one workload prints its verdict as JSON and exits 0 either way
+  smoke=$(python3 perfbench/run.py --workload cdc --seconds 0 --data "$SF_DIR" | tail -n 1)
+  echo "$smoke"
+  python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r["correct"] and r["failed"] == 0 else 1)' "$smoke" \
+    || { echo "ci: cdc smoke failed its checks" >&2; exit 1; }
 else
-  echo "== ci: duckdb/pyarrow unavailable — oracle compare skipped =="
+  echo "== ci: duckdb/pyarrow/pandas unavailable — oracle compare and cdc smoke skipped =="
 fi
 
 echo "== ci: PASS =="
