@@ -74,21 +74,13 @@ object Sessions {
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor: Spark's 1m default, overridable for
-      // experiments. An earlier r18 draft globally floored this at 16k
-      // so pair-expansion exchanges (whose WORK is orders of magnitude
-      // above their BYTES) would stay wide — it did win its targets
-      // (q_dedup_fuzzy_name 4.0→1.3 s) but taxed every OTHER
-      // multi-exchange query with 32 near-empty tasks per stage: the
-      // full-schedule A/B measured q_pipeline_curate 6.1→4.0 s and
-      // q_dedup_contain_global 3.4→2.5 s from restoring the default
-      // alone (plans/r18/ab_logs/ab_widen_floor.log, OPTIMIZATION_r18.md). The
-      // session default therefore stays Spark's; operators whose work
-      // is pair-expansion-shaped pin their width EXPLICITLY at the
-      // exchange that needs it (repartition(N, key) is exempt from AQE
-      // coalescing by design) — see DedupOps.fuzzyNamePairs/ngramPairs.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
+      // The AQE coalescing floor stays Spark's 1 MB default: a wider
+      // global floor helps pair-expansion exchanges (whose work is
+      // orders of magnitude above their bytes) but taxes every other
+      // multi-exchange query with near-empty tasks (OPTIMIZATION_r18.md).
+      // Operators of pair-expansion shape pin their width at the
+      // exchange instead (repartition(N, key) is exempt from AQE
+      // coalescing) — see DedupOps.fuzzyNamePairs/ngramPairs.
     val s = (if (master.startsWith("local-cluster"))
       clusterConfig(builder0) else builder0)
       // NOT set here: spark.sql.adaptive.coalescePartitions

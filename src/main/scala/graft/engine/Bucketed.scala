@@ -52,11 +52,6 @@ object Bucketed {
   /** Bucket count for newly published layouts. */
   val NConf = "spark.graft.bucket.n"
 
-  private def digest(parts: String): String =
-    java.security.MessageDigest.getInstance("SHA-1")
-      .digest(parts.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-
   /** The bucketed copy of `df`, clustered on `key` — published on
     * first use, registered from the published files on a fresh
     * catalog, returned from the catalog otherwise. The identifier is
@@ -64,14 +59,10 @@ object Bucketed {
     * different scale factors and layouts coexist, and neither a schema
     * change nor an in-place source change can ever reuse a stale copy.
     *
-    * Crash-safe publish: the bucketBy write lands in a STAGING
-    * directory under a throwaway catalog ident, then one atomic
-    * rename commits it to the final path — a visible path is always
-    * a complete layout (a publish killed mid-write leaves only
-    * staging garbage, never a poisoned final dir whose orphan part
-    * files a retry would merge with). Concurrent first-publishers
-    * race on the commit rename: exactly one wins, losers read the
-    * winner's identical copy. Catalog registration is a single
+    * The bucketBy write is committed by [[PublishOnce]] under a
+    * throwaway catalog ident; concurrent first-publishers that lose
+    * the commit read the winner's identical copy. Catalog
+    * registration is a single
     * `CREATE TABLE … CLUSTERED BY … SORTED BY … LOCATION` over the
     * committed path — metadata only, the same statement whether this
     * session published or an earlier one did. */
@@ -106,14 +97,13 @@ object Bucketed {
     // the key and every later session silently served the stale copy
     // forever. Changed source → new ident → fresh layout; the old dir
     // is retention's job ([[expire]]), not the read path's.
-    val ident = s"graft_bkt_${name}_" + digest(
+    val ident = s"graft_bkt_${name}_" + SourceId.digest(
       s"$sfDir|$name|$key|$n|${df.schema.toDDL}|${SourceId.fingerprint(s, df)}")
-    val (fs, pathP) = qualified(s, s"$root/$ident")
-    val path = pathP.toString
+    val path = PublishOnce.qualify(s, s"$root/$ident")._2.toString
     if (!s.catalog.tableExists(ident)) {
       // pay the layout shuffle once; losing the publish race is fine —
       // the winner's copy is identical
-      if (!fs.exists(pathP)) commitStaged(s, fs, pathP, df, key, n, verify = false)
+      commitStaged(s, path, df, key, n, verify = false)
       // attach the bucket spec to the committed files (metadata only)
       s.sql(s"""CREATE TABLE $ident (${df.schema.toDDL})
         USING PARQUET CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS
@@ -127,8 +117,8 @@ object Bucketed {
 
   /** Publish `df` at `dest` as an IMMUTABLE BUCKETED GENERATION — the
     * serving-shape twin of [[graft.engine.Snapshot.publishAtomic]]:
-    * same create-if-absent atomic-rename commit, verification and
-    * immutability contract, but the files are written
+    * same [[PublishOnce]] commit, verification and immutability
+    * contract, but the files are written
     * `bucketBy(n, key).sortBy(key)` with one file per bucket, so a
     * consumer that attaches the generation ([[attachGeneration]]) gets
     * sort-merge joins on `key` with ZERO exchange and ZERO sort. This
@@ -145,67 +135,42 @@ object Bucketed {
       s: SparkSession, df: DataFrame, dest: String,
       key: String, n: Int): Unit = {
     require(n > 0, s"bucket count must be positive: $n")
-    val (fs, destPath) = qualified(s, dest)
-    if (fs.exists(destPath)) throw new Snapshot.SnapshotExistsException(
-      s"generation $dest already exists — snapshots are immutable")
-    if (!commitStaged(s, fs, destPath, df, key, n, verify = true))
+    if (!commitStaged(s, dest, df, key, n, verify = true))
       throw new Snapshot.SnapshotExistsException(
-        s"generation $dest already exists — lost the publish race; " +
-          "snapshots are immutable")
+        s"generation $dest already exists — snapshots are immutable")
   }
 
-  /** Write `df` bucketed on `key` beside `dest` and commit it with one
-    * create-if-absent rename; false when `dest` won the race first.
+  /** Write `df` bucketed on `key` and commit it to `dest` through
+    * [[PublishOnce]]; false when `dest` existed or won the race first.
     * The write repartitions on the bucket key, so each task holds whole
     * buckets → one file per bucket, the condition under which Spark
     * trusts the written sortBy order and drops the per-task sort below
     * a sort-merge join (zero exchange AND zero sort). With `verify`,
     * the write is Snapshot.publishAtomic's: the manifest rides the
     * commit and the staged content is verified BEFORE it can become
-    * visible. Staging and its throwaway catalog ident are removed on
-    * every exit path. */
+    * visible. `saveAsTable` needs a catalog ident; the throwaway one
+    * is dropped as soon as the write returns or fails. */
   private def commitStaged(
-      s: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      dest: org.apache.hadoop.fs.Path, df: DataFrame, key: String, n: Int,
-      verify: Boolean): Boolean = {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new org.apache.hadoop.fs.Path(s"$dest.__staging__$tag")
-    val tmpIdent = s"graft_bkt_stg_$tag"
-    try {
-      val write = (d: DataFrame) => d
-        .repartition(n, org.apache.spark.sql.functions.col(key))
-        .write.format("parquet")
-        .bucketBy(n, key)
-        .sortBy(key)
-        .option("path", staging.toString)
-        .saveAsTable(tmpIdent)
+      s: SparkSession, dest: String, df: => DataFrame, key: String, n: Int,
+      verify: Boolean): Boolean =
+    PublishOnce(s, dest) { staging =>
+      val write = (d: DataFrame) => {
+        val tmpIdent = s"graft_bkt_stg_${java.util.UUID.randomUUID().toString.take(8)}"
+        try d.repartition(n, org.apache.spark.sql.functions.col(key))
+          .write.format("parquet")
+          .bucketBy(n, key)
+          .sortBy(key)
+          .option("path", staging.toString)
+          .saveAsTable(tmpIdent)
+        finally s.sql(s"DROP TABLE IF EXISTS $tmpIdent") // external: keeps files
+      }
       if (!verify) write(df)
       else {
         val rt = Snapshot.writeVerified(s, df, staging.toString, manifest = true)(write)
         require(rt.verified, s"staged bucketed generation failed verification: " +
           s"missing=${rt.missing} extra=${rt.extra}")
       }
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, s.sparkContext.hadoopConfiguration)
-      try { fc.rename(staging, dest, org.apache.hadoop.fs.Options.Rename.NONE); true }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $tmpIdent") // external: keeps files
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
-  }
-
-  /** `p` made absolute against its filesystem's working directory.
-    * `saveAsTable` and `CREATE TABLE … LOCATION` resolve a relative
-    * path against the warehouse directory while `FileContext.rename`
-    * resolves it against the working directory, so every path handed
-    * to them is qualified first, here. */
-  private def qualified(s: SparkSession, p: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    (fs, fs.makeQualified(path))
-  }
+    }.isDefined
 
   /** Attach a generation published by [[publishGeneration]] as a
     * bucketed catalog table (metadata only — zero data movement) and
@@ -220,11 +185,11 @@ object Bucketed {
     // honor the written per-bucket order at scan time (see [[table]];
     // deliberately session-global, documented in SCALE.md)
     s.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    val ident = "graft_bktgen_" + digest(s"$dest|$key|$n")
+    val ident = "graft_bktgen_" + SourceId.digest(s"$dest|$key|$n")
     if (!s.catalog.tableExists(ident))
       s.sql(s"""CREATE TABLE $ident (${schema.toDDL})
         USING PARQUET CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS
-        LOCATION '${qualified(s, dest)._2}'""")
+        LOCATION '${PublishOnce.qualify(s, dest)._2}'""")
     s.table(ident)
   }
 

@@ -93,8 +93,8 @@ object JdbcExtract {
 
   /** Generation dir name for the PK range (`from`, `to`] published by
     * one incremental fold: `gen_<from+1>_<to>` (inclusive bounds in
-    * the name). EXACT-match parsing only — publishAtomic stages under
-    * `gen_…​.__staging__<uuid>`, which also starts with the prefix, so
+    * the name). EXACT-match parsing only — publishAtomic's
+    * [[PublishOnce]] staging dir also starts with the prefix, so
     * a prefix test would let a crashed publish's leftover staging dir
     * advance the watermark past data that never became visible. */
   private val GenRe = "^gen_(-?\\d+)_(-?\\d+)$".r

@@ -2,27 +2,23 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared use-tracking + retention for publish-once layout roots
-  * ([[Bucketed]], [[Partitioned]]).
+/** Use tracking and the one retention sweep for publish-once roots:
+  * re-derivable layouts ([[Bucketed]], [[Partitioned]]) and snapshot
+  * generations ([[Snapshot.expireGenerations]],
+  * [[Snapshot.expirePointer]]).
   *
-  * The r13 review found the footgun this closes: expire() grouped
-  * layouts by logical NAME only and kept the `keep` most recently
-  * modified — but the identity docstrings guarantee that different
-  * scale factors / keys / bucket counts of the same table name coexist
-  * as independently ACTIVE layouts, so maintenance with the default
-  * keep=1 deleted all but one and alternating sf0.1/sf1 sessions (or
-  * two keys) thrashed full rebuilds.
-  *
-  * Fix: every attach TOUCHES a hidden `_graft_last_used` marker inside
-  * the layout dir (underscore-prefixed → invisible to Spark's file
-  * listing), so "most recently used" is observable rather than proxied
-  * by publish mtime; and expire deletes a beyond-keep layout only when
-  * it has been IDLE for a grace period (default 7 days) — an abandoned
-  * layout's marker stops advancing the moment its source changes, while
-  * a second active identity keeps renewing its own. Layouts published
-  * before the marker existed grandfather to the dir's mtime. All
-  * layouts here are re-derivable caches, so the worst case of any
-  * clock lie is a rebuild, never data loss. */
+  * Every attach TOUCHES a hidden `_graft_last_used` marker inside the
+  * dir (underscore-prefixed, so invisible to Spark's file listing), so
+  * "most recently used" is observed rather than proxied by publish
+  * mtime; dirs published before the marker existed fall back to the
+  * dir's mtime. Different scale factors, keys or bucket counts of one
+  * table name coexist as independently ACTIVE layouts, so a count
+  * alone cannot tell "superseded" from "another deployment's copy":
+  * retention deletes a beyond-keep dir only when it has been idle
+  * since `minIdleMs` before the sweep started — an abandoned layout's
+  * marker stops advancing, an active one keeps renewing it. The
+  * horizon is fixed when the sweep starts, and a re-check just before
+  * each delete lets an attach made during the sweep win ([[sweep]]). */
 private[graft] object LayoutUse {
   val LastUsedFile = "_graft_last_used"
 
@@ -45,9 +41,51 @@ private[graft] object LayoutUse {
     else st.getModificationTime
   }
 
-  /** Retention sweep over one layout root: per logical name (extracted
-    * by `nameOf`), retain the `keep` most recently USED layouts
-    * unconditionally, and delete the rest only once idle ≥ `minIdleMs`.
+  /** The one retention sweep, over candidates the caller has already
+    * ranked expirable: `(name, listing status of the dir whose marker
+    * records its use)`. The idle horizon is `sweepStart − minIdleMs`,
+    * fixed when the sweep starts, before `candidates` is listed. Per
+    * candidate, in order:
+    *  1. skip it if it was used after the horizon (grace period);
+    *  2. call `onExpire(name)` (catalog unregistration; also the seam
+    *     the expiry specs inject a racing attach through);
+    *  3. ATTACH-WINS: re-read the marker and stand down if it moved
+    *     past the horizon, or if the dir is already gone;
+    *  4. delete through `delete`, which returns false when there was
+    *     nothing left to delete.
+    * Because the horizon is fixed, even `minIdleMs = 0` lets an attach
+    * made during the sweep win. `onExpire` runs before the re-check on
+    * purpose: it only drops metadata that the next attach re-creates
+    * over the intact files, whereas a delete under a live attach
+    * destroys data a reader holds a listing of. The residual window
+    * between the re-check and the delete is why in-flight readers also
+    * get the loud-failure guarantee (session default
+    * `ignoreMissingFiles=false`: a vanished file fails the scan, never
+    * silently returns empty; the expiry specs pin both halves).
+    * @return the names this sweep deleted itself, in candidate order */
+  def sweep(
+      fs: org.apache.hadoop.fs.FileSystem, minIdleMs: Long,
+      onExpire: String => Unit,
+      candidates: => Seq[(String, org.apache.hadoop.fs.FileStatus)])(
+      delete: (String, org.apache.hadoop.fs.Path) => Boolean): Seq[String] = {
+    require(minIdleMs >= 0, s"negative idle grace: $minIdleMs")
+    val horizon = System.currentTimeMillis() - minIdleMs
+    candidates.filter { case (_, st) => lastUsed(fs, st) <= horizon }
+      .flatMap { case (name, st) =>
+        onExpire(name)
+        val fresh =
+          try Some(fs.getFileStatus(st.getPath))
+          catch { case _: java.io.FileNotFoundException => None }
+        if (fresh.exists(lastUsed(fs, _) <= horizon) && delete(name, st.getPath))
+          Some(name)
+        else None
+      }
+  }
+
+  /** Retention over one layout root: per logical name (extracted by
+    * `nameOf`), retain the `keep` most recently USED layouts
+    * unconditionally, and [[sweep]] the rest, deleting those idle
+    * since `minIdleMs` before the sweep started.
     * @return deleted directory names */
   def expireRoot(
       s: SparkSession, root: String,
@@ -55,52 +93,18 @@ private[graft] object LayoutUse {
       keep: Int, minIdleMs: Long,
       onDelete: String => Unit): Seq[String] = {
     require(keep >= 1, "retention must keep at least one layout")
-    require(minIdleMs >= 0, s"negative idle grace: $minIdleMs")
     val rootP = new org.apache.hadoop.fs.Path(root)
     val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootP)) return Nil
-    val now = System.currentTimeMillis()
-    fs.listStatus(rootP).toSeq
-      .filter(st => st.isDirectory &&
-        !st.getPath.getName.contains(".__staging__"))
-      .flatMap(st => nameOf(st.getPath.getName).map(_ -> st))
-      .groupBy(_._1)
-      .toSeq.flatMap { case (_, named) =>
-        named.map(_._2).sortBy(st => -lastUsed(fs, st)).drop(keep)
-      }
-      .filter(st => now - lastUsed(fs, st) >= minIdleMs)
-      .flatMap { st =>
-        onDelete(st.getPath.getName)
-        // ATTACH-WINS re-check (r15): between the sweep's listing and
-        // this delete, an attach may have touched the marker — the
-        // classic TOCTOU window. Re-read the marker's mtime now and
-        // stand down if it advanced past the sweep's idle horizon.
-        // Deliberately AFTER onDelete: onDelete only drops catalog
-        // entries, which the next attach re-creates over the intact
-        // files (metadata-only heal), whereas a delete under a live
-        // attach destroys data a reader holds a listing of. The
-        // residual window between this getFileStatus and the delete
-        // syscall is why in-flight readers ALSO get the loud-failure
-        // guarantee (session default ignoreMissingFiles=false — a
-        // vanished file fails the scan, never silently returns
-        // empty; LayoutExpirySpec pins both halves).
-        val freshStatus =
-          try Some(fs.getFileStatus(st.getPath))
-          catch { case _: java.io.FileNotFoundException => None }
-        freshStatus match {
-          // Dir already gone: some other actor removed it between the
-          // listing and the re-check — nothing for THIS sweep to
-          // delete, so don't claim it in the returned deleted-list
-          // (ADVICE r15: forall made a vanished dir read as "deleted
-          // by us" even though fs.delete would have been a no-op).
-          case None => None
-          case Some(fresh)
-            if System.currentTimeMillis() - lastUsed(fs, fresh) < minIdleMs =>
-            None // attach won the race — stand down
-          case Some(_) =>
-            fs.delete(st.getPath, true)
-            Some(st.getPath.getName)
+    sweep(fs, minIdleMs, onDelete,
+      fs.listStatus(rootP).toSeq
+        .filter(st => st.isDirectory && !PublishOnce.isStaging(st.getPath.getName))
+        .flatMap(st => nameOf(st.getPath.getName).map(_ -> st))
+        .groupBy(_._1)
+        .toSeq.flatMap { case (_, named) =>
+          named.map(_._2).sortBy(st => -lastUsed(fs, st)).drop(keep)
         }
-      }
+        .map(st => st.getPath.getName -> st))(
+      (_, dir) => fs.delete(dir, true))
   }
 }

@@ -38,40 +38,6 @@ object Partitioned {
   /** Root directory for published partitioned layouts. */
   val DirConf = "spark.graft.part.dir"
 
-  private def digest(parts: String): String =
-    java.security.MessageDigest.getInstance("SHA-1")
-      .digest(parts.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-
-  /** Crash-safe publish-once: write into a staging dir, commit with
-    * one atomic rename — a visible path is always a complete layout
-    * (a killed publish leaves only staging garbage, never a poisoned
-    * final dir a retry would fail on or merge with). Racing
-    * publishers: exactly one rename wins, losers read the winner's
-    * identical copy. */
-  private def publishOnce(
-      s: SparkSession, path: String)(
-      write: String => Unit): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val pathP = new org.apache.hadoop.fs.Path(path)
-    val fs = pathP.getFileSystem(conf)
-    if (fs.exists(pathP)) return
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$path.__staging__${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      write(staging.toString)
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, conf)
-      try fc.rename(staging, pathP,
-        org.apache.hadoop.fs.Options.Rename.NONE)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      }
-    } finally {
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
-  }
-
   /** A publish-once UNPARTITIONED companion artifact (e.g. the daily
     * rollup a partition-pruning dim filters) — same discipline as
     * [[table]] but no layout column. Keeping the dim a plain
@@ -89,16 +55,17 @@ object Partitioned {
       df: => DataFrame): DataFrame = {
     val root = s.conf.getOption(DirConf).getOrElse(
       sys.props("java.io.tmpdir").stripSuffix("/") + "/graft_parts")
-    val path = s"$root/graft_art_${name}_" +
-      digest(s"$sfDir|$name|${df.schema.toDDL}|${SourceId.fingerprint(s, df)}")
-    publishOnce(s, path)(df.write.parquet(_))
+    val path = s"$root/graft_art_${name}_" + SourceId.digest(
+      s"$sfDir|$name|${df.schema.toDDL}|${SourceId.fingerprint(s, df)}")
+    PublishOnce(s, path)(staging => df.write.parquet(staging.toString))
     LayoutUse.touch(s, path)
     s.read.parquet(path)
   }
 
   /** The partitioned copy of `df`, laid out by `partCol` — published on
-    * first use (keyed by (sfDir, name, partCol), so scale factors
-    * coexist), re-read from the published files afterwards. */
+    * first use through [[PublishOnce]] (keyed by (sfDir, name, partCol),
+    * so scale factors coexist), re-read from the published files
+    * afterwards. */
   def table(
       s: SparkSession, sfDir: String, name: String,
       df: => DataFrame, partCol: String): DataFrame = {
@@ -109,15 +76,14 @@ object Partitioned {
     // silently reuse a stale published copy (r12 verdict wrong #2 —
     // see [[SourceId]]; a changed source abandons the old dir, and
     // [[expire]] reclaims abandoned layouts)
-    val path = s"$root/graft_prt_${name}_" +
-      digest(s"$sfDir|$name|$partCol|${df.schema.toDDL}|${
-        SourceId.fingerprint(s, df)}")
+    val path = s"$root/graft_prt_${name}_" + SourceId.digest(
+      s"$sfDir|$name|$partCol|${df.schema.toDDL}|${SourceId.fingerprint(s, df)}")
     // cluster rows by the partition key first so each key value is
     // written by exactly one task → one file per partition dir (the
     // same small-file discipline as Bucketed's one-file-per-bucket)
-    publishOnce(s, path)(staging =>
+    PublishOnce(s, path)(staging =>
       df.repartition(org.apache.spark.sql.functions.col(partCol))
-        .write.partitionBy(partCol).parquet(staging))
+        .write.partitionBy(partCol).parquet(staging.toString))
     LayoutUse.touch(s, path)
     s.read.parquet(path)
   }

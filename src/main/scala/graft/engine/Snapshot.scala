@@ -121,30 +121,21 @@ object Snapshot {
     * to one database when several share the root (the layout
     * `readAsOf`'s dbName parameter implies).
     *
-    * CONCURRENT-USE DISCIPLINE (r16 — the LayoutUse protocol, ported:
-    * same TOCTOU, older component, previously weaker guarantee).
     * Time-travel readers ([[readAsOf]], [[readEvolved]],
     * [[generationsInRange]]) TOUCH a hidden use marker inside the
-    * generation they resolve; retention honors it three ways:
-    *  1. a beyond-keep generation used within `minIdleMs` of the sweep
-    *     is skipped outright (grace period);
-    *  2. attach-wins: the marker is RE-READ immediately before the
-    *     delete — a reader that attached between the listing and the
-    *     delete makes the sweep stand down;
-    *  3. a reader that resolved its listing before the delete still
-    *     fails LOUDLY, never silently empty (session default
-    *     `ignoreMissingFiles=false`), and the returned deleted-list
-    *     names only dirs THIS sweep actually removed.
-    * `minIdleMs` defaults to 0 — pure count-based retention, the
-    * pre-r16 contract (time travel is explicitly bounded by retention)
-    * — but even at 0 the re-check protects a reader attaching
-    * mid-sweep. Production roots with active time-travel readers
+    * generation they resolve, and the beyond-keep generations go
+    * through [[LayoutUse.sweep]]: one used within `minIdleMs` before
+    * the sweep started is kept, and an attach made during the sweep
+    * makes it stand down. A reader that resolved its listing before
+    * the delete fails LOUDLY, never silently empty (session default
+    * `ignoreMissingFiles=false`). `minIdleMs` defaults to 0 — pure
+    * count-based retention (time travel is explicitly bounded by
+    * retention). Production roots with active time-travel readers
     * should pass a real grace period.
     *
-    * @param onExpire metadata hook invoked per candidate AFTER it is
-    *   ranked expirable, BEFORE the attach-wins re-check (catalog
-    *   unregistration goes here; also the race-injection seam the spec
-    *   uses, mirroring LayoutUse.expireRoot's onDelete)
+    * @param onExpire metadata hook invoked per candidate after it is
+    *   ranked expirable, before the attach-wins re-check (catalog
+    *   unregistration goes here)
     * @return names of the generations deleted (oldest first) */
   def expireGenerations(
       spark: SparkSession, root: String, keep: Int,
@@ -152,33 +143,16 @@ object Snapshot {
       minIdleMs: Long = 0L,
       onExpire: String => Unit = _ => ()): Seq[String] = {
     require(keep >= 1, "retention must keep at least one generation")
-    require(minIdleMs >= 0, s"negative idle grace: $minIdleMs")
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootPath)) return Nil
-    val sweepStart = System.currentTimeMillis()
-    val horizon = sweepStart - minIdleMs
-    val gens = fs.listStatus(rootPath)
-      .filter(_.isDirectory)
-      .filter(st => isGeneration(st.getPath.getName, dbName))
-      .sortBy(_.getPath.getName)
-    gens.dropRight(keep).toSeq.flatMap { st =>
-      if (LayoutUse.lastUsed(fs, st) > horizon) None // used within grace
-      else {
-        onExpire(st.getPath.getName)
-        val fresh =
-          try Some(fs.getFileStatus(st.getPath))
-          catch { case _: java.io.FileNotFoundException => None }
-        fresh match {
-          case None => None // gone already — not this sweep's delete
-          case Some(f) if LayoutUse.lastUsed(fs, f) > horizon =>
-            None // attach won the race — stand down
-          case Some(_) =>
-            fs.delete(st.getPath, true)
-            Some(st.getPath.getName)
-        }
-      }
-    }
+    LayoutUse.sweep(fs, minIdleMs, onExpire,
+      fs.listStatus(rootPath).toSeq
+        .filter(st => st.isDirectory && isGeneration(st.getPath.getName, dbName))
+        .sortBy(_.getPath.getName)
+        .dropRight(keep)
+        .map(st => st.getPath.getName -> st))(
+      (_, dir) => fs.delete(dir, true))
   }
 
   /** Time travel: read the latest generation under `root` whose
@@ -209,12 +183,11 @@ object Snapshot {
     spark.read.parquet(s"$root/${gens.last}")
   }
 
-  /** Atomic publish: write to a staging sibling, verify content
-    * equality against the source, then ONE filesystem rename makes the
-    * generation visible — readers never observe a partial or
-    * unverified snapshot. The engine form of the reference's
-    * temp-dump → upload → cleanup flow (backup.sh:209-220,370), with
-    * verification moved BEFORE visibility instead of after.
+  /** Atomic publish: a verified write committed by [[PublishOnce]], so
+    * readers never observe a partial or unverified snapshot. The
+    * engine form of the reference's temp-dump → upload → cleanup flow
+    * (backup.sh:209-220,370), with verification moved BEFORE
+    * visibility instead of after.
     *
     * Verification ([[writeVerified]]) checks the staged files against
     * the rows the write consumed, observed on its own pass. That
@@ -223,59 +196,25 @@ object Snapshot {
     * that changes between two reads (a live JDBC table) therefore no
     * longer fails the publish because of the verifier's re-read.
     *
-    * The staging name deliberately does not match the `snapshotName`
-    * layout, so retention ([[expireGenerations]]) and time travel
-    * ([[readAsOf]]) never see half-written data even mid-publish.
-    * Generations are immutable: publishing over an existing dest
-    * fails instead of silently replacing history. Staging is removed
-    * on every exit path.
+    * Retention ([[expireGenerations]]) and time travel ([[readAsOf]])
+    * only see names of the `snapshotName` layout, which staging names
+    * never match. Generations are immutable: publishing over an
+    * existing dest, or losing a concurrent publish of the same dest,
+    * throws SnapshotExistsException with the winner's generation
+    * intact (SnapshotSpec pins the race).
     *
-    * CONCURRENT publishers of the same generation: each stages under a
-    * unique name (no staging collision), and the commit is a
-    * create-if-absent rename — `FileContext.rename(Rename.NONE)`,
-    * which fails when dest exists. The plain `FileSystem.rename` the
-    * r5 version used is NOT that: onto an existing dest DIRECTORY it
-    * moves the staging dir INSIDE it, silently corrupting both
-    * publishers' output. Exactly one racer wins; the loser gets
-    * SnapshotExistsException with the winner's generation intact
-    * (SnapshotSpec pins the race).
-    *
-    * Rename is atomic on HDFS/local; on S3 it is a copy. For stores
-    * without atomic rename use the RENAME-FREE mode, [[publishPointer]]
-    * — same contract, committed by create-if-absent of a pointer file
-    * instead of a rename (PointerPublishSpec proves both the rename
-    * protocol corrupting on a copy-rename store and the pointer
-    * protocol staying exactly-one-winner there). */
+    * The commit is a rename: atomic on HDFS/local, a copy on S3. For
+    * stores without atomic rename use the RENAME-FREE mode,
+    * [[publishPointer]] — same contract, committed by create-if-absent
+    * of a pointer file instead of a rename (PointerPublishSpec proves
+    * both the rename protocol corrupting on a copy-rename store and
+    * the pointer protocol staying exactly-one-winner there). */
   def publishAtomic(
       spark: SparkSession, df: DataFrame, dest: String,
-      extras: Map[String, String] = Map.empty): RoundTrip = {
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = destPath.getFileSystem(conf)
-    if (fs.exists(destPath)) throw new SnapshotExistsException(
-      s"generation $dest already exists — snapshots are immutable")
-    val staging = new org.apache.hadoop.fs.Path(
-      dest + ".__staging__" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      val rt = stage(spark, df, fs, staging, extras)
-      // Bind the context to the RESOLVED filesystem's URI: a local
-      // dest path has no scheme, and toUri would leave the context on
-      // whatever the default FS is rather than the one `fs` resolved.
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, conf)
-      try fc.rename(staging, destPath,
-        org.apache.hadoop.fs.Options.Rename.NONE)
-      catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new SnapshotExistsException(
-            s"generation $dest already exists — lost the publish race; " +
-              "snapshots are immutable", e)
-      }
-      rt
-    } finally {
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
-  }
+      extras: Map[String, String] = Map.empty): RoundTrip =
+    PublishOnce(spark, dest)(stage(spark, df, _, extras)).getOrElse(
+      throw new SnapshotExistsException(
+        s"generation $dest already exists — snapshots are immutable"))
 
   /** The uncommitted half of both publish modes: a verified write of
     * `df` into `dir`, then the caller's `extras` beside the manifest,
@@ -283,7 +222,7 @@ object Snapshot {
     * unit. Extra names must start with '_' or '.' so scans ignore
     * them. Throws unless verified. */
   private def stage(
-      spark: SparkSession, df: DataFrame, fs: org.apache.hadoop.fs.FileSystem,
+      spark: SparkSession, df: DataFrame,
       dir: org.apache.hadoop.fs.Path, extras: Map[String, String]): RoundTrip = {
     extras.keys.foreach(name =>
       require(name.startsWith("_") || name.startsWith("."),
@@ -292,6 +231,7 @@ object Snapshot {
       _.write.mode("overwrite").parquet(dir.toString))
     require(rt.verified,
       s"staged snapshot failed verification: missing=${rt.missing} extra=${rt.extra}")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     extras.foreach { case (name, body) =>
       val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), true)
       try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -302,8 +242,7 @@ object Snapshot {
 
   /** A publisher lost to an existing generation — either a pre-flight
     * check or the create-if-absent commit (rename mode: the
-    * `FileContext.rename(NONE)`; pointer mode: the pointer-file
-    * create). */
+    * [[PublishOnce]] rename; pointer mode: the pointer-file create). */
   final class SnapshotExistsException(msg: String, cause: Throwable = null)
       extends IllegalStateException(msg, cause)
 
@@ -392,7 +331,7 @@ object Snapshot {
     val obj = new org.apache.hadoop.fs.Path(s"$root/$ObjectsDir/$objName")
     var committed = false
     try {
-      val rt = stage(spark, df, fs, obj, extras)
+      val rt = stage(spark, df, obj, extras)
       val body = s"""{"object":"$objName","rows":${rt.restoredRows}}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       try {
@@ -485,32 +424,26 @@ object Snapshot {
     * `keep` newest. UNPUBLISH FIRST — the pointer file is deleted
     * before the object dir, so the crash window leaves an orphan
     * object ([[gcOrphanObjects]]'s job), never a dangling pointer
-    * (which [[resolvePointer]] treats as corruption). Honors the
-    * LayoutUse grace/attach-wins discipline of [[expireGenerations]]
-    * on the object dir. */
+    * (which [[resolvePointer]] treats as corruption). The object dir's
+    * use marker, which [[resolvePointer]] touches, goes through the
+    * same [[LayoutUse.sweep]] as [[expireGenerations]], with the same
+    * `onExpire` hook. */
   def expirePointer(
       spark: SparkSession, root: String, keep: Int,
-      dbName: Option[String] = None, minIdleMs: Long = 0L): Seq[String] = {
+      dbName: Option[String] = None, minIdleMs: Long = 0L,
+      onExpire: String => Unit = _ => ()): Seq[String] = {
     require(keep >= 1, "retention must keep at least one generation")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val horizon = System.currentTimeMillis() - minIdleMs
-    val gens = pointerGenerations(spark, root, dbName)
-    gens.dropRight(keep).flatMap { gen =>
-      val ptr = pointerPath(root, gen)
-      val fs = ptr.getFileSystem(conf)
-      resolveNoTouch(spark, root, gen) match {
-        case None => None
-        case Some(obj) =>
-          val objPath = new org.apache.hadoop.fs.Path(obj)
-          val st = fs.getFileStatus(objPath)
-          if (LayoutUse.lastUsed(fs, st) > horizon) None // used in grace
-          else {
-            fs.delete(ptr, false) // unpublish: readers stop resolving
-            fs.delete(objPath, true)
-            Some(gen)
-          }
-      }
-    }
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LayoutUse.sweep(fs, minIdleMs, onExpire,
+      pointerGenerations(spark, root, dbName).dropRight(keep).flatMap(gen =>
+        resolveNoTouch(spark, root, gen).map(obj =>
+          gen -> fs.getFileStatus(new org.apache.hadoop.fs.Path(obj)))))(
+      (gen, obj) => {
+        val unpublished = fs.delete(pointerPath(root, gen), false)
+        fs.delete(obj, true)
+        unpublished
+      })
   }
 
   /** Reclaim unreferenced object dirs under a pointer-mode root —

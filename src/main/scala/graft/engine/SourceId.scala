@@ -63,10 +63,14 @@ object SourceId {
   /** 12-hex digest of [[entries]]; `"nofiles"` for non-file sources. */
   def fingerprint(s: SparkSession, df: DataFrame): String = {
     val es = entries(s, df)
-    if (es.isEmpty) "nofiles"
-    else
-      java.security.MessageDigest.getInstance("SHA-1")
-        .digest(es.mkString("\n").getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
+    if (es.isEmpty) "nofiles" else digest(es.mkString("\n"))
   }
+
+  /** The identity digest in every publish-once name: the first 12 hex
+    * digits of the SHA-1 of `parts`' UTF-8 bytes. Published layouts are
+    * found again by name, so this must stay byte-identical. */
+  def digest(parts: String): String =
+    java.security.MessageDigest.getInstance("SHA-1")
+      .digest(parts.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
 }

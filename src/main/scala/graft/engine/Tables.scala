@@ -59,13 +59,12 @@ object Tables {
     *
     * Keys must be present and stable (deterministic under retry —
     * guide §2.5's round-robin caveat is exactly what keyed hashing
-    * avoids). Threshold conf-overridable per deployment. */
+    * avoids). */
   def widen(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    val floor = spark.conf.getOption("spark.graft.scan.widen.minSplits")
-      .flatMap(_.toIntOption).getOrElse(math.max(1, target / 4))
-    if (df.rdd.getNumPartitions < floor) df.repartition(target, keys: _*)
+    if (df.rdd.getNumPartitions < math.max(1, target / 4))
+      df.repartition(target, keys: _*)
     else df
   }
 

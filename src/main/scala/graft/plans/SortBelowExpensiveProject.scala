@@ -32,16 +32,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * NETWORK bytes: an ORDER BY over a wide text column at 100 TB can
   * make exchange volume the dominant term, and the swap can regress —
   * there is no logical-plan stat that reliably prices a string column
-  * (defaultSize treats all strings alike), so rather than a fake width
-  * gate the rule carries a kill switch:
-  * `spark.graft.sortBelowProject.enabled=false` restores the planner's
-  * default shape for wide-payload clusters. SCALE.md rows the caveat.
+  * (defaultSize treats all strings alike), so the rule has no width
+  * gate; SCALE.md records the caveat.
   *
   * Registered via GraftExtensions.injectOptimizerRule.
   */
 object SortBelowExpensiveProject extends Rule[LogicalPlan] {
-
-  private val EnabledConf = "spark.graft.sortBelowProject.enabled"
 
   /** Expensive = per-row cost comparable to or above a shuffle write:
     * regex evaluation, interpreted higher-order functions, Scala UDFs,
@@ -72,8 +68,7 @@ object SortBelowExpensiveProject extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(EnabledConf, "true").toBoolean) plan
-    else plan.transform {
+    plan.transform {
       case Sort(order, true, Project(exprs, child), hint)
           if exprs.exists(expensive)
             && exprs.forall(_.deterministic)

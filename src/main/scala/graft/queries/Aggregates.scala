@@ -118,18 +118,16 @@ object Aggregates {
         .select(col("lang"),
           explode(split(lower(col("text")), " ")).as("token"))
         .where(col("token") =!= "")
-      // localCheckpoint (r19): `per` (≤ |langs| rows) feeds BOTH union
-      // branches below, and Catalyst plans each branch as its own full
+      // cut: `per` (≤ |langs| rows) feeds BOTH union branches below,
+      // and Catalyst plans each branch as its own full
       // scan→tokenize→sketch subtree — exchange reuse does not fire
       // across them (sf20 qprofile: two corpus passes of 110 s + 46 s
       // summed executor time for one 6-row aggregate). Materializing
-      // the 6-row result runs the corpus pass ONCE; the checkpoint is
-      // inside the timed query body and recomputed every invocation
-      // (the q_dedup_components in-plan precedent).
-      val per = tok.groupBy(col("lang"))
+      // the 6-row result runs the corpus pass ONCE; the cut is inside
+      // the timed query body and recomputed every invocation.
+      val per = PipelineOps.cut(tok.groupBy(col("lang"))
         .agg(hll_sketch_agg(col("token"), lit(12)).as("sk"),
-          countDistinct(col("token")).as("exact_vocab"))
-        .localCheckpoint()
+          countDistinct(col("token")).as("exact_vocab")))
       per.select(col("lang"),
           hll_sketch_estimate(col("sk")).as("est_vocab"),
           col("exact_vocab"))
@@ -741,8 +739,8 @@ object Aggregates {
       // independent subtrees — six scans of events and four distinct
       // machineries for one output row. All four reduce to the same
       // per-user membership table: one scan, one groupBy(user_id)
-      // shuffle, then four trivial aggregates over the (tiny,
-      // localCheckpoint-materialized) user set. Exactness: the KMV
+      // shuffle, then four trivial aggregates over the (tiny, cut)
+      // user set. Exactness: the KMV
       // sketch is a function of the DISTINCT hash set (Agg.fullCompact
       // applies .distinct.sorted.take(k)), so sketching one h per
       // distinct user is bit-identical to sketching every event row;
@@ -750,13 +748,12 @@ object Aggregates {
       val base = Tables.events(s, d)
         .where(col("value") > 90 &&
           col("event_type").isin("purchase", "error"))
-      val pu = base.groupBy(col("user_id"))
+      val pu = PipelineOps.cut(base.groupBy(col("user_id"))
         .agg(
           max(when(col("event_type") === "purchase", 1).otherwise(0))
             .as("in_a"),
           max(when(col("event_type") === "error", 1).otherwise(0))
-            .as("in_b"))
-        .localCheckpoint()
+            .as("in_b")))
       def h = xxhash64(col("user_id"))
       val a = pu.where(col("in_a") === 1)
         .agg(kmv(h).as("ska"), count(lit(1)).as("a_exact"))

@@ -343,9 +343,7 @@ object IncrementalDedup {
     val inputs = liveGens(s, root)
     if (inputs.size <= 1) return // nothing to fold
     val names = inputs.map(p => new org.apache.hadoop.fs.Path(p).getName)
-    val digest = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(names.sorted.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val digest = graft.engine.SourceId.digest(names.sorted.mkString("\n"))
     publishGen(s, s.read.parquet(inputs: _*), root, s"zcompact-$digest",
       Map(ReplacesFile -> names.sorted.mkString("", "\n", "\n")))
     // Single-table visibility here: the compacted copy is

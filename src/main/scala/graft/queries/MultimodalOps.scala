@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Q
-import graft.engine.Tables
+import graft.engine.{PublishOnce, SourceId, Tables}
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
@@ -154,18 +154,13 @@ object MultimodalOps {
     * fixture scaffolding, the same contract as q_ref_csv/orc/json
     * (building the DataFrame executes the export).
     *
-    * The export is PUBLISH-ONCE keyed by (sfDir, source fingerprint)
-    * — ADVICE r14: the previous fixed shared path with
-    * delete-directory-then-rewrite raced concurrent sessions (one
-    * deletes while the other lists/reads). Now racing publishers
-    * stage under unique dirs and commit with one atomic rename;
-    * exactly one wins, losers read the winner's identical bytes, and
-    * a changed source re-keys instead of mutating under a reader.
-    * LOCAL-MODE NOTE: the executor-side writers and the driver's
-    * rename share java.io.tmpdir — true in local[k] (one JVM) and on
-    * any shared filesystem/object store; a real cluster points the
-    * export at the object store, where foreachPartition PUTs and the
-    * commit is the store's atomic publish primitive. */
+    * The export is committed by [[graft.engine.PublishOnce]] under a
+    * name keyed by (sfDir, source fingerprint): racing sessions share
+    * one immutable export, and a changed source re-keys instead of
+    * mutating under a reader. LOCAL-MODE NOTE: the executor-side
+    * writers and the driver's commit share java.io.tmpdir — true in
+    * local[k] (one JVM) and on any shared filesystem; a real cluster
+    * points the export at the object store. */
   val multimodalIngest: Q = Q(
     "q_multimodal_ingest",
     (s, d) => {
@@ -173,7 +168,9 @@ object MultimodalOps {
         .where(col("doc_id") % 50 === 0)
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
       val destPath = fixtureDir(s, d, docsBin, "docs_bin")
-      publishOnceDir(s, destPath) { stagingPath =>
+      PublishOnce(s, destPath) { staging =>
+        staging.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(staging)
+        val stagingPath = staging.toUri.getPath
         docsBin.foreachPartition {
           rows: Iterator[org.apache.spark.sql.Row] =>
             rows.foreach { r =>
@@ -199,51 +196,12 @@ object MultimodalOps {
       md5(text) AS content_md5
     FROM documents WHERE doc_id % 50 = 0 ORDER BY doc_id"""))
 
-  /** Media-fixture directory keyed by (sfDir, source fingerprint) —
-    * the publish-once identity discipline: concurrent sessions share
-    * one immutable export, a changed source re-keys instead of
-    * mutating under a reader (ADVICE r14). */
+  /** Media-fixture directory keyed by (sfDir, source fingerprint). */
   private def fixtureDir(
       s: org.apache.spark.sql.SparkSession, d: String,
       src: org.apache.spark.sql.DataFrame, name: String): String = {
-    val fp = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(s"$d|${graft.engine.SourceId.fingerprint(s, src)}"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    val fp = SourceId.digest(s"$d|${SourceId.fingerprint(s, src)}")
     s"${sys.props("java.io.tmpdir")}/graft_media/${name}_$fp"
-  }
-
-  /** Publish-once executor-written fixture export: write into a unique
-    * staging dir, commit with ONE atomic rename — racing publishers
-    * lose cleanly (winner's bytes are identical), readers never see a
-    * half-written or mid-delete directory. LOCAL-MODE NOTE: the
-    * executor-side writers and the driver's rename share
-    * java.io.tmpdir — true in local[k] (one JVM) and on any shared
-    * filesystem; a cluster deployment points this at the object store,
-    * where foreachPartition PUTs and the commit is the store's publish
-    * primitive. */
-  private def publishOnceDir(
-      s: org.apache.spark.sql.SparkSession, destPath: String)(
-      write: String => Unit): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val destP = new org.apache.hadoop.fs.Path(destPath)
-    val fs = destP.getFileSystem(conf)
-    if (fs.exists(destP)) return
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$destPath.__staging__${java.util.UUID.randomUUID().toString.take(8)}")
-    try {
-      fs.mkdirs(staging)
-      write(staging.toUri.getPath)
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.getUri, conf)
-      try fc.rename(staging, destP,
-        org.apache.hadoop.fs.Options.Rename.NONE)
-      catch { // lost the publish race; winner's bytes are identical
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      }
-    } finally {
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
   }
 
   /** EXT (r14, VERDICT r13 next #4): image decode through the REAL
@@ -274,7 +232,9 @@ object MultimodalOps {
       val ids = Tables.documents(s, d)
         .where(col("doc_id") % 50 === 0).select("doc_id")
       val destPath = fixtureDir(s, d, ids, "docs_png")
-      publishOnceDir(s, destPath) { stagingPath =>
+      PublishOnce(s, destPath) { staging =>
+        staging.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(staging)
+        val stagingPath = staging.toUri.getPath
         ids.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
           rows.foreach { r =>
             val id = r.getLong(0)

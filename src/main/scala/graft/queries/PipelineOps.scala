@@ -70,15 +70,17 @@ object PipelineOps {
     *              orientation, self-loops tolerated)
     * @return (`node`, `label`) — label = min node id in the component
     */
-  /** Materialize and cut lineage for one iteration round. Local mode
-    * uses `localCheckpoint()` (block-manager scratch, no external
-    * storage needed); when a checkpoint directory is configured
+  /** Materialize `df` and cut its lineage. Local mode uses
+    * `localCheckpoint()` (block-manager scratch, no external storage
+    * needed); when a checkpoint directory is configured
     * (`SparkContext.setCheckpointDir`, as any real cluster job should)
-    * the round instead checkpoints EAGERLY to that reliable storage —
+    * it checkpoints EAGERLY to that reliable storage instead —
     * `localCheckpoint` blocks live on executors and die with them, so
-    * on a 1000-executor cluster a single lost executor mid-iteration
-    * would kill the job; reliable checkpoints survive executor loss. */
-  private def cut(df: DataFrame): DataFrame =
+    * one lost executor would lose the data; reliable checkpoints
+    * survive executor loss. A caller deletes a
+    * reliable checkpoint ([[checkpointPath]]) once a later cut has
+    * superseded it; the one backing a returned DataFrame stays. */
+  private[graft] def cut(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint()
     else df.localCheckpoint()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 class AggregatesSpec extends SparkSpec {
@@ -108,6 +110,31 @@ class AggregatesSpec extends SparkSpec {
     val all = q("q_agg_hll_sketch").where(col("lang") === "__all__")
       .head()
     assert(all.getLong(1) == merged)
+  }
+
+  test("q_agg_hll_sketch and q_agg_kmv_estimate cut to reliable storage " +
+      "when a checkpoint dir is configured, with identical results") {
+    // localCheckpoint blocks die with their executor; with a checkpoint
+    // dir each query's one materialization must be a reliable
+    // checkpoint, and the rows must match the local-mode path.
+    val names = Seq("q_agg_hll_sketch", "q_agg_kmv_estimate")
+    val local = names.map(n => q(n).collect().toSeq)
+    val dir = java.nio.file.Files.createTempDirectory("graft-agg-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try {
+      names.zip(local).foreach { case (n, want) =>
+        assert(q(n).collect().toSeq == want, s"$n changed under reliable checkpoints")
+      }
+      val written = scala.util.Using.resource(java.nio.file.Files.walk(dir)) { s =>
+        s.iterator().asScala.map(_.getFileName.toString)
+          .count(_.startsWith("rdd-"))
+      }
+      assert(written == names.size,
+        s"expected one reliable checkpoint per query, found $written")
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 
   test("CMS estimates never underestimate, stay within eps*N, and are partition-invariant") {

@@ -84,6 +84,36 @@ class LayoutExpirySpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
+  test("attach racing a graceless sweep wins: the idle horizon is fixed " +
+      "when the sweep starts") {
+    val root = java.nio.file.Files.createTempDirectory("graft-race0")
+    try {
+      def mk(n: String): java.io.File = {
+        val d = new java.io.File(root.toFile, n)
+        assert(d.mkdirs())
+        java.nio.file.Files.writeString(d.toPath.resolve("part-0.parquet"), "x")
+        d
+      }
+      val a = mk("lay_old_aaaaaaaaaaaa")
+      mk("lay_new_bbbbbbbbbbbb")
+      assert(a.setLastModified(
+        System.currentTimeMillis() - 30L * 24 * 3600 * 1000))
+      // At minIdleMs = 0 only a use after the sweep started protects a
+      // layout. The pause puts the racing attach clearly after the
+      // sweep's start, beyond the filesystem's timestamp granularity.
+      val deleted = graft.engine.LayoutUse.expireRoot(
+        spark, root.toString, _ => Some("lay"),
+        keep = 1, minIdleMs = 0,
+        onDelete = name => {
+          Thread.sleep(50)
+          graft.engine.LayoutUse.touch(spark, s"$root/$name")
+        })
+      assert(deleted.isEmpty,
+        s"delete must stand down for a layout attached mid-sweep: $deleted")
+      assert(a.exists(), "the raced layout's files must survive")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("reader over an expired layout fails LOUDLY, never silently " +
       "empty; the next attach heals") {
     withBucketRoot { root =>

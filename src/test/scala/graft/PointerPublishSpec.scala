@@ -235,4 +235,27 @@ class PointerPublishSpec extends SparkSpec {
       assert(Snapshot.readPointer(spark, root, gens.last).count() == 500)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
   }
+
+  test("pointer retention: a resolve racing the sweep wins — pointer " +
+      "and object both survive") {
+    val work = java.nio.file.Files.createTempDirectory("graft_ptr_race_")
+    try {
+      val root = work.toString
+      val gens = Seq("db_2026_08_14_100000", "db_2026_08_15_100000")
+      gens.foreach(g => Snapshot.publishPointer(spark, payload(g), root, g))
+      // the racing reader resolves the candidate from the sweep's own
+      // onExpire hook: after it was ranked expirable, before the
+      // re-check. The pause puts that resolve clearly after the sweep
+      // started, beyond the filesystem's timestamp granularity.
+      val expired = Snapshot.expirePointer(spark, root, keep = 1,
+        onExpire = g => {
+          Thread.sleep(50)
+          Snapshot.resolvePointer(spark, root, g)
+        })
+      assert(expired.isEmpty, s"expiry must stand down: $expired")
+      assert(Snapshot.pointerGenerations(spark, root) == gens)
+      assert(objectDirs(root).size == 2, objectDirs(root).toString)
+      assert(Snapshot.readPointer(spark, root, gens.head).count() == 500)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
+  }
 }

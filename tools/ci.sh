@@ -19,6 +19,18 @@ trap 'rm -rf "$OUT_DIR"' EXIT
 echo "== ci: compile =="
 sbt -batch compile
 
+# The publish-once commit protocol lives behind one module
+# (engine/PublishOnce.scala): its commit primitive and its staging
+# name may appear in exactly one file under src/main, comments included.
+for literal in 'Rename.NONE' '__staging__'; do
+  n_files=$(grep -rlF -- "$literal" src/main | wc -l || true)
+  [ "$n_files" -eq 1 ] || {
+    echo "ci: '$literal' occurs in $n_files files under src/main; expected exactly 1 (PublishOnce)" >&2
+    grep -rlF -- "$literal" src/main >&2
+    exit 1
+  }
+done
+
 echo "== ci: test =="
 sbt -batch test
 
