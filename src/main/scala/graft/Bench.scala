@@ -42,7 +42,7 @@ object Bench {
     // bench_history.jsonl and their totals in runs_total.
     val canonical = args.contains("--canonical")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 32 like every other perf main (BenchOne/Diag/Explain/Run): the
+    // 32 like every other perf main (BenchOne/Diag/Run): the
     // r17 canonical re-draw caught this defaulting to 4 — a bare
     // `--canonical` run silently measured local[4] against records
     // drawn at 32 (sf0.1 totals barely move; sf5 queries read 2–8×

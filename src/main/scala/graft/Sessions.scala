@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session recipe shared by every entry point (Bench, BenchOne,
-  * Verify, Run, Explain, test suites). Centralized so session-scoped
+  * Verify, Run, test suites). Centralized so session-scoped
   * invariants hold everywhere by construction:
   *
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`: `events.parquet` is

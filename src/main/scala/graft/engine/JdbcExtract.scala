@@ -93,23 +93,13 @@ object JdbcExtract {
 
   /** Generation dir name for the PK range (`from`, `to`] published by
     * one incremental fold: `gen_<from+1>_<to>` (inclusive bounds in
-    * the name). EXACT-match parsing only — publishAtomic's
-    * [[PublishOnce]] staging dir also starts with the prefix, so
-    * a prefix test would let a crashed publish's leftover staging dir
-    * advance the watermark past data that never became visible. */
+    * the name). */
   private val GenRe = "^gen_(-?\\d+)_(-?\\d+)$".r
 
-  private def genDirs(s: SparkSession, root: String): Seq[(Long, Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case GenRe(lo, hi) => Some((lo.toLong, hi.toLong, st.getPath.toString))
-        case _ => None
-      }
+  private def genDirs(s: SparkSession, root: String): Seq[(Long, Long, String)] =
+    Generations.names(s, root, Generations.Rename, GenRe.matches).map {
+      case name @ GenRe(lo, hi) => (lo.toLong, hi.toLong, s"$root/$name")
     }
-  }
 
   /** The extract root's high watermark: the max PK covered by any
     * PUBLISHED generation. DERIVED, never stored — the generation dir

@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * names, so they never collide before the commit.
   *
   * Staging names end in `.__staging__<uuid8>`, which matches no
-  * published name, so listings that skip [[isStaging]] never see
-  * half-written data. The rename is atomic on HDFS and local disks; on
+  * published name; [[Generations]] and [[LayoutUse.expireRoot]] skip
+  * [[isStaging]] names, so their listings never see half-written data. The rename is atomic on HDFS and local disks; on
   * an object store it is a copy, and such stores publish through
   * [[Snapshot.publishPointer]] instead. */
 private[graft] object PublishOnce {

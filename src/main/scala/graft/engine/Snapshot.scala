@@ -141,19 +141,9 @@ object Snapshot {
       spark: SparkSession, root: String, keep: Int,
       dbName: Option[String] = None,
       minIdleMs: Long = 0L,
-      onExpire: String => Unit = _ => ()): Seq[String] = {
-    require(keep >= 1, "retention must keep at least one generation")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return Nil
-    LayoutUse.sweep(fs, minIdleMs, onExpire,
-      fs.listStatus(rootPath).toSeq
-        .filter(st => st.isDirectory && isGeneration(st.getPath.getName, dbName))
-        .sortBy(_.getPath.getName)
-        .dropRight(keep)
-        .map(st => st.getPath.getName -> st))(
-      (_, dir) => fs.delete(dir, true))
-  }
+      onExpire: String => Unit = _ => ()): Seq[String] =
+    Generations.expire(spark, root, Generations.Rename,
+      isGeneration(_, dbName), keep, minIdleMs, onExpire)
 
   /** Time travel: read the latest generation under `root` whose
     * `snapshotName` timestamp is <= `asOf` — "the corpus as the
@@ -163,24 +153,24 @@ object Snapshot {
     * only the chosen generation's files are touched. */
   def readAsOf(
       spark: SparkSession, root: String, dbName: String,
-      asOf: Instant): DataFrame = {
+      asOf: Instant): DataFrame =
+    readAsOf(spark, root, Generations.Rename, dbName, asOf)
+
+  /** The as-of body of both layouts: the latest visible generation of
+    * `dbName` at or before `asOf`, attached (its use marker renewed, so
+    * a racing retention sweep stands down) and then read. Only the
+    * chosen generation's files are touched. */
+  private def readAsOf(
+      spark: SparkSession, root: String, layout: Generations.Layout,
+      dbName: String, asOf: Instant): DataFrame = {
     val cutoff = snapshotName(dbName, asOf)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = fs.listStatus(rootPath)
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      // Full-pattern match, not a bare prefix test: for dbName="db" a
-      // sibling database's "db_1_2024_…" startsWith "db_" and sorts
-      // below the cutoff, but is NOT a generation of "db".
-      .filter(n => isGeneration(n, Some(dbName)) && n <= cutoff)
-      .sorted
-    if (gens.isEmpty) throw new EmptySnapshotException(
-      s"no generation of $dbName at or before $asOf under $root")
-    // Attach: renew the chosen generation's use marker so a racing
-    // retention sweep stands down (r16 — see expireGenerations).
-    LayoutUse.touch(spark, s"$root/${gens.last}")
-    spark.read.parquet(s"$root/${gens.last}")
+    val dir = Generations.names(spark, root, layout,
+        n => isGeneration(n, Some(dbName)) && n <= cutoff)
+      .lastOption.flatMap(Generations.resolve(spark, root, layout, _))
+      .getOrElse(throw new EmptySnapshotException(
+        s"no committed generation of $dbName at or before $asOf under $root"))
+    LayoutUse.touch(spark, dir)
+    spark.read.parquet(dir)
   }
 
   /** Atomic publish: a verified write committed by [[PublishOnce]], so
@@ -261,9 +251,9 @@ object Snapshot {
   //   root/_pointers/<gen>            ONE tiny file; its create-if-
   //                                   absent IS the commit
   //
-  // Visibility = pointer existence. Readers resolve generations only
-  // through pointers, so a half-written object dir (crashed publisher,
-  // racing loser) is invisible garbage, reclaimed by [[gcOrphanObjects]].
+  // A half-written object dir (crashed publisher, racing loser) is
+  // therefore invisible garbage ([[Generations]] states the visibility
+  // rule), reclaimed by [[gcOrphanObjects]].
   // The primitive the store must supply is atomic create-if-absent of
   // one small file — HDFS: namenode create-exclusive; S3: conditional
   // PUT (If-None-Match, strongly consistent); local: O_EXCL — the same
@@ -273,12 +263,9 @@ object Snapshot {
   // demonstrates the rename-mode protocol corrupting on that same FS).
 
   /** Directory of committed pointer files under a pointer-mode root. */
-  val PointersDir = "_pointers"
+  val PointersDir: String = Generations.PointersDir
   /** Directory of staged/committed object dirs under a pointer-mode root. */
-  val ObjectsDir = "_objects"
-
-  private def pointerPath(root: String, gen: String) =
-    new org.apache.hadoop.fs.Path(s"$root/$PointersDir/$gen")
+  val ObjectsDir: String = Generations.ObjectsDir
 
   /** Atomic create-if-absent of a small file — the pointer-commit
     * primitive. `file:`-scheme paths go through java.nio `CREATE_NEW`
@@ -323,7 +310,7 @@ object Snapshot {
       spark: SparkSession, df: DataFrame, root: String, gen: String,
       extras: Map[String, String] = Map.empty): RoundTrip = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val ptr = pointerPath(root, gen)
+    val ptr = new org.apache.hadoop.fs.Path(s"$root/$PointersDir/$gen")
     val fs = ptr.getFileSystem(conf)
     if (fs.exists(ptr)) throw new SnapshotExistsException(
       s"generation $gen already committed under $root — snapshots are immutable")
@@ -353,35 +340,15 @@ object Snapshot {
   }
 
   /** Resolve a committed generation to its object-dir path, or None if
-    * no pointer exists. A pointer whose object dir is MISSING is
-    * corruption (an expiry/GC bug, not an unpublished generation) and
-    * fails loudly rather than reading as absent. Resolving attaches
-    * the object dir (LayoutUse marker) so a racing [[expirePointer]]
-    * sweep stands down — same discipline as [[readAsOf]]. */
+    * no pointer exists; a pointer whose object dir is missing throws
+    * ([[Generations.resolve]]). Resolving attaches the object dir
+    * (LayoutUse marker) so a racing [[expirePointer]] sweep stands
+    * down — same discipline as [[readAsOf]]. */
   def resolvePointer(
       spark: SparkSession, root: String, gen: String): Option[String] = {
-    val resolved = resolveNoTouch(spark, root, gen)
+    val resolved = Generations.resolve(spark, root, Generations.Pointer, gen)
     resolved.foreach(obj => LayoutUse.touch(spark, obj))
     resolved
-  }
-
-  /** [[resolvePointer]] minus the use-marker attach — for the expiry
-    * sweep itself, which must not mark its own candidates as
-    * just-used (that would make every sweep stand down from every
-    * candidate it inspected). */
-  private def resolveNoTouch(
-      spark: SparkSession, root: String, gen: String): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ptr = pointerPath(root, gen)
-    val fs = ptr.getFileSystem(conf)
-    if (!fs.exists(ptr)) return None
-    val objName = jsonMapper.readTree(readBytes(fs, ptr)).get("object").asText()
-    val obj = s"$root/$ObjectsDir/$objName"
-    if (!fs.exists(new org.apache.hadoop.fs.Path(obj)))
-      throw new IllegalStateException(
-        s"pointer $gen names missing object $objName under $root — " +
-          "a committed generation's data was deleted out from under it")
-    Some(obj)
   }
 
   /** Read a pointer-committed generation. */
@@ -396,92 +363,47 @@ object Snapshot {
     * chronological, same [[snapshotName]] contract as rename mode). */
   def pointerGenerations(
       spark: SparkSession, root: String,
-      dbName: Option[String] = None): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$PointersDir")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir)
-      .filter(_.isFile)
-      .map(_.getPath.getName)
-      .filter(n => isGeneration(n, dbName))
-      .sorted.toSeq
-  }
+      dbName: Option[String] = None): Seq[String] =
+    Generations.names(spark, root, Generations.Pointer, isGeneration(_, dbName))
 
-  /** Pointer-mode time travel: latest committed generation of `dbName`
-    * at or before `asOf` — [[readAsOf]]'s twin. */
+  /** Pointer-mode time travel: [[readAsOf]] over pointer generations. */
   def readPointerAsOf(
       spark: SparkSession, root: String, dbName: String,
-      asOf: Instant): DataFrame = {
-    val cutoff = snapshotName(dbName, asOf)
-    val gens = pointerGenerations(spark, root, Some(dbName))
-      .filter(_ <= cutoff)
-    if (gens.isEmpty) throw new EmptySnapshotException(
-      s"no committed generation of $dbName at or before $asOf under $root")
-    readPointer(spark, root, gens.last)
-  }
+      asOf: Instant): DataFrame =
+    readAsOf(spark, root, Generations.Pointer, dbName, asOf)
 
   /** Pointer-mode retention: expire committed generations beyond the
-    * `keep` newest. UNPUBLISH FIRST — the pointer file is deleted
-    * before the object dir, so the crash window leaves an orphan
-    * object ([[gcOrphanObjects]]'s job), never a dangling pointer
-    * (which [[resolvePointer]] treats as corruption). The object dir's
-    * use marker, which [[resolvePointer]] touches, goes through the
-    * same [[LayoutUse.sweep]] as [[expireGenerations]], with the same
+    * `keep` newest, pointer before object ([[Generations.expire]]), so
+    * the crash window leaves an orphan object ([[gcOrphanObjects]]'s
+    * job), never a dangling pointer. The object dir's use marker, which
+    * [[resolvePointer]] touches, goes through the same
+    * [[LayoutUse.sweep]] as [[expireGenerations]], with the same
     * `onExpire` hook. */
   def expirePointer(
       spark: SparkSession, root: String, keep: Int,
       dbName: Option[String] = None, minIdleMs: Long = 0L,
-      onExpire: String => Unit = _ => ()): Seq[String] = {
-    require(keep >= 1, "retention must keep at least one generation")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    LayoutUse.sweep(fs, minIdleMs, onExpire,
-      pointerGenerations(spark, root, dbName).dropRight(keep).flatMap(gen =>
-        resolveNoTouch(spark, root, gen).map(obj =>
-          gen -> fs.getFileStatus(new org.apache.hadoop.fs.Path(obj)))))(
-      (gen, obj) => {
-        val unpublished = fs.delete(pointerPath(root, gen), false)
-        fs.delete(obj, true)
-        unpublished
-      })
-  }
+      onExpire: String => Unit = _ => ()): Seq[String] =
+    Generations.expire(spark, root, Generations.Pointer,
+      isGeneration(_, dbName), keep, minIdleMs, onExpire)
 
   /** Reclaim unreferenced object dirs under a pointer-mode root —
     * crashed publishers' staging, racing losers that died pre-cleanup,
     * expiry's pointer-deleted-then-crashed window. An object is an
-    * orphan iff NO pointer references it AND it is older than
-    * `minAgeMs` (the grace window protects an in-flight publish that
-    * has staged but not yet committed — at 100 TB a staging write is
-    * minutes long, so a production sweep passes hours here). */
+    * orphan iff NO pointer references it ([[Generations.orphans]]:
+    * every pointer, not only `snapshotName` ones — the streaming CDC
+    * pipeline commits `gen_<batchId>`) AND it is older than `minAgeMs`
+    * (the grace window protects an in-flight publish that has staged
+    * but not yet committed — at 100 TB a staging write is minutes
+    * long, so a production sweep passes hours here). */
   def gcOrphanObjects(
       spark: SparkSession, root: String, minAgeMs: Long): Seq[String] = {
     require(minAgeMs >= 0, s"negative GC grace: $minAgeMs")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val objsDir = new org.apache.hadoop.fs.Path(s"$root/$ObjectsDir")
-    val fs = objsDir.getFileSystem(conf)
-    if (!fs.exists(objsDir)) return Nil
-    // EVERY pointer file protects its object — deliberately NOT the
-    // layout-filtered pointerGenerations listing: callers may name
-    // pointers outside the snapshotName layout (the streaming CDC
-    // pipeline commits `gen_<batchId>`), and a GC whose liveness set
-    // is narrower than its delete set deletes live data. Found by
-    // ComposedPipelineSpec's pointer case: gc reclaimed two committed
-    // batch generations because their names didn't match the stamp
-    // pattern.
-    val ptrsDir = new org.apache.hadoop.fs.Path(s"$root/$PointersDir")
-    val referenced = (if (!fs.exists(ptrsDir)) Seq.empty[String]
-      else fs.listStatus(ptrsDir).toSeq.filter(_.isFile)
-        .map(_.getPath.getName)).flatMap { gen =>
-      Option(jsonMapper.readTree(readBytes(fs, pointerPath(root, gen)))
-        .get("object")).map(_.asText())
-    }.toSet
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val horizon = System.currentTimeMillis() - minAgeMs
-    fs.listStatus(objsDir)
-      .filter(_.isDirectory)
-      .filter(st => !referenced.contains(st.getPath.getName))
+    Generations.orphans(spark, root)
       .filter(_.getModificationTime < horizon)
       .map { st => fs.delete(st.getPath, true); st.getPath.getName }
-      .toSeq
   }
 
   /** Manifest file name inside a generation dir. The leading underscore
@@ -553,15 +475,8 @@ object Snapshot {
     * listing+footer pass over every part file of every generation. */
   def generationsInRange(
       spark: SparkSession, root: String, dbName: Option[String],
-      column: String, lo: Long, hi: Long): Seq[String] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return Nil
-    fs.listStatus(rootPath)
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(n => isGeneration(n, dbName))
-      .sorted
+      column: String, lo: Long, hi: Long): Seq[String] =
+    Generations.names(spark, root, Generations.Rename, isGeneration(_, dbName))
       .filter { gen =>
         readManifest(spark, s"$root/$gen")
           .flatMap(_.columns.get(column))
@@ -569,12 +484,11 @@ object Snapshot {
             scala.util.Try((st.min.toLong, st.max.toLong)).toOption
               .forall { case (mn, mx) => mx >= lo && mn <= hi }
           }
-      }.toSeq
+      }
       // Attach every selected generation: the caller reads these next,
       // and the touch is what makes a racing retention sweep stand
       // down (see expireGenerations's race discipline).
       .map { gen => LayoutUse.touch(spark, s"$root/$gen"); gen }
-  }
 
   /** Sink cleanup — the `aws s3 rm` temp-dump delete (A5, backup.sh:370). */
   def delete(spark: SparkSession, path: String): Boolean = {

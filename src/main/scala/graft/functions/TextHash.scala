@@ -35,25 +35,6 @@ object TextHash {
     * mod-2^64 wraparound.) */
   def shingleHashes(sh: Column): Column = transform(sh, x => xxhash64(x))
 
-  /** 64-bit hash of each token. Materialize this once per document
-    * (own projection), then derive every k-gram sketch from it. */
-  def tokenHashes(toks: Column): Column = transform(toks, t => xxhash64(t))
-
-  /** Distinct k-shingle hashes computed straight from token hashes —
-    * the shingle STRING is never materialized: a k-gram's hash is the
-    * xxhash64 of its k token hashes. Equivalent (up to the hash
-    * family) to `shingleHashes(shingles(toks, k))`: the whitespace
-    * join there is injective because tokens cannot contain the
-    * separator, so distinct-on-long here equals distinct-on-string
-    * modulo 64-bit collisions. Cuts per-shingle cost from
-    * slice+join+string-hash+string-distinct to k fixed-width hashes +
-    * a primitive-set distinct — measured ~4× on the MinHash pipeline. */
-  def shingleHashesFromTokenHashes(th: Column, k: Int): Column =
-    when(size(th) >= k,
-      array_distinct(transform(sequence(lit(1), size(th) - (k - 1)),
-        i => xxhash64((0 until k).map(j => element_at(th, i + j)): _*))))
-      .otherwise(array().cast("array<long>"))
-
   /** MinHash signature over pre-hashed shingles (see [[shingleHashes]]).
     *
     * Shaped as ONE `aggregate` fold so the expression references `hs`

@@ -17,17 +17,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Aggregates {
 
-  /** Plain lineitem/documents reads. An earlier r18 draft widened
-    * these ([[Tables.widen]]); the full-schedule A/B showed the fan-out
-    * exchange was a net tax for this family — partial aggregation
-    * already shuffles only per-group partials, so parallelizing the
-    * fold bought less than one extra full-row exchange cost
-    * (q_agg_hash_group A/B and OPTIMIZATION_r18.md). */
-  private def liW(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-  private def docsW(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-
   /** B13 flagship: TPC-H Q1-style pricing summary. */
   val aggHashGroup: Q = Q(
     "q_agg_hash_group",
@@ -93,7 +82,7 @@ object Aggregates {
   val aggApproxDistinct: Q = Q(
     "q_agg_approx_distinct",
     (s, d) =>
-      liW(s, d)
+      Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
           approx_count_distinct(col("l_partkey"), 0.05).as("approx_parts"),
@@ -114,7 +103,7 @@ object Aggregates {
   val aggHllSketch: Q = Q(
     "q_agg_hll_sketch",
     (s, d) => {
-      val tok = docsW(s, d)
+      val tok = Tables.documents(s, d)
         .select(col("lang"),
           explode(split(lower(col("text")), " ")).as("token"))
         .where(col("token") =!= "")
@@ -428,7 +417,7 @@ object Aggregates {
   val aggPercentile: Q = Q(
     "q_agg_percentile",
     (s, d) =>
-      liW(s, d)
+      Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
           round(expr("percentile(l_quantity, 0.25)"), 6).as("p25"),
@@ -456,7 +445,7 @@ object Aggregates {
       val xd = Det.dec(col("l_extendedprice"), 2)
       val yd = Det.dec(col("l_quantity"), 2, 8)
       val nD = col("n").cast("double")
-      liW(s, d)
+      Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
           count(lit(1)).as("n"),
@@ -843,10 +832,12 @@ object Aggregates {
     "q_agg_weighted_median",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val li = liW(s, d).select(col("l_returnflag"),
+      val li = Tables.lineitem(s, d).select(col("l_returnflag"),
         Det.dec(col("l_extendedprice")).as("p"),
         Det.dec(col("l_quantity")).as("w"))
-        .withColumn("b", expr("CAST(p AS INT) DIV 64"))
+        // FLOOR, not an INT cast: monotone in p with negatives included,
+        // and no CAST_OVERFLOW for a DECIMAL(12,2) price >= 2^31
+        .withColumn("b", expr("FLOOR(p / 64)"))
       val hist = li.groupBy(col("l_returnflag"), col("b"))
         .agg(sum(col("w")).as("m"))
       val wPre = Window.partitionBy(col("l_returnflag")).orderBy(col("b"))
@@ -896,7 +887,7 @@ object Aggregates {
     "q_agg_moments",
     (s, d) => {
       val x = col("x")
-      val agg = liW(s, d)
+      val agg = Tables.lineitem(s, d)
         .select(col("l_returnflag"), col("l_quantity").cast("long").as("x"))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), sum(x).as("s1"),

@@ -20,16 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** Documents read with the conditional ingest fan-out
-    * ([[Tables.widen]], r18): sketch kernels (MinHash/SimHash/gram
-    * hashing) and URL parsing run above the scan; an earlier r18
-    * draft widened this read ([[Tables.widen]]), but the A/B showed
-    * the fan-out exchange costs more than the sketch kernels it
-    * parallelizes at fixture sizes (q_dedup_ngram_jaccard 1.89→1.54 s
-    * without it) — the one pair-expansion in this family heavy enough
-    * to justify a pinned-width exchange is [[fuzzyNamePairs]]'. */
-  private def docsW(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
   private val Perms = 32
   private[graft] val Bands = 8
   private[graft] val RowsPerBand = 4
@@ -59,7 +49,7 @@ object DedupOps {
     * consumer shape — see GramSketch's scaladoc). n_shingles counts
     * DISTINCT shingles, mirroring the expression form. */
   private def signatures(s: SparkSession, d: String): DataFrame =
-    docsW(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"),
         size(graft.functions.GramHashes(s, col("text"), 3))
           .cast("long").as("n_shingles"),
@@ -86,7 +76,7 @@ object DedupOps {
     (s, d) => {
       val sig = graft.functions.MinHashPortable(
         s, col("text"), 3, PortablePerms)
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), sig.as("sig"))
         .where(element_at(col("sig"), 1) > 0) // < 3 tokens: no grams
         .select(
@@ -209,7 +199,7 @@ object DedupOps {
   val dedupSimhash: Q = Q(
     "q_dedup_simhash",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .where(size(TextHash.tokens(col("text"))) > 0)
         .select(col("doc_id"),
           graft.functions.SimHashPortable(s, col("text"), SimBits)
@@ -233,7 +223,7 @@ object DedupOps {
   val dedupSimhashPairs: Q = Q(
     "q_dedup_simhash_pairs",
     (s, d) => {
-      val sh = docsW(s, d)
+      val sh = Tables.documents(s, d)
         .where(size(TextHash.tokens(col("text"))) > 0)
         .select(col("doc_id"),
           graft.functions.SimHashPortable(s, col("text"), SimBits)
@@ -356,7 +346,7 @@ object DedupOps {
     * at sf0.01/sf0.1 are IDENTICAL under w=3 and w=5) — and the oracle
     * SQL mirrors 5-grams exactly. */
   private[graft] def ngramGrams(s: SparkSession, d: String): DataFrame =
-    docsW(s, d)
+    Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         graft.functions.GramHashes(s, col("text"), 5).as("bg"))
 
@@ -1190,7 +1180,7 @@ object DedupOps {
         regexp_replace(parse_url(col("url"), lit("PATH")), "/+$", ""),
         when(size(keptParams) > 0,
           concat(lit("?"), array_join(keptParams, "&"))).otherwise(""))
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), url.as("url"))
         .withColumn("canonical_url", canon)
         .groupBy(col("canonical_url"))

@@ -165,10 +165,10 @@ object IncrementalDedup {
     }
   }
 
-  /** Present AND committed generations — the single choke point that
-    * makes uncommitted (possibly torn) generations invisible to every
-    * reader path: probe unions, compaction listings, replaces-lists,
-    * prune sweeps.
+  /** Visible ([[graft.engine.Generations]]) AND committed generations —
+    * the single choke point that makes uncommitted (possibly torn)
+    * generations invisible to every reader path: probe unions,
+    * compaction listings, replaces-lists, prune sweeps.
     *
     * Legacy grandfathering (ADVICE r13 medium): layouts built before
     * the commit markers existed have committed-by-construction
@@ -178,45 +178,35 @@ object IncrementalDedup {
     * the very silent-wrong-data class the markers prevent. An unmarked
     * generation is therefore stamped committed ON SIGHT iff the marker
     * invariant it encodes already holds: its own manifest is present
-    * (publishAtomic's rename is the only writer of manifest-carrying
-    * dirs, so the rename completed) AND its sibling-table half is down
-    * too (same label dir in the other table) — the exact
-    * neither-or-both fact the writer's marker would have asserted.
-    * Compacted gens (`zcompact-*`) are content-preserving per table
-    * and commit on their own rename by design (see [[compactTable]]),
-    * so they grandfather without a sibling check. A genuinely torn
-    * legacy crash (one table only, non-compact) stays invisible and
-    * self-heals through the retry path, exactly like a post-marker
-    * crash. */
+    * AND its sibling-table half is down too (same label dir in the
+    * other table) — the exact neither-or-both fact the writer's marker
+    * would have asserted. Compacted gens (`zcompact-*`) are
+    * content-preserving per table and commit on their own rename by
+    * design (see [[compactTable]]), so they grandfather without a
+    * sibling check. A genuinely torn legacy crash (one table only,
+    * non-compact) stays invisible and self-heals through the retry
+    * path, exactly like a post-marker crash. */
   private def genDirs(s: SparkSession, root: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val committed = committedLabels(s, root)
-      def complete(genDir: org.apache.hadoop.fs.Path): Boolean =
-        fs.exists(new org.apache.hadoop.fs.Path(genDir,
-          graft.engine.Snapshot.ManifestFile))
-      fs.listStatus(p).toSeq
-        .filter { st =>
-          val name = st.getPath.getName
-          lazy val label = name.stripPrefix(GenPrefix)
-          st.isDirectory && name.startsWith(GenPrefix) && {
-            committed.contains(label) || {
-              // grandfather: both halves complete (or content-preserving
-              // compact) ⇒ stamp the marker the legacy writer never wrote
-              val ok = complete(st.getPath) &&
-                (label.startsWith("zcompact-") ||
-                  siblingRoot(root).exists { sib =>
-                    complete(new org.apache.hadoop.fs.Path(sib, name))
-                  })
-              if (ok) commitLabel(s, root, label)
-              ok
-            }
-          }
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    lazy val committed = committedLabels(s, root)
+    def complete(genDir: String): Boolean = fs.exists(
+      new org.apache.hadoop.fs.Path(genDir, graft.engine.Snapshot.ManifestFile))
+    graft.engine.Generations.names(s, root, graft.engine.Generations.Rename,
+        _.startsWith(GenPrefix))
+      .filter { name =>
+        val label = name.stripPrefix(GenPrefix)
+        committed.contains(label) || {
+          // grandfather: both halves complete (or content-preserving
+          // compact) ⇒ stamp the marker the legacy writer never wrote
+          val ok = complete(s"$root/$name") &&
+            (label.startsWith("zcompact-") ||
+              siblingRoot(root).exists(sib => complete(s"$sib/$name")))
+          if (ok) commitLabel(s, root, label)
+          ok
         }
-        .map(_.getPath.toString).sorted
-    }
+      }
+      .map(name => s"$root/$name")
   }
 
   private def publishGen(

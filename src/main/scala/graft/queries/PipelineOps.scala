@@ -45,31 +45,6 @@ object PipelineOps {
     * guards a pathological path-shaped graph. */
   private val MaxIters = 30
 
-  /** Distributed connected components by iterative min-label
-    * propagation with per-round pointer jumping: every node takes the
-    * minimum label among itself and its neighbors (the hash-min step),
-    * then shortcuts to its label's label (the pointer-jump step, which
-    * halves the label-tree height). Propagation alone needs O(diameter)
-    * rounds — an adversarial path graph longer than MaxIters would
-    * abort; the jump makes label distance shrink geometrically, so
-    * rounds are O(log diameter) (the same round bound as the star
-    * contractions of Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SOCC'14) and MaxIters=30 covers any component a real
-    * corpus can contain. PipelineSpec proves a 300-node path — 10×
-    * MaxIters in diameter — converges to the correct labels.
-    *
-    * Scale shape: `edges` is materialized ONCE (via [[cut]]) so each
-    * round is one keyed shuffle over the edge list plus two over the
-    * label list, never re-running the upstream dedup pipeline; lineage
-    * is cut per round so the plan stays constant-size.
-    *
-    * Everything is integer/long arithmetic — bit-deterministic under
-    * any partitioning and accumulation order.
-    *
-    * @param edges two long columns `src`, `dst` (undirected; either
-    *              orientation, self-loops tolerated)
-    * @return (`node`, `label`) — label = min node id in the component
-    */
   /** Materialize `df` and cut its lineage. Local mode uses
     * `localCheckpoint()` (block-manager scratch, no external storage
     * needed); when a checkpoint directory is configured
@@ -110,6 +85,31 @@ object PipelineOps {
         .delete(p, true)
     } catch { case scala.util.control.NonFatal(_) => () } // best-effort
 
+  /** Distributed connected components by iterative min-label
+    * propagation with per-round pointer jumping: every node takes the
+    * minimum label among itself and its neighbors (the hash-min step),
+    * then shortcuts to its label's label (the pointer-jump step, which
+    * halves the label-tree height). Propagation alone needs O(diameter)
+    * rounds — an adversarial path graph longer than MaxIters would
+    * abort; the jump makes label distance shrink geometrically, so
+    * rounds are O(log diameter) (the same round bound as the star
+    * contractions of Kiveris et al., "Connected Components in MapReduce
+    * and Beyond", SOCC'14) and MaxIters=30 covers any component a real
+    * corpus can contain. PipelineSpec proves a 300-node path — 10×
+    * MaxIters in diameter — converges to the correct labels.
+    *
+    * Scale shape: `edges` is materialized ONCE (via [[cut]]) so each
+    * round is one keyed shuffle over the edge list plus two over the
+    * label list, never re-running the upstream dedup pipeline; lineage
+    * is cut per round so the plan stays constant-size.
+    *
+    * Everything is integer/long arithmetic — bit-deterministic under
+    * any partitioning and accumulation order.
+    *
+    * @param edges two long columns `src`, `dst` (undirected; either
+    *              orientation, self-loops tolerated)
+    * @return (`node`, `label`) — label = min node id in the component
+    */
   def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     val e0 = cut(edges
       .select(col("src").cast("long"), col("dst").cast("long"))
@@ -1044,6 +1044,8 @@ object PipelineOps {
       // cut: the stage-4 artifact seam — the final curated corpus,
       // read by three consumers (weights, pack, output)
       val clean = cut(near.join(leaked, Seq("doc_id"), "left_anti"))
+      // nothing reads `exact` past the materialized `clean`
+      checkpointPath(exact).foreach(deleteCheckpoint(s, _))
       // 5 — mix weights over what actually ships
       val perSrc = clean.groupBy(col("source"))
         .agg(sum(nTok).as("src_tokens"))

@@ -17,20 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object ScalarFns {
 
-  /** Plain reads. An earlier r18 draft widened these
-    * ([[Tables.widen]]) to parallelize the JSON/crypto/regex kernels
-    * over the fixture's single-split scans; canonical A/B showed the
-    * win existed only in combination with the (withdrawn) global 16k
-    * AQE floor — without it the fan-out exchange is a flat cost at
-    * every site here (q_fn_hash 0.13→0.63 s, q_fn_regex 0.27→0.82 s,
-    * q_fn_url 0.15→0.63 s canonical with widen; q_fn_json flat). The
-    * one genuinely kernel-bound tail in this family, q_fn_variant,
-    * pins its width inside the query instead (see fnVariant). */
-  private def eventsW(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-  private def docsW(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-
   /** B26: string family over customer names (`Customer#000000042`). */
   val fnString: Q = Q(
     "q_fn_string",
@@ -195,7 +181,7 @@ object ScalarFns {
       val parsed = from_json(col("props"),
         org.apache.spark.sql.types.StructType.fromDDL("k LONG"))
         .getField("k")
-      eventsW(s, d)
+      Tables.events(s, d)
         .select(
           col("event_id"),
           get_json_object(col("props"), "$.k").as("k_str"),
@@ -351,7 +337,7 @@ object ScalarFns {
   val fnHash: Q = Q(
     "q_fn_hash",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"),
           md5(col("text")).as("md5_hex"),
@@ -376,7 +362,7 @@ object ScalarFns {
   val fnRegex: Q = Q(
     "q_fn_regex",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"),
           regexp_extract(col("text"), "[0-9]+", 0).as("first_num"),
@@ -505,7 +491,7 @@ object ScalarFns {
       val url = concat(lit("https://"), col("source"),
         lit(".example.com/docs/"), col("doc_id").cast("string"),
         lit("?lang="), col("lang"), lit("&v=2"))
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"),
           url.as("url"),
@@ -578,7 +564,7 @@ object ScalarFns {
   val fnVariantExplode: Q = Q(
     "q_fn_variant_explode",
     (s, d) => {
-      eventsW(s, d).createOrReplaceTempView("events_ve")
+      Tables.events(s, d).createOrReplaceTempView("events_ve")
       s.sql("""
         SELECT event_id, f.pos, f.key, to_json(f.value) AS value_json
         FROM (SELECT event_id,

@@ -19,23 +19,12 @@ object TextOps {
 
   private val sqlTokens = "string_split(lower(text), ' ')"
 
-  /** Documents read, deliberately NOT widened (an earlier r18 draft
-    * put [[Tables.widen]] here): the text family's kernels are cheap
-    * enough per row that the added fan-out exchange cost MORE than the
-    * serial fold it parallelized at fixture sizes — the A/B measured
-    * q_dedup_exact 1.24→0.75 s, q_text_cms_topk 1.44→0.69 s,
-    * q_text_tfidf 2.22→1.68 s from removing it (widen stays only at
-    * the heavy-kernel sites: ScalarFns JSON/variant parse, CurationOps
-    * rolling-hash spans/classifier; see OPTIMIZATION_r18.md). */
-  private def docsW(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.documents(s, d)
-
   /** B32: exact dedup by normalized text — keep-first (min doc_id)
     * per group, with copy counts. */
   val dedupExact: Q = Q(
     "q_dedup_exact",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .groupBy(lower(trim(col("text"))).as("norm_text"))
         .agg(
           min(col("doc_id")).as("keep_id"),
@@ -49,7 +38,7 @@ object TextOps {
   val textTokens: Q = Q(
     "q_text_tokens",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(explode(tokens).as("token"))
         .where(col("token") =!= "" && !col("token").isin("a", "the"))
         .groupBy(col("token"))
@@ -64,7 +53,7 @@ object TextOps {
   val textStats: Q = Q(
     "q_text_stats",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(col("lang"), col("n_chars"),
           size(filter(tokens, x => x =!= "")).cast("long").as("n_tokens"))
         .groupBy(col("lang"))
@@ -93,7 +82,7 @@ object TextOps {
   val textTfidf: Q = Q(
     "q_text_tfidf",
     (s, d) => {
-      val docs = docsW(s, d)
+      val docs = Tables.documents(s, d)
       val tok = docs
         .select(col("doc_id"), explode(tokens).as("token"))
         .where(col("token") =!= "")
@@ -166,7 +155,7 @@ object TextOps {
                 .otherwise(lit(0L))))))
       def laneOf(c: org.apache.spark.sql.Column, shift: Int) =
         shiftright(c, shift).bitwiseAND(lit(0xFFFFL))
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(col("doc_id"), col("lang").as("labeled_lang"),
           packed.as("h"))
         .select(
@@ -225,7 +214,7 @@ object TextOps {
         .cast("long")
       val alpha = length(regexp_replace(col("text"), "[^a-z]", ""))
         .cast("long")
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"), col("n_chars"),
           nTok.as("n_tokens"),
@@ -263,7 +252,7 @@ object TextOps {
   val textFingerprint: Q = Q(
     "q_text_fingerprint",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"),
           md5(lower(trim(col("text")))).as("fingerprint"),
@@ -287,7 +276,7 @@ object TextOps {
   val textTokencount: Q = Q(
     "q_text_tokencount",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"),
           size(filter(split(lower(col("text")), " "), t => t =!= ""))
@@ -324,7 +313,7 @@ object TextOps {
   val textBpeTokens: Q = Q(
     "q_text_bpe_tokens",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"),
           size(expr(
@@ -344,7 +333,7 @@ object TextOps {
   val textNgramFreq: Q = Q(
     "q_text_ngram_freq",
     (s, d) =>
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(filter(tokens, t => t =!= "").as("toks"))
         // sequence(1, 0) is DESCENDING in Spark, not empty — a 1-token
         // doc would fabricate null bigrams without this guard.
@@ -400,7 +389,7 @@ object TextOps {
       def bucketOf(g: Column, r: Int): Column =
         ((g * lit(graft.functions.GramSketch.portableA(r))
           + lit(graft.functions.GramSketch.portableB(r))) % p) % CmsWidth
-      val tok = docsW(s, d)
+      val tok = Tables.documents(s, d)
         .select(explode(tokens).as("token"))
         .where(col("token") =!= "")
       // counters: ≤ depth×width rows no matter the corpus size
@@ -473,7 +462,7 @@ object TextOps {
   val textRepetition: Q = Q(
     "q_text_repetition",
     (s, d) => {
-      val tok = docsW(s, d)
+      val tok = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           explode(tokens).as("token"))
         .where(col("token") =!= "")
@@ -524,7 +513,7 @@ object TextOps {
   val textSourceOverlap: Q = Q(
     "q_text_source_overlap",
     (s, d) => {
-      val vocab = docsW(s, d)
+      val vocab = Tables.documents(s, d)
         .select(col("source"), explode(tokens).as("token"))
         .where(col("token") =!= "")
         .distinct()
@@ -677,7 +666,7 @@ object TextOps {
         .when(col("doc_id") % 4 === 2, lit("Straße Über "))
         .otherwise(lit("naïve niño "))
       val sraw = concat(pfx, substring(col("text"), 1, 16))
-      docsW(s, d)
+      Tables.documents(s, d)
         .select(
           col("doc_id"),
           graft.functions.NfcNormalize(s, sraw).as("nfc"),
@@ -719,7 +708,7 @@ object TextOps {
   val textUnigramLogprob: Q = Q(
     "q_text_unigram_logprob",
     (s, d) => {
-      val tok = docsW(s, d)
+      val tok = Tables.documents(s, d)
         .select(col("doc_id"), explode(tokens).as("token"))
         .where(col("token") =!= "")
       val cnt = tok.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -772,7 +761,7 @@ object TextOps {
     "q_text_bm25",
     (s, d) => {
       val terms = Seq("spark", "vector", "query")
-      val docs = docsW(s, d)
+      val docs = Tables.documents(s, d)
       val dl = docs.select(col("doc_id"),
         size(filter(tokens, t => t =!= "")).cast("double").as("dl"))
       val stats = dl.agg(
@@ -847,7 +836,7 @@ object TextOps {
   val dedupIncremental: Q = Q(
     "q_dedup_incremental",
     (s, d) => {
-      val docs = docsW(s, d)
+      val docs = Tables.documents(s, d)
         .select(col("doc_id"), lower(trim(col("text"))).as("norm_text"))
       val corpus = docs.where(col("doc_id") % 10 =!= 0)
         .groupBy(col("norm_text"))
@@ -890,7 +879,7 @@ object TextOps {
     "q_text_entropy",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val perChar = docsW(s, d)
+      val perChar = Tables.documents(s, d)
         .select(col("doc_id"),
           explode(split(lower(col("text")), "")).as("ch"))
         .where(col("ch") =!= "")
@@ -952,7 +941,7 @@ object TextOps {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val terms = Seq("spark", "vector", "query")
-      val docs = docsW(s, d)
+      val docs = Tables.documents(s, d)
       // lexical leg: BM25(k1=1.2, b=0.75) over the fixed query terms
       val dl = docs.select(col("doc_id"),
         size(filter(tokens, t => t =!= "")).cast("double").as("dl"))

@@ -137,6 +137,38 @@ class AggregatesSpec extends SparkSpec {
     }
   }
 
+  test("q_agg_weighted_median buckets prices past 2^31 and below zero " +
+      "like the plain single-window form") {
+    // An INT-cast bucket throws CAST_OVERFLOW under ANSI mode for a
+    // DECIMAL(12,2) price >= 2^31; the plain cumulative-window form has
+    // no such limit. Negative prices must land in ordered buckets too.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-wmedian")
+    try {
+      Seq(
+        ("A", -130.25, 1.0), ("A", -64.0, 2.0), ("A", -0.5, 1.0),
+        ("A", 10.0, 1.0), ("A", 3000000000.5, 10.0),
+        ("N", -200.75, 3.0), ("N", -63.99, 1.0), ("N", 0.0, 1.0),
+        ("N", 63.99, 1.0), ("N", 3000000000.5, 1.0),
+        ("R", 5.0, 1.0), ("R", 70.0, 1.0), ("R", 128.0, 2.0),
+        ("R", 2147483648.0, 1.0), ("R", 3000000000.5, 1.0))
+        .toDF("l_returnflag", "l_extendedprice", "l_quantity")
+        .write.parquet(s"$dir/lineitem.parquet")
+      spark.read.parquet(s"$dir/lineitem.parquet")
+        .createOrReplaceTempView("wm_lineitem")
+      val plain = spark.sql(Registry.byName("q_agg_weighted_median").oracle.get
+        .replace("FROM lineitem", "FROM wm_lineitem"))
+        .as[(String, Double)].collect().toSeq
+      assert(plain == Seq("A" -> 3000000000.5, "N" -> -63.99, "R" -> 128.0))
+      val got = Registry.byName("q_agg_weighted_median").fn(spark, dir.toString)
+        .as[(String, Double)].collect().toSeq
+      assert(got == plain)
+    } finally {
+      spark.catalog.dropTempView("wm_lineitem")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("CMS estimates never underestimate, stay within eps*N, and are partition-invariant") {
     import org.apache.spark.sql.functions._
     val rows = q("q_text_cms_topk").collect()

@@ -165,6 +165,23 @@ class IncrementalDedupSpec extends SparkSpec {
         "compaction changed index content")
       assert(q("q_dedup_incremental_near").collect().toSeq == advanced,
         "compaction changed query results")
+      // a compaction publisher killed after its verified stage leaves a
+      // manifest-carrying staging copy of the compacted generation with
+      // no _replaces.json yet; serving it beside the generations it
+      // copied would count every row twice
+      val docsDir = dir.resolve("ngram_docs")
+      val compacted = docsDir.toFile.list().filter(_.startsWith("gen_zcompact-")).head
+      val crashed = docsDir.resolve(s"$compacted.__staging__deadbeef")
+      org.apache.commons.io.FileUtils.copyDirectory(
+        docsDir.resolve(compacted).toFile, crashed.toFile)
+      java.nio.file.Files.delete(crashed.resolve("_replaces.json"))
+      val (d5, p5) = IncrementalDedup.indexFor(spark, sf)
+      assert(d5.count() == docsBefore && p5.count() == postsBefore,
+        "a crashed compaction's staging dir was served as a generation")
+      assert(q("q_dedup_incremental_near").collect().toSeq == advanced,
+        "a crashed compaction's staging dir changed query results")
+      assert(!dir.resolve("_commits").toFile.list().exists(_.contains("__staging__")),
+        "a staging dir was stamped committed")
       // compaction is retry-safe: same live set → publish-once no-op
       IncrementalDedup.compactIndex(spark, dir.toString)
       assert(IncrementalDedup.indexFor(spark, sf)._1.count() == docsBefore)

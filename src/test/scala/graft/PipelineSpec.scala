@@ -106,6 +106,27 @@ class PipelineSpec extends SparkSpec {
     df.unpersist()
   }
 
+  test("q_pipeline_curate keeps only the reliable checkpoint backing its result") {
+    // `exact` is superseded once `clean` has materialized; only `clean`
+    // backs the returned DataFrame
+    val want = q("q_pipeline_curate").collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-curate-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try {
+      assert(q("q_pipeline_curate").collect().toSeq == want)
+      val remaining = scala.util.Using.resource(
+        java.nio.file.Files.walk(dir)) { s =>
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("rdd-")).toSet
+      }
+      assert(remaining.size == 1,
+        s"expected one rdd-* checkpoint dir, found: $remaining")
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("q_pipeline_curate: stage seams — post-cut plan reads survivors only, " +
       "fixed exchange count, and stage rules hold end-to-end") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}

@@ -31,6 +31,15 @@ for literal in 'Rename.NONE' '__staging__'; do
   }
 done
 
+# Generation listing lives behind one module (engine/Generations.scala):
+# the modules that read generations may not list a root themselves.
+for f in engine/Snapshot.scala engine/JdbcExtract.scala streaming/ComposedPipeline.scala; do
+  if grep -qF 'listStatus' "src/main/scala/graft/$f"; then
+    echo "ci: listStatus in src/main/scala/graft/$f; list generations through Generations" >&2
+    exit 1
+  fi
+done
+
 echo "== ci: test =="
 sbt -batch test
 
