@@ -307,8 +307,8 @@ object Snapshot {
     * publisher leaves an unreferenced object dir that readers never
     * see and [[gcOrphanObjects]] reclaims. */
   def publishPointer(
-      spark: SparkSession, df: DataFrame, root: String, gen: String,
-      extras: Map[String, String] = Map.empty): RoundTrip = {
+      spark: SparkSession, df: DataFrame, root: String,
+      gen: String): RoundTrip = {
     val conf = spark.sparkContext.hadoopConfiguration
     val ptr = new org.apache.hadoop.fs.Path(s"$root/$PointersDir/$gen")
     val fs = ptr.getFileSystem(conf)
@@ -318,7 +318,7 @@ object Snapshot {
     val obj = new org.apache.hadoop.fs.Path(s"$root/$ObjectsDir/$objName")
     var committed = false
     try {
-      val rt = stage(spark, df, obj, extras)
+      val rt = stage(spark, df, obj, Map.empty)
       val body = s"""{"object":"$objName","rows":${rt.restoredRows}}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
       try {

@@ -79,28 +79,6 @@ object TextHash {
     size(filter(zip_with(sigA, sigB, (x, y) => x === y), b => b))
       .cast("double") / perms
 
-  /** Composed mirror of the portable SimHash kernel
-    * (functions.SimHashPortable / GramSketch.simhashPortable): per bit
-    * b, sum +tf when the affine-permutation sign of the portable token
-    * hash is up (`((g·A(b) + B(b)) mod P)·2 ≥ P`) else -tf. Caller
-    * supplies the exploded (portable-hash, tf) aggregate context; the
-    * spec uses this as the independent composed form the kernel must
-    * match bit for bit. */
-  def simhashBitSums(tokenHash: Column, tf: Column, bits: Int): Seq[Column] = {
-    val p = GramSketch.PortableP
-    (0 until bits).map { b =>
-      val sign = ((tokenHash * GramSketch.portableA(b)
-        + GramSketch.portableB(b)) % p) * 2 >= p
-      sum(when(sign, tf).otherwise(-tf)).as(s"_bit$b")
-    }
-  }
-
-  /** Combine the per-bit sum columns into the final fingerprint. */
-  def simhashFromBitSums(cols: Seq[Column]): Column =
-    cols.zipWithIndex.map { case (c, b) =>
-      when(c > 0, lit(1L << b)).otherwise(0L)
-    }.reduce(_ + _)
-
   /** Hamming distance between two SimHash fingerprints. */
   def hamming(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b)).cast("long")

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.engine.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -167,6 +167,36 @@ object Aggregates {
       count(*) AS n_cust
     FROM customer GROUP BY c_nationkey ORDER BY c_nationkey"""))
 
+  /** Histogram refinement, the distributed exact-quantile pattern of
+    * [[aggStats]] and [[aggWeightedMedian]]. Each row is bucketed by
+    * `FLOOR(value / 64)`: monotone in `value` with negatives included,
+    * and no INT-cast overflow for large decimals. One map-side-combined
+    * pass sums `mass` per (`group`, bucket) as `m`, beside any `extra`
+    * aggregates. A prefix window over that small histogram gives each
+    * bucket `pre`, the mass of the group's lower buckets, and `tot`, the
+    * group's mass. The buckets where `boundary(pre, m, tot)` holds are
+    * broadcast back onto a second narrow scan of the rows.
+    * @return the histogram (group, b, m, extras) and the rows of the
+    *   boundary buckets with their `pre` and `tot`, which the caller
+    *   refines exactly */
+  private def histogramRefine(
+      rows: DataFrame, group: String, value: String, mass: Column,
+      extra: Column*)(
+      boundary: (Column, Column, Column) => Column): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val withB = rows.withColumn("b", expr(s"FLOOR($value / 64)"))
+    val hist = withB.groupBy(col(group), col("b")).agg(mass.as("m"), extra: _*)
+    val wPre = Window.partitionBy(col(group)).orderBy(col("b"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val buckets = hist
+      .select(col(group), col("b"), col("m"),
+        coalesce(sum(col("m")).over(wPre), lit(0)).as("pre"),
+        sum(col("m")).over(Window.partitionBy(col(group))).as("tot"))
+      .where(boundary(col("pre"), col("m"), col("tot")))
+      .select(col(group), col("b"), col("pre"), col("tot"))
+    (hist, withB.join(broadcast(buckets), Seq(group, "b")))
+  }
+
   /** B18: order-total statistics. Sample stddev via the explicit
     * sum/sum-of-squares formula over exact decimal sums so both engines
     * do the identical IEEE double arithmetic (a plain stddev_samp
@@ -174,53 +204,39 @@ object Aggregates {
   val aggStats: Q = Q(
     "q_agg_stats",
     (s, d) => {
-      // Histogram refinement for the exact median (the
-      // [[aggWeightedMedian]] pattern): Spark's `median()` buffers every
-      // value with no partial aggregation, capping parallelism at the
-      // five priorities. Instead: (1) one map-side-combined pass over
-      // (priority, FLOOR(price / 64) bucket — monotone in price, signs
-      // included, as the prefix ranks need) carrying count/Σx/Σx²/
-      // min/max partials, from which every other statistic
-      // re-aggregates exactly; (2) the two 0-indexed target ranks of
-      // the interpolating median, r1 = (n−1) DIV 2 and r2 = n DIV 2,
-      // located in their buckets by a prefix window over the histogram;
-      // (3) a second narrow scan ranks inside only the ≤2 boundary
-      // buckets per priority. The midpoint 0.5·lo + 0.5·hi (exact
-      // halvings, one rounding add; ≡ lo when r1 = r2) equals the
-      // oracle's lo + (hi − lo)·0.5 bit for bit only when hi − lo is
-      // exact, which Sterbenz's lemma gives for lo ≤ hi ≤ 2·lo
-      // (adjacent order statistics of one sign within 2×, not
-      // subnormal) — true for o_totalprice. The decimal re-sums are
-      // exact (only the type widens), so the rewrite is oracle-checked
-      // against the unchanged single-pass SQL.
+      // The exact median by [[histogramRefine]]: Spark's `median()`
+      // buffers every value with no partial aggregation, capping
+      // parallelism at the five priorities. The histogram carries
+      // count/Σx/Σx²/min/max partials, from which every other statistic
+      // re-aggregates exactly; the boundary buckets are those holding
+      // the two 0-indexed target ranks of the interpolating median,
+      // r1 = (n−1) DIV 2 and r2 = n DIV 2, and only their rows are
+      // ranked. The midpoint 0.5·lo + 0.5·hi (exact halvings, one
+      // rounding add; ≡ lo when r1 = r2) equals the oracle's
+      // lo + (hi − lo)·0.5 bit for bit only when hi − lo is exact, which
+      // Sterbenz's lemma gives for lo ≤ hi ≤ 2·lo (adjacent order
+      // statistics of one sign within 2×, not subnormal) — true for
+      // o_totalprice. The decimal re-sums are exact (only the type
+      // widens), so the rewrite is oracle-checked against the unchanged
+      // single-pass SQL.
       import org.apache.spark.sql.expressions.Window
       val x = col("o_totalprice")
       val xd = Det.dec(x, 2)
-      val withB = Tables.orders(s, d)
-        .select(col("o_orderpriority"), col("o_totalprice"))
-        .withColumn("b", expr("FLOOR(o_totalprice / 64)"))
-      val hist = withB.groupBy(col("o_orderpriority"), col("b"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(Det.dec(x, 2, 28)).as("sumd"),
-          sum(xd * xd).as("s2b"),
-          min(x).as("mn"), max(x).as("mx"))
-      val wPre = Window.partitionBy(col("o_orderpriority")).orderBy(col("b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val boundary = hist
-        .select(col("o_orderpriority"), col("b"), col("cnt"),
-          coalesce(sum(col("cnt")).over(wPre), lit(0L)).as("pre"),
-          sum(col("cnt"))
-            .over(Window.partitionBy(col("o_orderpriority"))).as("n"))
-        .withColumn("r1", expr("(n - 1) DIV 2"))
-        .withColumn("r2", expr("n DIV 2"))
-        .where(col("pre") <= col("r2")
-          && col("pre") + col("cnt") - 1 >= col("r1"))
-        .select(col("o_orderpriority"), col("b"), col("pre"),
-          col("r1"), col("r2"))
+      def r1(n: Column) = call_function("div", n - 1, lit(2))
+      def r2(n: Column) = call_function("div", n, lit(2))
+      val (hist, refined) = histogramRefine(
+        Tables.orders(s, d).select(col("o_orderpriority"), x),
+        "o_orderpriority", "o_totalprice", count(lit(1)),
+        sum(Det.dec(x, 2, 28)).as("sumd"), sum(xd * xd).as("s2b"),
+        min(x).as("mn"), max(x).as("mx")) { (pre, cnt, n) =>
+        pre <= r2(n) && pre + cnt - 1 >= r1(n)
+      }
       val wIn = Window.partitionBy(col("o_orderpriority"), col("b"))
         .orderBy(x)
-      val med = withB.join(broadcast(boundary), Seq("o_orderpriority", "b"))
+      val med = refined
         .withColumn("rk", col("pre") + row_number().over(wIn) - 1)
+        .withColumn("r1", r1(col("tot")))
+        .withColumn("r2", r2(col("tot")))
         .where(col("rk") === col("r1") || col("rk") === col("r2"))
         .groupBy(col("o_orderpriority"))
         .agg(min(when(col("rk") === col("r1"), x)).as("lo"),
@@ -228,7 +244,7 @@ object Aggregates {
         .select(col("o_orderpriority"),
           (col("lo") * lit(0.5) + col("hi") * lit(0.5)).as("median_total"))
       hist.groupBy(col("o_orderpriority"))
-        .agg(sum(col("cnt")).as("n_orders"),
+        .agg(sum(col("m")).as("n_orders"),
           sum(col("sumd")).cast("double").as("sum_total"),
           sum(col("s2b")).as("s2dec"),
           min(col("mn")).as("min_total"),
@@ -832,26 +848,15 @@ object Aggregates {
     "q_agg_weighted_median",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val li = Tables.lineitem(s, d).select(col("l_returnflag"),
-        Det.dec(col("l_extendedprice")).as("p"),
-        Det.dec(col("l_quantity")).as("w"))
-        // FLOOR, not an INT cast: monotone in p with negatives included,
-        // and no CAST_OVERFLOW for a DECIMAL(12,2) price >= 2^31
-        .withColumn("b", expr("FLOOR(p / 64)"))
-      val hist = li.groupBy(col("l_returnflag"), col("b"))
-        .agg(sum(col("w")).as("m"))
-      val wPre = Window.partitionBy(col("l_returnflag")).orderBy(col("b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val boundary = hist
-        .select(col("l_returnflag"), col("b"), col("m"),
-          coalesce(sum(col("m")).over(wPre), lit(0)).as("pre"),
-          sum(col("m")).over(Window.partitionBy(col("l_returnflag")))
-            .as("tot"))
-        .where(col("pre") * 2 < col("tot")
-          && (col("pre") + col("m")) * 2 >= col("tot"))
-        .select(col("l_returnflag"), col("b"), col("pre"), col("tot"))
+      val (_, refined) = histogramRefine(
+        Tables.lineitem(s, d).select(col("l_returnflag"),
+          Det.dec(col("l_extendedprice")).as("p"),
+          Det.dec(col("l_quantity")).as("w")),
+        "l_returnflag", "p", sum(col("w"))) { (pre, m, tot) =>
+        pre * 2 < tot && (pre + m) * 2 >= tot
+      }
       val wIn = Window.partitionBy(col("l_returnflag")).orderBy(col("p"))
-      li.join(broadcast(boundary), Seq("l_returnflag", "b"))
+      refined
         .groupBy(col("l_returnflag"), col("p"), col("pre"), col("tot"))
         .agg(sum(col("w")).as("wt"))
         .withColumn("cum", col("pre") + sum(col("wt")).over(wIn))

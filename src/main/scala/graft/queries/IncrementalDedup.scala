@@ -306,14 +306,12 @@ object IncrementalDedup {
     }
   }
 
-  private def deadGens(s: SparkSession, root: String): Set[String] =
-    genDirs(s, root).flatMap(replacesOf(s, _)).toSet
-
   /** Live generations of one index table: the listing minus every
-    * present generation's replaces-list. */
+    * present generation's replaces-list. One listing of the root. */
   private[graft] def liveGens(s: SparkSession, root: String): Seq[String] = {
-    val dead = deadGens(s, root)
-    genDirs(s, root).filterNot(g =>
+    val present = genDirs(s, root)
+    val dead = present.flatMap(replacesOf(s, _)).toSet
+    present.filterNot(g =>
       dead.contains(new org.apache.hadoop.fs.Path(g).getName))
   }
 
@@ -473,23 +471,26 @@ object IncrementalDedup {
       case "" => buildIndex(s, d)
       case dir =>
         val (docsRoot, postRoot) = (s"$dir/ngram_docs", s"$dir/ngram_postings")
-        if (liveGens(s, docsRoot).isEmpty || liveGens(s, postRoot).isEmpty) {
-          val (docs, postings) = buildIndex(s, d)
-          publishGen(s, docs, docsRoot, "base")
-          publishGen(s, postings, postRoot, "base")
-          // the source record lands before the marker so a committed
-          // base is never un-auditable; create-if-absent keeps the
-          // first build's record under retries
-          writeSourceRecord(s, dir, d)
-          // same joint-visibility rule as advanceIndex: base becomes
-          // readable only once both tables are down (a crash in between
-          // self-heals here — the exists-no-op publishes re-run, then
-          // the marker lands)
-          commitLabel(s, docsRoot, "base")
-        }
+        def live() = (liveGens(s, docsRoot), liveGens(s, postRoot))
+        val listed = live()
+        val (docsGens, postGens) =
+          if (listed._1.nonEmpty && listed._2.nonEmpty) listed else {
+            val (docs, postings) = buildIndex(s, d)
+            publishGen(s, docs, docsRoot, "base")
+            publishGen(s, postings, postRoot, "base")
+            // the source record lands before the marker so a committed
+            // base is never un-auditable; create-if-absent keeps the
+            // first build's record under retries
+            writeSourceRecord(s, dir, d)
+            // same joint-visibility rule as advanceIndex: base becomes
+            // readable only once both tables are down (a crash in between
+            // self-heals here — the exists-no-op publishes re-run, then
+            // the marker lands)
+            commitLabel(s, docsRoot, "base")
+            live()
+          }
         verifySourceRecord(s, dir)
-        def readAll(root: String): DataFrame = {
-          val gens = liveGens(s, root)
+        def readAll(gens: Seq[String]): DataFrame = {
           // a generation is never visible without its manifest
           // (publishAtomic renames data + manifest as one unit), so a
           // missing manifest means a hand-built / torn directory
@@ -500,7 +501,7 @@ object IncrementalDedup {
           }
           s.read.parquet(gens: _*)
         }
-        (readAll(docsRoot), readAll(postRoot))
+        (readAll(docsGens), readAll(postGens))
     }
 
   /** The batch's gram view: (doc_id, n, bg), batch docs only. */

@@ -42,9 +42,9 @@ import graft.engine.Generations
   * [[graft.engine.Snapshot.applyChangelog]]), so any generation is a
   * consistent point-in-time table and retention/time-travel apply
   * unchanged. ComposedPipelineSpec pins crash-run ≡ clean-run
-  * bit-parity with the skip path actually taken; StreamScale's
-  * `composed` mode replays sf5 (50×) through a mid-run crash/restart
-  * and reports state flatness + drained lag (SCALE.md).
+  * bit-parity with the skip path actually taken; DriverRestartSpec
+  * SIGKILLs a forked driver running [[run]] mid-replay and requires the
+  * restarted driver to drain to the clean run's table.
   */
 object ComposedPipeline {
 
@@ -100,31 +100,6 @@ object ComposedPipeline {
     prev.fold(changes.drop("op"))(p => graft.engine.Snapshot.applyChangelog(
       p, changes, Seq("user_id", "session_seq"), "op"))
   }
-
-  /** Name of the publisher-identity stamp each generation carries (an
-    * `extras` file riding [[graft.engine.Snapshot.publishAtomic]]'s
-    * atomic commit, so it is visible iff the generation is). In a
-    * split-brain window two live drivers race the same batchId; the
-    * stamp records WHICH process's publish won — the evidence the
-    * zombie-fencing proof reads back (FaultInject `zombie`). */
-  val PublisherFile = "_publisher.json"
-
-  /** The pid recorded in a generation's publisher stamp, if present
-    * (generations published before the stamp existed have none). */
-  def publisherPid(s: SparkSession, root: String, batchId: Long): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/gen_$batchId/$PublisherFile")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val body =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    "\"pid\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body).map(_.group(1).toLong)
-  }
-
-  private def publisherStamp: Map[String, String] =
-    Map(PublisherFile ->
-      s"""{"pid":${ProcessHandle.current().pid()}}""")
 
   /** Idempotent per-batch CDC apply: merge this batch's closed
     * sessions into the previous generation and publish `gen_<batchId>`
@@ -225,13 +200,6 @@ object ComposedPipeline {
     *   ([[graft.engine.Bucketed.publishGeneration]]) — the
     *   streaming-maintained serving table; read it back with
     *   [[servedSnapshot]]. Default keeps the plain-parquet shape.
-    * @param holdBeforeApply callback invoked with each batchId AFTER
-    *   the batch's stateful plan fully executed (state committed,
-    *   offsets WAL'd) but BEFORE its generation publishes — a blocking
-    *   callback PARKS the driver inside the at-least-once window, the
-    *   zombie-fencing proof's stall point (a network-partitioned
-    *   driver frozen mid-batch while a supervisor starts its
-    *   replacement; FaultInject `zombie`).
     * @param pointerCommit when true, generations commit via the
     *   rename-free pointer protocol
     *   ([[graft.engine.Snapshot.publishPointer]]) — the
@@ -247,7 +215,6 @@ object ComposedPipeline {
       crashBeforeApply: Option[Long] = None,
       tailWhile: Option[() => Boolean] = None,
       bucketServe: Option[Int] = None,
-      holdBeforeApply: Option[Long => Unit] = None,
       pointerCommit: Boolean = false): RunStats = {
     require(!(pointerCommit && bucketServe.nonEmpty),
       "pointerCommit and bucketServe are mutually exclusive")
@@ -258,11 +225,9 @@ object ComposedPipeline {
           graft.engine.Bucketed.publishGeneration(
             s, df, s"$snapRoot/$gen", "user_id", b))
         case None if pointerCommit => (Generations.Pointer, (df, gen) =>
-          graft.engine.Snapshot.publishPointer(
-            s, df, snapRoot, gen, publisherStamp))
+          graft.engine.Snapshot.publishPointer(s, df, snapRoot, gen))
         case None => (Generations.Rename, (df, gen) =>
-          graft.engine.Snapshot.publishAtomic(
-            s, df, s"$snapRoot/$gen", publisherStamp))
+          graft.engine.Snapshot.publishAtomic(s, df, s"$snapRoot/$gen"))
       }
     import s.implicits._
     // transformWithState requires the RocksDB provider (state-v2
@@ -333,7 +298,6 @@ object ComposedPipeline {
           // count() ran the stateful plan: state partitions are
           // committed for this batch — crashing HERE leaves committed
           // state but no generation (the pre-publish window)
-          holdBeforeApply.foreach(_(id))
           if (crashBeforeApply.contains(id)) throw new InjectedCrash(id)
           if (n > 0) {
             if (applyGeneration(s, snapRoot, layout, batch, id)(publish))

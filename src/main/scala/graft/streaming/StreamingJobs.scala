@@ -147,8 +147,8 @@ object StreamingJobs {
               state.update(st)
               // Clamp the close-timeout to AFTER the current watermark:
               // a micro-batch spanning more than the gap (normal in
-              // catch-up/backfill — the sf5 StreamScale probe hit it on
-              // its first real run, r9) advances the watermark past
+              // catch-up/backfill — an sf5 replay hit it on its first
+              // real run, r9) advances the watermark past
               // last+gap for users whose events sit early in the batch,
               // and an unclamped setTimeoutTimestamp then throws
               // IllegalArgumentException and KILLS THE QUERY. Clamped,

@@ -10,34 +10,11 @@ import org.apache.spark.sql.functions._
   * batch — and a restart from the checkpoint. The end-state must be
   * bit-identical to a clean run's: the re-executed batch's apply must
   * SKIP (its generation is the processed marker), never double-apply.
-  * StreamScale's `composed` mode replays the same pipeline at sf5
-  * (SCALE.md r15). */
+  * DriverRestartSpec runs the same pipeline in a forked driver JVM and
+  * SIGKILLs it mid-replay. */
 class ComposedPipelineSpec extends SparkSpec {
 
-  /** 40 users × 50 events each, 2 sessions per user (a >30 min gap
-    * mid-stream), plus a late no-op tail that pushes the watermark far
-    * enough to close every second session. */
-  private def seedFeed(feedDir: String): Long = {
-    val base = java.sql.Timestamp.valueOf("2024-01-01 08:00:00").getTime
-    val parts = 2
-    val recs = (0 until 40).flatMap { u =>
-      (0 until 50).map { i =>
-        // 25 events spaced 1 min, then a 2 h gap, then 25 more
-        val ts = base + (if (i < 25) i * 60000L
-          else 2 * 3600000L + i * 60000L)
-        (ts, u.toLong, i.toLong, if (i % 7 == 0) "purchase" else "click")
-      }
-    } :+ ((base + 12 * 3600000L, 999L, 9999L, "view"))
-    // per-partition buffers in ts order (the sessionizer's documented
-    // per-user arrival assumption)
-    recs.sortBy(r => (r._1, r._3)).groupBy(r => (r._2 % parts).toInt)
-      .toSeq.sortBy(_._1)
-      .foreach { case (p, rs) =>
-        FeedSource.append(feedDir, p, rs.map(r =>
-          (r._1, r._2.toString, s"${r._2 * 1000 + r._3},${r._4},1.5")))
-      }
-    recs.size.toLong
-  }
+  import FeedFixture.seedFeed
 
   test("crash between generation publish and batch commit: restart " +
       "skips the re-apply and the snapshot equals a clean run's") {

@@ -30,23 +30,8 @@ class CrossProcessPublishSpec extends SparkSpec {
 
   private def forkRacer(
       mode: String, tag: String, ready: String, go: String,
-      dest: Seq[String]): Process = {
-    val javaBin = Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    // inherit the parent's --add-opens set (Spark 4 on JDK 17 needs it
-    // when SparkSession starts outside spark-submit)
-    val inherited = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments
-    val opens = scala.jdk.CollectionConverters
-      .ListHasAsScala(inherited).asScala.toSeq
-      .sliding(2).collect {
-        case Seq("--add-opens", v) => Seq("--add-opens", v)
-      }.flatten.toSeq
-    val cmd = Seq(javaBin, "-Xmx1g", "-Dspark.ui.enabled=false") ++ opens ++
-      Seq("-cp", System.getProperty("java.class.path"),
-        "graft.RacePublish", mode, tag, ready, go) ++ dest
-    new ProcessBuilder(cmd: _*).inheritIO().start()
-  }
+      dest: Seq[String]): Process =
+    ForkedJvm.start("graft.RacePublish", Seq(mode, tag, ready, go) ++ dest)
 
   /** Fork two racers, release them together, return (exitA, exitB). */
   private def race(

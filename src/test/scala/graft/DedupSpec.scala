@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{TextHash, Vectors}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -423,6 +424,29 @@ class DedupSpec extends SparkSpec {
     grams.unpersist()
   }
 
+  /** Composed mirror of the portable SimHash kernel
+    * (functions.SimHashPortable / GramSketch.simhashPortable), the
+    * independent form the kernel must match bit for bit: per bit b, sum
+    * +tf when the affine-permutation sign of the portable token hash is
+    * up (`((g·A(b) + B(b)) mod P)·2 ≥ P`) else -tf, over the exploded
+    * (portable-hash, tf) aggregate context. */
+  private def simhashBitSums(
+      tokenHash: Column, tf: Column, bits: Int): Seq[Column] = {
+    import graft.functions.GramSketch
+    val p = GramSketch.PortableP
+    (0 until bits).map { b =>
+      val sign = ((tokenHash * GramSketch.portableA(b)
+        + GramSketch.portableB(b)) % p) * 2 >= p
+      sum(when(sign, tf).otherwise(-tf)).as(s"_bit$b")
+    }
+  }
+
+  /** Combine the per-bit sum columns into the final fingerprint. */
+  private def simhashFromBitSums(cols: Seq[Column]): Column =
+    cols.zipWithIndex.map { case (c, b) =>
+      when(c > 0, lit(1L << b)).otherwise(0L)
+    }.reduce(_ + _)
+
   test("native portable simhash equals the composed explode/groupBy form bit for bit") {
     // real fixture docs, not just the synthetic frame — covers unicode,
     // repeated tokens and long texts through both paths
@@ -434,11 +458,11 @@ class DedupSpec extends SparkSpec {
         .groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("tf"))
         .withColumn("th", functions.RollingHash(spark, col("token")))
-      val bitSums = TextHash.simhashBitSums(col("th"), col("tf"), 60)
+      val bitSums = simhashBitSums(col("th"), col("tf"), 60)
       tok.groupBy(col("doc_id"))
         .agg(bitSums.head, bitSums.tail: _*)
         .select(col("doc_id"),
-          TextHash.simhashFromBitSums(
+          simhashFromBitSums(
             (0 until 60).map(b => col(s"_bit$b"))).as("simhash"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }

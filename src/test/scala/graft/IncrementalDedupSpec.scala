@@ -2,6 +2,7 @@ package graft
 
 import graft.queries.IncrementalDedup
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class IncrementalDedupSpec extends SparkSpec {
 
@@ -587,4 +588,59 @@ class IncrementalDedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == brute, s"missing=${brute -- got} extra=${got -- brute}")
   }
+
+  test("loading a folded index lists each table root once and the commit " +
+      "markers at most once per table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-gramidx-list")
+    try {
+      spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
+      IncrementalDedup.indexFor(spark, sf)
+      val batch = engine.Tables.documents(spark, sf)
+        .where(col("doc_id") % 10 === 0)
+        .select(col("doc_id"),
+          graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
+        .where(size(col("bg")) > 0)
+        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
+      IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
+      CountingFileSystem.install(spark.sparkContext.hadoopConfiguration)
+      spark.conf.set(IncrementalDedup.IndexDirConf,
+        s"${CountingFileSystem.Scheme}://$dir")
+      CountingFileSystem.listings.clear()
+      val (idxDocs, idxPost) = IncrementalDedup.indexFor(spark, sf)
+      val listed = CountingFileSystem.listings.asScala.toMap
+        .map { case (name, n) => name -> n.get() }
+      assert(listed.get("ngram_docs").contains(1) &&
+        listed.get("ngram_postings").contains(1),
+        s"each table root must be listed once: $listed")
+      assert(listed.getOrElse("_commits", 0) <= 2,
+        s"the commit markers are listed at most once per table: $listed")
+      assert(idxDocs.inputFiles.nonEmpty && idxPost.inputFiles.nonEmpty)
+    } finally {
+      spark.conf.unset(IncrementalDedup.IndexDirConf)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+}
+
+/** Local-disk filesystem under scheme `countfs` that counts
+  * `listStatus` calls by the listed directory's name. */
+class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = CountingFileSystem.Scheme
+  override def getUri: java.net.URI = CountingFileSystem.NameUri
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingFileSystem.listings.computeIfAbsent(f.getName,
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object CountingFileSystem {
+  val Scheme = "countfs"
+  val NameUri: java.net.URI = java.net.URI.create(s"$Scheme:///")
+  val listings = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]
+
+  def install(conf: org.apache.hadoop.conf.Configuration): Unit =
+    conf.set(s"fs.$Scheme.impl", classOf[CountingFileSystem].getName)
 }

@@ -40,6 +40,23 @@ for f in engine/Snapshot.scala engine/JdbcExtract.scala streaming/ComposedPipeli
   fi
 done
 
+# The set of mains is closed: every entry point under src/main is run
+# by a spec or named in a reproducible SCALE.md record. A new harness
+# main goes under src/test, next to the spec that forks it.
+allowed_mains=' Bench BenchOne Diag GenData RacePublish Run TrainBpe Verify '
+mains=$(find src/main -name '*.scala' -exec awk '
+  match($0, /(^|[^A-Za-z0-9_])object[[:space:]]+[A-Za-z0-9_]+/) {
+    o = substr($0, RSTART, RLENGTH); sub(/.*object[[:space:]]+/, "", o) }
+  /(^|[^A-Za-z0-9_])def[[:space:]]+main[[:space:]]*\(/ ||
+  /extends[[:space:]]+App([^A-Za-z0-9_]|$)/ { print o }' {} + | sort -u)
+for m in $mains; do
+  case "$allowed_mains" in
+    *" $m "*) ;;
+    *) echo "ci: object $m under src/main declares a main outside the fixed list:$allowed_mains" >&2
+       exit 1 ;;
+  esac
+done
+
 echo "== ci: test =="
 sbt -batch test
 
