@@ -315,7 +315,7 @@ object Diag {
     * steady probe latency vs live generation count, before/after
     * compactIndex + pruneIndex. Results are invariant across every
     * fold/compact/prune step by construction (the probe treats the
-    * batch as authoritative); only the postings-scan cost varies —
+    * batch as authoritative); only the index-scan cost varies —
     * exactly the variable under measurement. */
   private def compact(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -335,11 +335,8 @@ object Diag {
         SparkEntry.queries("q_dedup_incremental_near")(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
-    def gensLive: Int = {
-      val p = new java.io.File(s"$idxDir/ngram_postings")
-      // committed live gens only — mirror the reader
-      IncrementalDedup.liveGens(spark, p.toString).size
-    }
+    def gensLive: Int =
+      IncrementalDedup.liveGens(spark, s"$idxDir/ngram_docs").size
     def steady(label: String): Unit = {
       val warm = probeOnce()
       val t = probeOnce()

@@ -27,8 +27,13 @@ object Sessions {
     * processes, that broadcasts ship, and that no path relies on
     * driver-JVM-only state. `SPARK_GRAFT_MASTER=local-cluster[2,8,4096]`
     * runs the same entry points with two forked executor JVMs (Spark's
-    * standalone worker in-process, executors out-of-process — needs
-    * SPARK_HOME exported so the worker can build the executor command).
+    * standalone worker in-process, executors out-of-process). The
+    * worker builds the executor command from a Spark home holding
+    * `jars` (`SPARK_HOME`, or the working directory when it is unset)
+    * and needs `SPARK_SCALA_VERSION` set, or every executor launch
+    * fails and is retried in a loop; it writes the executors' work
+    * dirs under that home (`<home>/work`), so run from a scratch dir
+    * whose `jars` links to Spark's (ExecutorLossSpec does this).
     * The repo's compiled classes are appended to the executor classpath
     * from this class's own code-source location, so the override works
     * from `java -cp target/...` and from sbt alike. */

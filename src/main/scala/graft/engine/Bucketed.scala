@@ -40,17 +40,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so a changed source builds a fresh layout instead of serving the
   * stale copy, and [[expire]] reclaims abandoned ones.
   *
-  * `n` defaults to the session's shuffle-partition count (the bucket
-  * count is both the layout's write parallelism and every later
-  * join's task count); a cluster sets hundreds–thousands via
-  * `spark.graft.bucket.n` so each bucket stays executor-memory-sized
-  * at the target data scale.
+  * `n` is the session's shuffle-partition count: the bucket count is
+  * both the layout's write parallelism and every later join's task
+  * count, and a cluster already sizes `spark.sql.shuffle.partitions`
+  * so each task's slice stays executor-memory-sized.
   */
 object Bucketed {
   /** Root directory for published bucketed layouts. */
   val DirConf = "spark.graft.bucket.dir"
-  /** Bucket count for newly published layouts. */
-  val NConf = "spark.graft.bucket.n"
 
   /** The bucketed copy of `df`, clustered on `key` — published on
     * first use, registered from the published files on a fresh
@@ -69,17 +66,13 @@ object Bucketed {
   def table(
       s: SparkSession, sfDir: String, name: String,
       df: => DataFrame, key: String): DataFrame = {
-    // Default the bucket count to the session's shuffle parallelism:
-    // the bucket count IS the layout's write parallelism and every
-    // later join's task count, so a small fixed default strangles both
-    // at scale. (Locally the sf20 build is disk-write-bound — 360 s at
-    // n=8 vs 337 s at n=32 through one virtual disk — but on a cluster
-    // write parallelism is spindles/objects, and the JOIN side's task
-    // count always tracks n.) A cluster still sets the conf so each
-    // bucket stays executor-memory-sized at its data scale.
-    val n = s.conf.getOption(NConf).map(_.toInt)
-      .getOrElse(s.conf.get("spark.sql.shuffle.partitions").toInt)
-    require(n > 0, s"$NConf must be positive: $n")
+    // The bucket count is the session's shuffle parallelism: it IS the
+    // layout's write parallelism and every later join's task count, so
+    // a small fixed count strangles both at scale. (Locally the sf20
+    // build is disk-write-bound — 360 s at n=8 vs 337 s at n=32 through
+    // one virtual disk — but on a cluster write parallelism is
+    // spindles/objects, and the JOIN side's task count always tracks n.)
+    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
     // Honor the written per-bucket sortBy order at scan time, so a
     // sort-merge join over two layouts needs neither exchange NOR
     // sort. DELIBERATELY session-global (documented in SCALE.md):

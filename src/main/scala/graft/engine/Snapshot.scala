@@ -275,7 +275,7 @@ object Snapshot {
     * which is the store's conditional-create (atomic on HDFS; S3A maps
     * it to a conditional PUT). Throws Hadoop's
     * FileAlreadyExistsException when the path exists. */
-  private def createExclusive(
+  private[graft] def createExclusive(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, body: Array[Byte]): Unit = {
     fs.mkdirs(p.getParent)

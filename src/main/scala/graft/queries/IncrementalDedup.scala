@@ -15,17 +15,18 @@ import org.apache.spark.sql.functions._
   * ~10⁸-posting table daily is the single biggest avoidable cost in the
   * pipeline (the reference's whole design is incremental snapshots
   * against a persistent store: backup.sh:76 timestamped dumps). This
-  * module publishes the BASE corpus's 5-gram postings once (an atomic,
-  * manifest-carrying generation — the same C110 publish-once pattern as
-  * the ANN index), and the batch query probes that artifact:
+  * module publishes the BASE corpus's sorted 5-gram arrays once (an
+  * atomic, manifest-carrying generation — the same C110 publish-once
+  * pattern as the ANN index), and the batch query probes the postings
+  * derived from that artifact:
   *
   *  - `q_dedup_incremental_near`: exact global (cross-source) 5-gram
   *    Jaccard pairs INVOLVING at least one batch doc (batch×base and
   *    batch×batch). The base corpus's text is never re-read, its grams
   *    never re-hashed, its postings never re-sharded: candidate
   *    generation joins the batch's ranked prefix grams against the
-  *    index postings scan, and the re-score fetches gram arrays for
-  *    the output-bound candidate set only.
+  *    postings exploded from the index scan, and the re-score fetches
+  *    gram arrays for the output-bound candidate set only.
   *
   * Exactness of the probe (Bayardo prefix filter, batch side): a pair
   * with jaccard ≥ t has n_common ≥ t·max(na, nb) ≥ t·n_batch, so its
@@ -42,11 +43,11 @@ import org.apache.spark.sql.functions._
   * keeps a pair iff its maximum possible score passes: min(n) ≥
   * t·max(n) is implied by jaccard ≥ t.
   *
-  * At 100 TB: the index postings land as a partitioned generation; a
-  * cluster deployment buckets them by `g` so the candidate join
-  * co-locates without re-sharding the index, and only the batch side
-  * shuffles. Locally the probe streams the postings scan once behind
-  * the broadcast key semi-filter ([[ProbeKeyBroadcastConf]]).
+  * At 100 TB: a cluster deployment buckets the index postings by `g`
+  * ([[BucketPostingsConf]]) so the candidate join co-locates without
+  * re-sharding the index, and only the batch side shuffles. Locally
+  * the probe streams the index scan once behind the broadcast key
+  * semi-filter ([[ProbeKeyBroadcastConf]]).
   * Measured sf20 (BenchOne iter2+, 8g): probe 3.8–4.8 s vs 15.6 s
   * from-scratch global recompute, plus a one-time ~11 s index
   * build+publish — and the probe's scaling term is the batch, not the
@@ -62,11 +63,11 @@ object IncrementalDedup {
   private[graft] val BatchMod = 10L
 
   /** Conf key: when set, the base-corpus gram index PUBLISHES under
-    * this directory on first use (two atomic generations: `ngram_docs`
-    * with per-doc sorted gram arrays for re-scoring, `ngram_postings`
-    * exploded per gram for candidate generation) and later invocations
-    * LOAD it instead of rebuilding. Unset (the default, and what the
-    * driver's Verify runs): the index tables are computed inline —
+    * this directory on first use (atomic generations of `ngram_docs`,
+    * per-doc sorted gram arrays; the postings the candidate join probes
+    * are derived from them at read time, [[postingsOf]]) and later
+    * invocations LOAD it instead of rebuilding. Unset (the default, and
+    * what `graft.Verify` runs): the index is computed inline —
     * the probe plan downstream is identical either way, and
     * IncrementalDedupSpec proves load ≡ inline bit-identically. */
   private[graft] val IndexDirConf = "spark.graft.dedup.indexDir"
@@ -82,132 +83,36 @@ object IncrementalDedup {
       .where(col("doc_id") % BatchMod =!= 0)
       .where(size(col("bg")) > 0)
       .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
-    val postings = docs
-      .select(explode(col("bg")).as("g"), col("doc_id"), col("n"))
-    (docs, postings)
+    (docs, postingsOf(docs))
   }
 
-  /** The index is LOG-STRUCTURED: each of `ngram_docs/` and
-    * `ngram_postings/` holds atomic generation dirs `gen_<label>`
-    * (base build = `gen_base`; each [[advanceIndex]] adds one), and a
-    * reader unions all generations. That is what makes the APPEND step
-    * batch-sized: folding today's processed batch into the index
-    * publishes only the batch's own rows — yesterday's ~10⁸ postings
-    * are never rewritten or re-sharded (the LSM append discipline;
-    * Iceberg/Delta do the same at the file-manifest level). Labels are
-    * the dedup against double-folding: a generation per batch label,
-    * publish-once, racing publishers lose cleanly. A compactor (union
-    * all gens → one, swap via a live-set manifest) is the documented
-    * follow-on once generation COUNT matters; at a daily cadence that
-    * is ~365 parquet dirs/year — a trivial union for a reader. */
+  /** Postings (g, doc_id, n) of a gram view, one row per (doc, gram).
+    * Always derived, never stored: a stored copy would be a second
+    * table per generation, and the two renames of a fold would then
+    * need a joint commit of their own. */
+  private def postingsOf(docs: DataFrame): DataFrame =
+    docs.select(explode(col("bg")).as("g"), col("doc_id"), col("n"))
+
+  /** The index is LOG-STRUCTURED: `<indexDir>/ngram_docs/` holds atomic
+    * generation dirs `gen_<label>` (base build = `gen_base`; each
+    * [[advanceIndex]] adds one), and a reader unions the live ones.
+    * That is what makes the APPEND step batch-sized: folding today's
+    * processed batch publishes only the batch's own rows — yesterday's
+    * index is never rewritten or re-sharded (the LSM append discipline;
+    * Iceberg/Delta do the same at the file-manifest level). A
+    * generation is ONE `publishAtomic`, so its [[graft.engine.PublishOnce]]
+    * rename is its only visibility event: a crashed fold leaves either
+    * nothing visible or the whole generation. Labels are the dedup
+    * against double-folding: publish-once per label, racing publishers
+    * lose cleanly. Other entries of the index dir (the postings tables
+    * and commit markers of layouts that stored postings too) are never
+    * listed, read or deleted. */
   private val GenPrefix = "gen_"
+  private val DocsTable = "ngram_docs"
 
-  /** Cross-TABLE atomicity (r11 verdict wrong #1): one fold writes a
-    * generation into BOTH `ngram_docs/` and `ngram_postings/`, but the
-    * two `publishAtomic` renames are two separate visibility events — a
-    * crash between them would leave docs visible with no matching
-    * postings, and a probe in that window silently MISSES pairs
-    * (candidates come from postings; the re-score lookup alone never
-    * creates them). The per-table rename is therefore NOT the reader's
-    * visibility event: a `gen_<label>` in either table is invisible to
-    * every reader (probe, compactor, pruner) until the per-label commit
-    * marker `<indexDir>/_commits/<label>` exists, and the writer
-    * creates that marker only AFTER both tables' generations are down.
-    * The marker is one create-if-absent file — one visibility event for
-    * the pair of tables, the same discipline `_replaces.json` applies
-    * to compaction (one rename swaps copy + hiding in together).
-    * Crash before the marker: both gens invisible; the label's retry
-    * re-runs `advanceIndex`, whose publishes no-op via
-    * SnapshotExistsException and then commit — self-healing,
-    * exactly-once. Crash after: both visible. Never torn. */
-  private val CommitsDir = "_commits"
-
-  private def commitsPath(tableRoot: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(tableRoot).getParent, CommitsDir)
-
-  private def committedLabels(s: SparkSession, tableRoot: String)
-      : Set[String] = {
-    val p = commitsPath(tableRoot)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName).toSet
-  }
-
-  private def commitLabel(
-      s: SparkSession, tableRoot: String, label: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(commitsPath(tableRoot), label)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    try {
-      val out = fs.create(p, false)
-      out.close()
-    } catch {
-      // a marker is content-free; racing committers of the same label
-      // are publishing identical facts, so the loser is a no-op
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      case _: org.apache.hadoop.fs.PathExistsException => ()
-    }
-  }
-
-  /** The sibling index table's root (docs ⇄ postings) — grandfathering
-    * needs to know whether a label's OTHER half is down too. */
-  private def siblingRoot(root: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getName match {
-      case "ngram_docs" =>
-        Some(new org.apache.hadoop.fs.Path(p.getParent, "ngram_postings")
-          .toString)
-      case "ngram_postings" =>
-        Some(new org.apache.hadoop.fs.Path(p.getParent, "ngram_docs")
-          .toString)
-      case _ => None
-    }
-  }
-
-  /** Visible ([[graft.engine.Generations]]) AND committed generations —
-    * the single choke point that makes uncommitted (possibly torn)
-    * generations invisible to every reader path: probe unions,
-    * compaction listings, replaces-lists, prune sweeps.
-    *
-    * Legacy grandfathering (ADVICE r13 medium): layouts built before
-    * the commit markers existed have committed-by-construction
-    * generations with no marker — a committed-only listing would make
-    * every folded day-generation (and every compacted gen, whose
-    * replaces-lists would stop being honored) permanently invisible,
-    * the very silent-wrong-data class the markers prevent. An unmarked
-    * generation is therefore stamped committed ON SIGHT iff the marker
-    * invariant it encodes already holds: its own manifest is present
-    * AND its sibling-table half is down too (same label dir in the
-    * other table) — the exact neither-or-both fact the writer's marker
-    * would have asserted. Compacted gens (`zcompact-*`) are
-    * content-preserving per table and commit on their own rename by
-    * design (see [[compactTable]]), so they grandfather without a
-    * sibling check. A genuinely torn legacy crash (one table only,
-    * non-compact) stays invisible and self-heals through the retry
-    * path, exactly like a post-marker crash. */
-  private def genDirs(s: SparkSession, root: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    lazy val committed = committedLabels(s, root)
-    def complete(genDir: String): Boolean = fs.exists(
-      new org.apache.hadoop.fs.Path(genDir, graft.engine.Snapshot.ManifestFile))
+  private def genDirs(s: SparkSession, root: String): Seq[String] =
     graft.engine.Generations.names(s, root, graft.engine.Generations.Rename,
-        _.startsWith(GenPrefix))
-      .filter { name =>
-        val label = name.stripPrefix(GenPrefix)
-        committed.contains(label) || {
-          // grandfather: both halves complete (or content-preserving
-          // compact) ⇒ stamp the marker the legacy writer never wrote
-          val ok = complete(s"$root/$name") &&
-            (label.startsWith("zcompact-") ||
-              siblingRoot(root).exists(sib => complete(s"$sib/$name")))
-          if (ok) commitLabel(s, root, label)
-          ok
-        }
-      }
-      .map(name => s"$root/$name")
-  }
+      _.startsWith(GenPrefix)).map(name => s"$root/$name")
 
   private def publishGen(
       s: SparkSession, df: DataFrame, root: String, label: String,
@@ -220,56 +125,31 @@ object IncrementalDedup {
   }
 
   /** Fold an already-processed batch INTO the index as one new
-    * generation per table — the daily index-maintenance step that
-    * closes the incremental loop (probe today, fold tonight, tomorrow
-    * probes base+today without recomputing either). `docs` is the
-    * batch's gram view (doc_id, n, bg); cost is batch-sized.
-    * Publish-once per `label`: a second fold under the same label is
-    * a no-op (exactly-once maintenance even under retries), so pick
-    * labels that name the batch (a date, a crawl id).
-    *
-    * The two per-table publishes become VISIBLE as one event: readers
-    * ignore both until the label's commit marker lands (see
-    * [[CommitsDir]]), so a crash between the renames can never serve a
-    * docs generation whose postings are missing. */
+    * generation — the daily index-maintenance step that closes the
+    * incremental loop (probe today, fold tonight, tomorrow probes
+    * base+today without recomputing either). `docs` is the batch's gram
+    * view (doc_id, n, bg); cost is batch-sized. Exactly once per
+    * `label`, so pick labels that name the batch (a date, a crawl id):
+    * a second fold under a label is a no-op, both while its generation
+    * is present (publish-once) and once a compaction has replaced it
+    * (the present generations' replaces-lists name it), pruned or not. */
   def advanceIndex(
       s: SparkSession, dir: String, label: String, docs: DataFrame): Unit = {
     require(label.matches("[A-Za-z0-9_-]+"), s"unsafe label: $label")
     require(label != "base", "label 'base' is reserved for the base build")
-    // Label-reuse guard (ADVICE r13): a marker WITHOUT both generation
-    // dirs means the label was pruned (or a prune crashed midway). A
-    // fold reusing it would be visible from its FIRST per-table rename
-    // (the marker already exists) — a crash between the two publishes
-    // then serves a docs gen with no postings, re-opening the exact
-    // torn window the markers close. Labels name batches; a pruned
-    // label is spent.
-    val hconf = s.sparkContext.hadoopConfiguration
-    val docsGen = new org.apache.hadoop.fs.Path(
-      s"$dir/ngram_docs/$GenPrefix$label")
-    val postGen = new org.apache.hadoop.fs.Path(
-      s"$dir/ngram_postings/$GenPrefix$label")
-    val fs = docsGen.getFileSystem(hconf)
-    if (committedLabels(s, s"$dir/ngram_docs").contains(label) &&
-        (!fs.exists(docsGen) || !fs.exists(postGen)))
-      throw new IllegalStateException(
-        s"index label '$label' has a commit marker but its generation " +
-          "dir(s) are gone — the label was pruned and cannot be reused " +
-          "(a reused label is visible from its first per-table publish, " +
-          "re-opening the torn-fold window). Pick a fresh label.")
-    val d = docs.select(col("doc_id"), col("n"), col("bg"))
-    publishGen(s, d, s"$dir/ngram_docs", label)
-    publishGen(s, d.select(explode(col("bg")).as("g"),
-      col("doc_id"), col("n")), s"$dir/ngram_postings", label)
-    commitLabel(s, s"$dir/ngram_docs", label)
+    val root = s"$dir/$DocsTable"
+    if (genDirs(s, root).flatMap(replacesOf(s, _)).contains(GenPrefix + label))
+      return
+    publishGen(s, docs.select(col("doc_id"), col("n"), col("bg")), root, label)
     // Auto-compaction (VERDICT r13 next #6): the r13 measurement shows
     // first-pass planning cost growing with generation COUNT; the
     // policy point was manual. Conf-gated threshold: once the live
-    // generation count reaches it, fold — compactTable's digest-named
+    // generation count reaches it, fold — compactIndex's digest-named
     // publish-once target makes a retried fold that re-crosses the
-    // threshold a no-op (and post-compact the count is 1, under any
-    // sane threshold, so the retry never even triggers it).
+    // threshold a no-op (and a retried fold of a compacted label
+    // returns above, before reaching this check).
     val thr = s.conf.get(AutoCompactConf, "0").toInt
-    if (thr > 0 && liveGens(s, s"$dir/ngram_docs").size >= thr)
+    if (thr > 0 && liveGens(s, root).size >= thr)
       compactIndex(s, dir)
   }
 
@@ -306,8 +186,8 @@ object IncrementalDedup {
     }
   }
 
-  /** Live generations of one index table: the listing minus every
-    * present generation's replaces-list. One listing of the root. */
+  /** Live generations of the index: the listing minus every present
+    * generation's replaces-list. One listing of the root. */
   private[graft] def liveGens(s: SparkSession, root: String): Seq[String] = {
     val present = genDirs(s, root)
     val dead = present.flatMap(replacesOf(s, _)).toSet
@@ -315,42 +195,32 @@ object IncrementalDedup {
       dead.contains(new org.apache.hadoop.fs.Path(g).getName))
   }
 
-  /** Compact one table's live generations into a single new
-    * generation whose `_replaces.json` names the inputs — one atomic
-    * publish swaps both facts in for every reader. Safe against a
-    * CONCURRENT [[advanceIndex]]: a generation published after the
-    * listing was taken is not in the replaces-list, so readers keep
-    * it alongside the compacted one. The compacted name derives from
-    * the input set (publish-once), so a retried compaction of the
-    * same inputs is a no-op; run ONE compactor at a time (the
+  /** The index maintenance compactor: fold the live generations into a
+    * single new generation whose `_replaces.json` names the inputs —
+    * one atomic publish swaps both facts in for every reader. At a
+    * daily fold cadence this runs weekly/monthly, bounding reader
+    * fan-in while [[advanceIndex]] keeps the hot path batch-sized.
+    * Safe against a CONCURRENT [[advanceIndex]]: a generation published
+    * after the listing was taken is not in the replaces-list, so
+    * readers keep it alongside the compacted one. The compacted name
+    * derives from the input set (publish-once), so a retried compaction
+    * of the same inputs is a no-op; run ONE compactor at a time (the
     * standard maintenance-job constraint — two compactors that read
     * DIFFERENT listings could both go live with overlapping content).
     * Input dirs stay on disk for in-flight readers; [[pruneIndex]]
     * deletes them once no reader can hold the old listing. */
-  private def compactTable(s: SparkSession, root: String): Unit = {
+  def compactIndex(s: SparkSession, dir: String): Unit = {
+    val root = s"$dir/$DocsTable"
     val inputs = liveGens(s, root)
     if (inputs.size <= 1) return // nothing to fold
     val names = inputs.map(p => new org.apache.hadoop.fs.Path(p).getName)
     val digest = graft.engine.SourceId.digest(names.sorted.mkString("\n"))
+    // the inputs' own lists carry over, so the live generation keeps
+    // naming every label folded into it after prune deletes the
+    // intermediate compactions: a spent label stays spent
+    val replaced = (names ++ inputs.flatMap(replacesOf(s, _))).distinct.sorted
     publishGen(s, s.read.parquet(inputs: _*), root, s"zcompact-$digest",
-      Map(ReplacesFile -> names.sorted.mkString("", "\n", "\n")))
-    // Single-table visibility here: the compacted copy is
-    // content-preserving per table, so the tables need no cross-table
-    // event — but the gen still needs ITS marker to clear the
-    // committed-only listing. The marker may already exist (the sibling
-    // table's compaction of the same label set shares the digest);
-    // then this table's rename was the visibility event, which is safe
-    // for the same content-preserving reason.
-    commitLabel(s, root, s"zcompact-$digest")
-  }
-
-  /** The index maintenance compactor: fold all live generations of
-    * both tables into one each. At a daily fold cadence this runs
-    * weekly/monthly — bounding reader fan-in while [[advanceIndex]]
-    * keeps the hot path batch-sized. */
-  def compactIndex(s: SparkSession, dir: String): Unit = {
-    compactTable(s, s"$dir/ngram_docs")
-    compactTable(s, s"$dir/ngram_postings")
+      Map(ReplacesFile -> replaced.mkString("", "\n", "\n")))
   }
 
   /** Delete replaced generation dirs (compaction garbage). Run only
@@ -361,49 +231,31 @@ object IncrementalDedup {
     * leaves every still-present input hidden by a still-present list
     * — no torn state resurrects replaced content for readers. */
   def pruneIndex(s: SparkSession, dir: String): Unit = {
-    val roots = Seq(s"$dir/ngram_docs", s"$dir/ngram_postings")
-    for (root <- roots) {
-      var present = genDirs(s, root)
-      var progress = true
-      while (progress) {
-        val names = present.map(p =>
-          new org.apache.hadoop.fs.Path(p).getName).toSet
-        val dead = present.flatMap(replacesOf(s, _)).toSet
-        val deletable = present.filter { g =>
-          val p = new org.apache.hadoop.fs.Path(g)
-          dead.contains(p.getName) &&
-            replacesOf(s, g).forall(!names.contains(_))
-        }
-        progress = deletable.nonEmpty
-        deletable.foreach { g =>
-          val p = new org.apache.hadoop.fs.Path(g)
-          p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-        present = present.filterNot(deletable.toSet)
+    var present = genDirs(s, s"$dir/$DocsTable")
+    var progress = true
+    while (progress) {
+      val names = present.map(p =>
+        new org.apache.hadoop.fs.Path(p).getName).toSet
+      val dead = present.flatMap(replacesOf(s, _)).toSet
+      val deletable = present.filter { g =>
+        val p = new org.apache.hadoop.fs.Path(g)
+        dead.contains(p.getName) &&
+          replacesOf(s, g).forall(!names.contains(_))
       }
-    }
-    // Marker hygiene (ADVICE r13): a marker whose generation dirs are
-    // gone from BOTH tables is garbage — left behind, markers
-    // accumulate unboundedly AND a later fold reusing the label would
-    // be visible from its first per-table rename (see the reuse guard
-    // in [[advanceIndex]], the belt to this suspender). Deleting the
-    // marker only AFTER both dirs are gone preserves the invariant the
-    // other way: a prune crash before this sweep leaves marker+dirs
-    // consistent or marker-without-dirs, which the reuse guard rejects.
-    val cp = commitsPath(roots.head)
-    val fs = cp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(cp)) fs.listStatus(cp).foreach { st =>
-      val label = st.getPath.getName
-      val anyDir = roots.exists(r => fs.exists(
-        new org.apache.hadoop.fs.Path(r, GenPrefix + label)))
-      if (!anyDir) fs.delete(st.getPath, true)
+      progress = deletable.nonEmpty
+      deletable.foreach { g =>
+        val p = new org.apache.hadoop.fs.Path(g)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .delete(p, true)
+      }
+      present = present.filterNot(deletable.toSet)
     }
   }
 
-  /** Source-identity record, written beside the commit markers at base
-    * publish: one `path|length|mtime` line per file of the documents
-    * source the base build read ([[graft.engine.SourceId.entries]]).
+  /** Source-identity record, written beside the generations before the
+    * base publish: one `path|length|mtime` line per file of the
+    * documents source the base build read
+    * ([[graft.engine.SourceId.entries]]).
     * Unlike the derived caches (Bucketed/Partitioned/ANN models), this
     * index is a MAINTAINED artifact — [[advanceIndex]] folds batches
     * in, so "rebuild when the source fingerprint changes" would throw
@@ -422,14 +274,10 @@ object IncrementalDedup {
       .entries(s, Tables.documents(s, d)).mkString("", "\n", "\n")
     val p = new org.apache.hadoop.fs.Path(dir, SourceFile)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    try {
-      val out = fs.create(p, false) // first writer wins; content equal
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => ()
-      case _: org.apache.hadoop.fs.PathExistsException => ()
-    }
+    // first writer wins; racing base builds read the same source
+    try graft.engine.Snapshot.createExclusive(fs, p,
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
   }
 
   private def verifySourceRecord(s: SparkSession, dir: String): Unit = {
@@ -463,45 +311,34 @@ object IncrementalDedup {
 
   /** Load-or-publish-or-inline, keyed by [[IndexDirConf]] (the
     * AnnOps.centroidsFor contract): racing publishers — exactly one
-    * wins per generation; losers load the winner's, which is
+    * wins the base generation; losers load the winner's, which is
     * bit-identical anyway (gram hashing is deterministic). */
   private[graft] def indexFor(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
     s.conf.get(IndexDirConf, "") match {
       case "" => buildIndex(s, d)
       case dir =>
-        val (docsRoot, postRoot) = (s"$dir/ngram_docs", s"$dir/ngram_postings")
-        def live() = (liveGens(s, docsRoot), liveGens(s, postRoot))
-        val listed = live()
-        val (docsGens, postGens) =
-          if (listed._1.nonEmpty && listed._2.nonEmpty) listed else {
-            val (docs, postings) = buildIndex(s, d)
-            publishGen(s, docs, docsRoot, "base")
-            publishGen(s, postings, postRoot, "base")
-            // the source record lands before the marker so a committed
-            // base is never un-auditable; create-if-absent keeps the
-            // first build's record under retries
+        val root = s"$dir/$DocsTable"
+        val gens = liveGens(s, root) match {
+          case Nil =>
+            // the record lands before the base is visible, so a
+            // published base is never un-auditable
             writeSourceRecord(s, dir, d)
-            // same joint-visibility rule as advanceIndex: base becomes
-            // readable only once both tables are down (a crash in between
-            // self-heals here — the exists-no-op publishes re-run, then
-            // the marker lands)
-            commitLabel(s, docsRoot, "base")
-            live()
-          }
-        verifySourceRecord(s, dir)
-        def readAll(gens: Seq[String]): DataFrame = {
-          // a generation is never visible without its manifest
-          // (publishAtomic renames data + manifest as one unit), so a
-          // missing manifest means a hand-built / torn directory
-          gens.foreach { g =>
-            require(graft.engine.Snapshot.readManifest(s, g).nonEmpty,
-              s"index generation $g has no manifest — not a published " +
-                "generation")
-          }
-          s.read.parquet(gens: _*)
+            publishGen(s, buildIndex(s, d)._1, root, "base")
+            liveGens(s, root)
+          case listed => listed
         }
-        (readAll(docsGens), readAll(postGens))
+        verifySourceRecord(s, dir)
+        // a generation is never visible without its manifest
+        // (publishAtomic renames data + manifest as one unit), so a
+        // missing manifest means a hand-built / torn directory
+        gens.foreach { g =>
+          require(graft.engine.Snapshot.readManifest(s, g).nonEmpty,
+            s"index generation $g has no manifest — not a published " +
+              "generation")
+        }
+        val docs = s.read.parquet(gens: _*)
+        (docs, postingsOf(docs))
     }
 
   /** The batch's gram view: (doc_id, n, bg), batch docs only. */
@@ -579,8 +416,7 @@ object IncrementalDedup {
           posexplode(col("bg")).as(Seq("pos", "g")))
         .where(col("pos") + 1 <=
           col("new_n") - ceil(lit(jt) * col("new_n") - lit(1e-9)) + 1)
-      val batchPost = batch.select(explode(col("bg")).as("g"),
-        col("doc_id"), col("n"))
+      val batchPost = postingsOf(batch)
       def semiFiltered(post: DataFrame): DataFrame =
         if (s.conf.get(ProbeKeyBroadcastConf, "true").toBoolean)
           post.join(broadcast(prefixG.select(col("g")).distinct()),

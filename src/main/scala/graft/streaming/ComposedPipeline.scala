@@ -238,9 +238,12 @@ object ComposedPipeline {
       "RocksDBStateStoreProvider")
     var skipped = 0
     var applied = 0
+    // rows each batch emitted, by batch id: the foreachBatch sink
+    // reports no output count of its own (-1 in the progress)
+    val emittedById = scala.collection.concurrent.TrieMap.empty[Long, Long]
     // Telemetry accumulates in a listener, not only q.recentProgress:
     // recentProgress retains just the last ~100 updates, so a long
-    // replay silently undercounts emitted sessions and peak state
+    // replay silently undercounts batches and peak state
     // (ADVICE r15). The listener sees every update; recentProgress is
     // still merged at the end because listener delivery is async and
     // the tail may not have been posted yet — keying by (queryId,
@@ -295,6 +298,7 @@ object ComposedPipeline {
         batch.persist()
         try {
           val n = batch.count()
+          emittedById(id) = n
           // count() ran the stateful plan: state partitions are
           // committed for this batch — crashing HERE leaves committed
           // state but no generation (the pre-publish window)
@@ -339,16 +343,14 @@ object ComposedPipeline {
     }
     var peakRows = 0L
     var peakBytes = 0L
-    var emitted = 0L
     progress.foreach { p =>
       val so = p.stateOperators.headOption
       peakRows = math.max(peakRows, so.map(_.numRowsTotal).getOrElse(0L))
       peakBytes = math.max(peakBytes, so.map(_.memoryUsedBytes).getOrElse(0L))
-      emitted += Option(p.sink).map(_.numOutputRows).getOrElse(0L)
       System.err.println(s"[composed] batch=${p.batchId} " +
         s"in=${p.numInputRows} " +
         s"stateRows=${so.map(_.numRowsTotal).getOrElse(0L)} " +
-        s"out=${Option(p.sink).map(_.numOutputRows).getOrElse(0L)} " +
+        s"out=${emittedById.getOrElse(p.batchId, 0L)} " +
         s"watermark=${Option(p.eventTime.get("watermark")).getOrElse("-")}")
     }
     val logEnd = FeedSource.endOffsets(feedDir).values.sum
@@ -356,7 +358,7 @@ object ComposedPipeline {
       p.sources.headOption.flatMap(src => Option(src.endOffset))
         .map(j => FeedSource.parseOffsets(j).values.sum))
       .maxOption.getOrElse(0L)
-    RunStats(progress.size, peakRows, peakBytes, emitted,
+    RunStats(progress.size, peakRows, peakBytes, emittedById.values.sum,
       ids(s, snapRoot, layout).size,
       skipped, logEnd - processed,
       (System.nanoTime() - t0) / 1e9, crashed)

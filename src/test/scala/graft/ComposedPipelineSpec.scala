@@ -60,6 +60,11 @@ class ComposedPipelineSpec extends SparkSpec {
     // the fixture's first session per user must have closed: 40 users
     // × session 1 at least (session 2 closes via the late tail)
     assert(cleanFinal.where(col("session_seq") === 1).count() == 40)
+    // every session in the clean table was emitted by some batch
+    assert(sc.emittedSessions > 0 &&
+      sc.emittedSessions >= cleanFinal.count(),
+      s"emitted ${sc.emittedSessions} sessions for a " +
+        s"${cleanFinal.count()}-row table")
     assert(n > 0 && s1.batches + s2.batches >= sc.batches,
       "sanity: the crash path re-ran at least the uncommitted batch")
     org.apache.commons.io.FileUtils.deleteDirectory(

@@ -6,13 +6,22 @@ import scala.jdk.CollectionConverters._
 
 class IncrementalDedupSpec extends SparkSpec {
 
+  /** Today's batch gram view — the shape buildIndex emits. */
+  private def batchView = engine.Tables.documents(spark, sf)
+    .where(col("doc_id") % 10 === 0)
+    .select(col("doc_id"),
+      graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
+    .where(size(col("bg")) > 0)
+    .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
+
   test("persisted gram index: load == inline; probe reads the artifact") {
     // r11 (VERDICT r10 missing #1): the incremental near-dup must probe
     // a publish-once postings index, never recompute the base corpus.
     // Claims, each observable (the PqSpec C110 pattern):
     //  1. with the index published, the query returns exactly the
     //     inline-built result (bit-identical rows);
-    //  2. both index tables are manifest-carrying generations;
+    //  2. the index is one manifest-carrying generation of gram arrays;
+    //     no postings table is stored (postings derive at read time);
     //  3. query time READS the artifact: planting an index with one
     //     base doc removed deletes exactly that doc's pairs — impossible
     //     if the query rebuilt the index from the corpus;
@@ -31,10 +40,11 @@ class IncrementalDedupSpec extends SparkSpec {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
       val first = q("q_dedup_incremental_near").collect().toSeq
       assert(first == inline, "publish-first invocation changed results")
-      for (t <- Seq("ngram_docs", "ngram_postings"))
-        assert(java.nio.file.Files.exists(
-          dir.resolve(t).resolve("gen_base").resolve("_graft_manifest.json")),
-          s"$t/gen_base must be a manifest-carrying generation")
+      assert(java.nio.file.Files.exists(dir.resolve("ngram_docs")
+        .resolve("gen_base").resolve("_graft_manifest.json")),
+        "ngram_docs/gen_base must be a manifest-carrying generation")
+      assert(!java.nio.file.Files.exists(dir.resolve("ngram_postings")),
+        "postings are derived from ngram_docs, never stored")
       // second invocation loads (no rebuild) and is identical
       assert(q("q_dedup_incremental_near").collect().toSeq == inline)
 
@@ -45,14 +55,11 @@ class IncrementalDedupSpec extends SparkSpec {
       val victim =
         if (isBatch(crossPair.getLong(0))) crossPair.getLong(1)
         else crossPair.getLong(0)
-      val (docs, postings) = IncrementalDedup.buildIndex(spark, sf)
+      val (docs, _) = IncrementalDedup.buildIndex(spark, sf)
       val dir2 = java.nio.file.Files.createTempDirectory("graft-gramidx2")
       try {
         graft.engine.Snapshot.publishAtomic(spark,
           docs.where(col("doc_id") =!= victim), s"$dir2/ngram_docs/gen_base")
-        graft.engine.Snapshot.publishAtomic(spark,
-          postings.where(col("doc_id") =!= victim),
-          s"$dir2/ngram_postings/gen_base")
         spark.conf.set(IncrementalDedup.IndexDirConf, dir2.toString)
         val planted = q("q_dedup_incremental_near").collect().toSeq
         assert(planted.forall(r =>
@@ -72,8 +79,6 @@ class IncrementalDedupSpec extends SparkSpec {
       try {
         graft.engine.Snapshot.publishAtomic(spark, docs,
           s"$dir3/ngram_docs/gen_base")
-        graft.engine.Snapshot.publishAtomic(spark, postings,
-          s"$dir3/ngram_postings/gen_base")
         java.nio.file.Files.delete(java.nio.file.Paths.get(
           s"$dir3/ngram_docs/gen_base/_graft_manifest.json"))
         spark.conf.set(IncrementalDedup.IndexDirConf, dir3.toString)
@@ -100,13 +105,7 @@ class IncrementalDedupSpec extends SparkSpec {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
       // first use publishes gen_base (base corpus only)
       q("q_dedup_incremental_near").collect()
-      // today's batch gram view — same shape buildIndex emits
-      val batch = engine.Tables.documents(spark, sf)
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
-        .where(size(col("bg")) > 0)
-        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
+      val batch = batchView
       IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
       // the same label folds exactly once (retry-safe no-op)
       IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
@@ -144,12 +143,7 @@ class IncrementalDedupSpec extends SparkSpec {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
       val baseline = q("q_dedup_incremental_near").collect().toSeq // gen_base
       // two delta folds: half of the batch docs each, disjoint
-      val batch = engine.Tables.documents(spark, sf)
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
-        .where(size(col("bg")) > 0)
-        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
+      val batch = batchView
       IncrementalDedup.advanceIndex(spark, dir.toString, "day1",
         batch.where(col("doc_id") % 20 === 0))
       IncrementalDedup.advanceIndex(spark, dir.toString, "day2",
@@ -181,8 +175,8 @@ class IncrementalDedupSpec extends SparkSpec {
         "a crashed compaction's staging dir was served as a generation")
       assert(q("q_dedup_incremental_near").collect().toSeq == advanced,
         "a crashed compaction's staging dir changed query results")
-      assert(!dir.resolve("_commits").toFile.list().exists(_.contains("__staging__")),
-        "a staging dir was stamped committed")
+      assert(!java.nio.file.Files.exists(dir.resolve("_commits")),
+        "a generation's rename is its commit; no marker is written")
       // compaction is retry-safe: same live set → publish-once no-op
       IncrementalDedup.compactIndex(spark, dir.toString)
       assert(IncrementalDedup.indexFor(spark, sf)._1.count() == docsBefore)
@@ -209,172 +203,152 @@ class IncrementalDedupSpec extends SparkSpec {
     }
   }
 
-  test("a crash between the fold's two publishes leaves NO torn state: " +
-      "readers see neither table's generation or both, never one") {
-    // r11 verdict wrong #1: advanceIndex publishes ngram_docs and
-    // ngram_postings as two separate atomic renames. A crash between
-    // them used to leave the docs generation VISIBLE with no matching
-    // postings — a probe in that window silently missed pairs
-    // (candidates come from postings). The fix: a generation is
-    // invisible until the per-label commit marker (written only after
-    // BOTH publishes) exists. This test simulates the crash by doing
-    // exactly what a torn advanceIndex left behind: the first publish
-    // without the second, no marker.
+  test("a fold is one rename: a generation published directly is served once") {
+    // A fold is one publishAtomic of ngram_docs/gen_<label>, so that
+    // rename is its only visibility event: no second table exists whose
+    // absence could tear it. Doing exactly the fold's one rename by hand
+    // must serve the batch in full, postings included, and the label's
+    // retry must publish nothing more.
     val dir = java.nio.file.Files.createTempDirectory("graft-gramidx-tear")
     try {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
       val baseline = q("q_dedup_incremental_near").collect().toSeq // base
-      val (docsRoot, postRoot) =
-        (s"$dir/ngram_docs", s"$dir/ngram_postings")
-      val (baseDocs, basePosts) = (
-        IncrementalDedup.liveGens(spark, docsRoot).size,
-        IncrementalDedup.liveGens(spark, postRoot).size)
-      assert(baseDocs == 1 && basePosts == 1)
+      val docsRoot = s"$dir/ngram_docs"
+      assert(IncrementalDedup.liveGens(spark, docsRoot).size == 1)
       val (d0, p0) = IncrementalDedup.indexFor(spark, sf)
       val (docsCount0, postsCount0) = (d0.count(), p0.count())
+      val batch = batchView
 
-      val batch = engine.Tables.documents(spark, sf)
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
-        .where(size(col("bg")) > 0)
-        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
-
-      // CRASH SIMULATION: the fold's first rename landed, the second
-      // (and the marker) never ran
-      graft.engine.Snapshot.publishAtomic(spark, batch,
-        s"$docsRoot/gen_day1")
-      assert(java.nio.file.Files.exists(
-        dir.resolve("ngram_docs").resolve("gen_day1")),
-        "precondition: the torn directory is physically present")
-
-      // the torn generation must be INVISIBLE to every reader path —
-      // not "docs grew, postings didn't"
-      assert(IncrementalDedup.liveGens(spark, docsRoot).size == baseDocs,
-        "torn docs generation leaked into the live listing")
+      graft.engine.Snapshot.publishAtomic(spark, batch, s"$docsRoot/gen_day1")
+      assert(IncrementalDedup.liveGens(spark, docsRoot).size == 2,
+        "the renamed generation must be live")
       val (d1, p1) = IncrementalDedup.indexFor(spark, sf)
-      assert(d1.count() == docsCount0 && p1.count() == postsCount0,
-        "torn fold changed what indexFor serves")
-      assert(q("q_dedup_incremental_near").collect().toSeq == baseline,
-        "torn fold changed probe results")
-
-      // the label's RETRY self-heals: the docs publish no-ops on the
-      // surviving directory, the postings publish lands, the marker
-      // commits — now BOTH are visible, atomically grown
-      IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
-      assert(java.nio.file.Files.exists(
-        dir.resolve("_commits").resolve("day1")),
-        "retry must commit the label")
-      assert(
-        IncrementalDedup.liveGens(spark, docsRoot).size == baseDocs + 1 &&
-          IncrementalDedup.liveGens(spark, postRoot).size == basePosts + 1,
-        "committed fold must be visible in BOTH tables")
-      val (d2, p2) = IncrementalDedup.indexFor(spark, sf)
-      assert(d2.count() == docsCount0 + batch.count(),
-        "docs generation content must be the batch's rows")
-      assert(p2.count() ==
+      val (docsCount1, postsCount1) = (d1.count(), p1.count())
+      assert(docsCount1 == docsCount0 + batch.count(),
+        "docs must grow by the batch's rows")
+      assert(postsCount1 ==
         postsCount0 + batch.select(explode(col("bg"))).count(),
-        "postings generation content must be the batch's exploded grams")
-      // post-fold probe is pinned unchanged by the compaction test's
-      // batch-authority rule; re-assert here for the committed state
+        "postings must grow by the batch's exploded grams")
+      // the probe treats the batch as authoritative for its doc_ids
       assert(q("q_dedup_incremental_near").collect().toSeq == baseline)
+
+      // the label's retry is a no-op: no dir, no rows, no marker
+      IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
+      assert(dir.resolve("ngram_docs").toFile.list().sorted.toSeq ==
+        Seq("gen_base", "gen_day1"), "the retry published a generation")
+      val (d2, p2) = IncrementalDedup.indexFor(spark, sf)
+      assert(d2.count() == docsCount1 && p2.count() == postsCount1,
+        "the retry changed what indexFor serves")
+      assert(dir.toFile.list().sorted.toSeq ==
+        Seq("_source.json", "ngram_docs"),
+        "the index dir holds one table and the source record")
     } finally {
       spark.conf.unset(IncrementalDedup.IndexDirConf)
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 
-  test("legacy pre-marker layouts grandfather: folded generations stay " +
-      "visible, torn legacy halves stay invisible") {
-    // ADVICE r14 medium: committed-only listing with no grandfathering
-    // silently dropped every pre-marker day-generation (liveGens came
-    // back empty → rebuild branch committed only 'base'). An unmarked
-    // generation whose manifest is present in BOTH tables encodes the
-    // same neither-or-both fact the marker would have asserted, so it
-    // is stamped committed on sight; an unmarked single-table half is
-    // a genuine legacy tear and stays invisible.
+  test("an index layout with stored postings and commit markers loads") {
+    // Index dirs written before postings were derived also hold an
+    // ngram_postings/gen_<label> beside each docs generation and one
+    // _commits/<label> marker per fold. The reader takes every docs
+    // generation as whole, including a fold whose postings half never
+    // landed, and never reads, lists or deletes the other entries.
+    val inline = q("q_dedup_incremental_near").collect().toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft-gramidx-leg")
     try {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
       q("q_dedup_incremental_near").collect() // publishes gen_base
-      val batch = engine.Tables.documents(spark, sf)
-        .where(col("doc_id") % 10 === 0)
+      val batch = batchView
+      IncrementalDedup.advanceIndex(spark, dir.toString, "day1",
+        batch.where(col("doc_id") % 20 === 0))
+      for (label <- Seq("base", "day1")) {
+        val gen = spark.read.parquet(s"$dir/ngram_docs/gen_$label")
+        graft.engine.Snapshot.publishAtomic(spark,
+          gen.select(explode(col("bg")).as("g"), col("doc_id"), col("n")),
+          s"$dir/ngram_postings/gen_$label")
+        java.nio.file.Files.createDirectories(dir.resolve("_commits"))
+        java.nio.file.Files.createFile(dir.resolve("_commits").resolve(label))
+      }
+      // a fold torn in that layout: docs down, no postings, no marker
+      val day2 = batch.where(col("doc_id") % 20 =!= 0)
+      graft.engine.Snapshot.publishAtomic(spark, day2,
+        s"$dir/ngram_docs/gen_day2")
+
+      val (idxDocs, idxPost) = IncrementalDedup.indexFor(spark, sf)
+      val expectDocs = engine.Tables.documents(spark, sf)
         .select(col("doc_id"),
           graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
         .where(size(col("bg")) > 0)
-        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
-      IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
-      val (d0, p0) = IncrementalDedup.indexFor(spark, sf)
-      val (docs0, posts0) = (d0.count(), p0.count())
-
-      // make the layout "legacy": wipe the marker directory wholesale
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        dir.resolve("_commits").toFile)
-      assert(!java.nio.file.Files.exists(dir.resolve("_commits")))
-
-      // every complete generation — base AND the folded day1 — must
-      // still be served, not just a re-committed base
-      val (d1, p1) = IncrementalDedup.indexFor(spark, sf)
-      assert(d1.count() == docs0 && p1.count() == posts0,
-        "grandfathering must restore ALL complete generations, " +
-          "not only gen_base")
-      // and the markers are re-stamped so the healed state is durable
-      assert(java.nio.file.Files.exists(dir.resolve("_commits")
-        .resolve("day1")), "grandfathering must re-stamp the marker")
-
-      // a legacy TEAR (docs half only, no marker) must stay invisible
-      graft.engine.Snapshot.publishAtomic(spark,
-        batch.limit(3), s"$dir/ngram_docs/gen_legacytear")
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        dir.resolve("_commits").resolve("legacytear").toFile)
-      val (d2, _) = IncrementalDedup.indexFor(spark, sf)
-      assert(d2.count() == docs0,
-        "a single-table legacy half must NOT grandfather")
+      assert(idxDocs.count() == expectDocs.count(),
+        "every docs generation must be served, the torn fold included")
+      assert(idxPost.count() == expectDocs.select(explode(col("bg"))).count())
+      assert(idxPost.inputFiles.forall(!_.contains("ngram_postings")),
+        "stored postings must not be read")
+      assert(q("q_dedup_incremental_near").collect().toSeq == inline,
+        "results must equal the inline run's")
+      // the torn fold's retry is a no-op
+      IncrementalDedup.advanceIndex(spark, dir.toString, "day2", day2)
+      assert(IncrementalDedup.indexFor(spark, sf)._1.count() ==
+        expectDocs.count())
+      // and the other layout's entries are left as they were
+      assert(dir.resolve("ngram_postings").toFile.list().sorted.toSeq ==
+        Seq("gen_base", "gen_day1"))
+      assert(dir.resolve("_commits").toFile.list().sorted.toSeq ==
+        Seq("base", "day1"))
     } finally {
       spark.conf.unset(IncrementalDedup.IndexDirConf)
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 
-  test("prune removes spent commit markers; a pruned label refuses reuse") {
-    // ADVICE r14 low: markers outliving their generation dirs
-    // accumulate unboundedly AND make a reused label visible from its
-    // first per-table rename — re-opening the torn window. pruneIndex
-    // now deletes a marker once BOTH tables' dirs are gone, and
-    // advanceIndex rejects a label whose marker exists without dirs.
+  test("a folded label stays spent after compact + prune") {
+    // A compaction's _replaces.json names every label folded into it,
+    // its inputs' own lists included, so a label compacted away stays
+    // named by the live generation after prune deletes its dir and
+    // any intermediate compaction. Re-folding it must publish nothing:
+    // its rows are already in the compacted generation.
     val dir = java.nio.file.Files.createTempDirectory("graft-gramidx-prn")
     try {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
-      q("q_dedup_incremental_near").collect()
-      val batch = engine.Tables.documents(spark, sf)
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
-        .where(size(col("bg")) > 0)
-        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
-      IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
+      val baseline = q("q_dedup_incremental_near").collect().toSeq
+      val batch = batchView
+      val (day1, day2) = (batch.where(col("doc_id") % 20 === 0),
+        batch.where(col("doc_id") % 20 =!= 0))
+      val gens = dir.resolve("ngram_docs")
+      def counts() = {
+        val (d, p) = IncrementalDedup.indexFor(spark, sf)
+        (d.count(), p.count())
+      }
+      IncrementalDedup.advanceIndex(spark, dir.toString, "day1", day1)
       IncrementalDedup.compactIndex(spark, dir.toString)
       IncrementalDedup.pruneIndex(spark, dir.toString)
-      // base and day1 dirs are pruned; their markers must be gone too
-      for (l <- Seq("base", "day1"))
-        assert(!java.nio.file.Files.exists(dir.resolve("_commits")
-          .resolve(l)), s"spent marker '$l' must be deleted by prune")
-      // the live compacted gen keeps its marker
+      assert(!java.nio.file.Files.exists(gens.resolve("gen_day1")),
+        "prune must delete the folded generation")
       val live = IncrementalDedup.liveGens(spark, s"$dir/ngram_docs")
       assert(live.size == 1 && live.head.contains("zcompact-"))
+      val c1 = counts()
 
-      // reuse guard: a marker without dirs (partial-prune shape) must
-      // refuse the fold instead of publishing a torn mix
-      java.nio.file.Files.createDirectories(dir.resolve("_commits"))
-      java.nio.file.Files.createFile(dir.resolve("_commits")
-        .resolve("spent"))
-      val e = intercept[IllegalStateException] {
-        IncrementalDedup.advanceIndex(spark, dir.toString, "spent", batch)
-      }
-      assert(e.getMessage.contains("pruned"))
-      // and the refused fold published NOTHING
-      assert(!java.nio.file.Files.exists(
-        dir.resolve("ngram_docs").resolve("gen_spent")))
+      IncrementalDedup.advanceIndex(spark, dir.toString, "day1", day1)
+      assert(!java.nio.file.Files.exists(gens.resolve("gen_day1")),
+        "a spent label published a generation")
+      assert(counts() == c1, "a spent label changed what indexFor serves")
+
+      // a second compaction replaces the first, and prune deletes it:
+      // day1 must still be spent
+      IncrementalDedup.advanceIndex(spark, dir.toString, "day2", day2)
+      IncrementalDedup.compactIndex(spark, dir.toString)
+      IncrementalDedup.pruneIndex(spark, dir.toString)
+      assert(gens.toFile.list().count(_.startsWith("gen_")) == 1,
+        "prune must leave one generation")
+      val c2 = counts()
+      for (label <- Seq("day1", "day2"))
+        IncrementalDedup.advanceIndex(spark, dir.toString, label,
+          if (label == "day1") day1 else day2)
+      assert(gens.toFile.list().count(_.startsWith("gen_")) == 1,
+        "a spent label published a generation after a second compaction")
+      assert(counts() == c2)
+      assert(q("q_dedup_incremental_near").collect().toSeq == baseline)
     } finally {
       spark.conf.unset(IncrementalDedup.IndexDirConf)
       org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
@@ -393,12 +367,7 @@ class IncrementalDedupSpec extends SparkSpec {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
       spark.conf.set(IncrementalDedup.AutoCompactConf, "3")
       val baseline = q("q_dedup_incremental_near").collect().toSeq
-      val batch = engine.Tables.documents(spark, sf)
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
-        .where(size(col("bg")) > 0)
-        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
+      val batch = batchView
       IncrementalDedup.advanceIndex(spark, dir.toString, "day1",
         batch.where(col("doc_id") % 20 === 0)) // 2 gens < 3: no compact
       assert(IncrementalDedup.liveGens(spark, s"$dir/ngram_docs").size == 2,
@@ -595,12 +564,7 @@ class IncrementalDedupSpec extends SparkSpec {
     try {
       spark.conf.set(IncrementalDedup.IndexDirConf, dir.toString)
       IncrementalDedup.indexFor(spark, sf)
-      val batch = engine.Tables.documents(spark, sf)
-        .where(col("doc_id") % 10 === 0)
-        .select(col("doc_id"),
-          graft.functions.GramHashes(spark, col("text"), 5).as("bg"))
-        .where(size(col("bg")) > 0)
-        .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
+      val batch = batchView
       IncrementalDedup.advanceIndex(spark, dir.toString, "day1", batch)
       CountingFileSystem.install(spark.sparkContext.hadoopConfiguration)
       spark.conf.set(IncrementalDedup.IndexDirConf,
@@ -609,11 +573,10 @@ class IncrementalDedupSpec extends SparkSpec {
       val (idxDocs, idxPost) = IncrementalDedup.indexFor(spark, sf)
       val listed = CountingFileSystem.listings.asScala.toMap
         .map { case (name, n) => name -> n.get() }
-      assert(listed.get("ngram_docs").contains(1) &&
-        listed.get("ngram_postings").contains(1),
-        s"each table root must be listed once: $listed")
-      assert(listed.getOrElse("_commits", 0) <= 2,
-        s"the commit markers are listed at most once per table: $listed")
+      assert(listed.get("ngram_docs").contains(1),
+        s"the one table root must be listed once: $listed")
+      assert(!listed.contains("ngram_postings") && !listed.contains("_commits"),
+        s"no postings table or commit markers are listed: $listed")
       assert(idxDocs.inputFiles.nonEmpty && idxPost.inputFiles.nonEmpty)
     } finally {
       spark.conf.unset(IncrementalDedup.IndexDirConf)

@@ -76,7 +76,6 @@ class StreamServeSpec extends SparkSpec {
       .createTempDirectory("graft_streamserve_").toString
     val bucketDir = java.nio.file.Files.createTempDirectory("graft_ssbkt_")
     spark.conf.set(graft.engine.Bucketed.DirConf, bucketDir.toString)
-    spark.conf.set(graft.engine.Bucketed.NConf, Buckets.toString)
     try {
       val feedDir = s"$work/feed"
       seedFeed(feedDir)
@@ -101,13 +100,16 @@ class StreamServeSpec extends SparkSpec {
         "bucketed-publish pipeline diverges from the plain pipeline")
 
       // (2) consumer join on the bucket key against another bucketed
-      // layout: no exchange, no sort, both scans bucketed
-      val dim = graft.engine.Bucketed.table(
-        spark, sf, "serve_userdim",
-        graft.engine.Tables.events(spark, sf)
-          .groupBy(col("user_id"))
-          .agg(countDistinct(col("event_type")).as("n_types")),
-        "user_id")
+      // layout: no exchange, no sort, both scans bucketed (the layout
+      // takes its bucket count from the shuffle-partition count)
+      val dim = withConf("spark.sql.shuffle.partitions" -> Buckets.toString) {
+        graft.engine.Bucketed.table(
+          spark, sf, "serve_userdim",
+          graft.engine.Tables.events(spark, sf)
+            .groupBy(col("user_id"))
+            .agg(countDistinct(col("event_type")).as("n_types")),
+          "user_id")
+      }
       withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val join = served.join(dim, "user_id")
           .groupBy(col("n_types"))
@@ -140,7 +142,6 @@ class StreamServeSpec extends SparkSpec {
           || t.name.startsWith("graft_bkt_serve_"))
         .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
       spark.conf.unset(graft.engine.Bucketed.DirConf)
-      spark.conf.unset(graft.engine.Bucketed.NConf)
       org.apache.commons.io.FileUtils.deleteDirectory(
         new java.io.File(work))
       org.apache.commons.io.FileUtils.deleteDirectory(bucketDir.toFile)

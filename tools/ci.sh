@@ -33,12 +33,29 @@ done
 
 # Generation listing lives behind one module (engine/Generations.scala):
 # the modules that read generations may not list a root themselves.
-for f in engine/Snapshot.scala engine/JdbcExtract.scala streaming/ComposedPipeline.scala; do
+for f in engine/Snapshot.scala engine/JdbcExtract.scala streaming/ComposedPipeline.scala queries/IncrementalDedup.scala; do
   if grep -qF 'listStatus' "src/main/scala/graft/$f"; then
     echo "ci: listStatus in src/main/scala/graft/$f; list generations through Generations" >&2
     exit 1
   fi
 done
+
+# A gram-index generation is one publish-once rename, so no second
+# commit protocol (per-label markers) may come back.
+if grep -rqF '_commits' src/main; then
+  echo "ci: '_commits' under src/main; an index generation commits by its rename alone" >&2
+  grep -rlF '_commits' src/main >&2
+  exit 1
+fi
+
+# Create-if-absent has one implementation (Snapshot.createExclusive):
+# Hadoop's create(p, false) is check-then-act on file: paths.
+stray=$(grep -rlE 'create\([^()]*, *false\)' src/main | grep -vx 'src/main/scala/graft/engine/Snapshot.scala' || true)
+if [ -n "$stray" ]; then
+  echo "ci: create(..., false) outside engine/Snapshot.scala; use Snapshot.createExclusive" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 
 # The set of mains is closed: every entry point under src/main is run
 # by a spec or named in a reproducible SCALE.md record. A new harness
