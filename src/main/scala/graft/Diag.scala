@@ -7,30 +7,21 @@ import graft.queries.{DedupOps, IncrementalDedup}
 /** The engine's measurement toolbox — ONE ad-hoc diagnostic main (not
   * part of the driver contract), consolidated r15 from the nine
   * per-investigation `Diag*` objects that had accumulated since r7
-  * (VERDICT r14 next #7). Every capability is preserved as a mode;
-  * SCALE.md's methodology references name the modes.
+  * (VERDICT r14 next #7). SCALE.md's methodology references name the
+  * modes; a retired mode (semantic, textscan, incr) lives on as its
+  * SCALE.md record.
   *
   *   runMain graft.Diag ngram       [sfDir] [t]
   *     candidate-pair volume per stage of the ngram prefix filter +
   *     sampled jaccard deciles (attributes candidate-gen vs re-score)
-  *   runMain graft.Diag semantic    [sfDir]
-  *     q_dedup_semantic stage profile: (count,dim) agg, centroid fit,
-  *     assignment pass (two-level vs flat), within-cell dup join,
-  *     plus the Lloyd-stats variant experiments
   *   runMain graft.Diag ngramstages <sfDir> [t] [sym|con|both]
   *     per-stage ROW COUNTS of the ngram candidate machinery (each
   *     stage counted in its own job: volumes, not wall artifacts)
-  *   runMain graft.Diag textscan    [sfDir] [iters]
-  *     bare scan vs regex projection vs +global sort (text-scan
-  *     superlinearity attribution)
   *   runMain graft.Diag compact     <sfDir> [nBatches] [indexDir]
   *     compaction-under-load: probe latency vs live generation count,
   *     before/after compactIndex + pruneIndex
   *   runMain graft.Diag fuzzy       [sizes...]
   *     FastSS hot-block scaling (doubling ratio; quadratic reads 4×)
-  *   runMain graft.Diag incr        <sfDir> <indexDir> [nosemi]
-  *     q_dedup_incremental_near stage profiler (semi-filtered vs
-  *     unified candidate probe, re-score)
   *   runMain graft.Diag skew        [sfDir] [hotPct] [iters]
   *     AQE-skew-split vs manual-salt vs unmitigated A/B with the
   *     skew=true honesty flag
@@ -41,17 +32,14 @@ object Diag {
     val rest = args.drop(1)
     mode match {
       case "ngram" => ngram(rest)
-      case "semantic" => semantic(rest)
       case "ngramstages" => ngramStages(rest)
-      case "textscan" => textScan(rest)
       case "compact" => compact(rest)
       case "fuzzy" => fuzzy(rest)
-      case "incr" => incr(rest)
       case "skew" => skew(rest)
       case "qprofile" => qprofile(rest)
       case other => sys.error(
-        s"unknown Diag mode '$other' — one of: ngram semantic " +
-          "ngramstages textscan compact fuzzy incr skew qprofile " +
+        s"unknown Diag mode '$other' — one of: ngram " +
+          "ngramstages compact fuzzy skew qprofile " +
           "(see scaladoc)")
     }
   }
@@ -104,129 +92,6 @@ object Diag {
     spark.stop()
   }
 
-  /** q_dedup_semantic stage profile (ex-Diag2, r10). */
-  private def semantic(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/repo/testdata-sf5"
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      "graft-diag2")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[diag2] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-    val emb = engine.Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    emb.write.format("noop").mode("overwrite").save() // warm cache
-    val head = timed("count+dim agg") {
-      emb.agg(count(lit(1)), first(size(col("embedding")))).head()
-    }
-    val (n, dim) = (head.getLong(0), head.getInt(1))
-    val semK = math.min(math.max(8L, n / 256L), 4096L).toInt
-    println(s"[diag2] n=$n dim=$dim K=$semK")
-    val fitTarget = math.min(math.max(64L * semK, 8192L), 262144L)
-    val fit =
-      if (n <= fitTarget) emb
-      else emb.where(pmod(xxhash64(col("vec_id"), lit(31L)),
-        lit(math.max(1L, n / fitTarget))) === 0L)
-    timed("fit sample count") { println("fit rows: " + fit.count()) }
-    // trainCentroids phases, replicated with timers
-    var cents: Seq[Seq[Double]] = timed("init collect") {
-      fit.orderBy(col("vec_id")).limit(semK).select(col("embedding"))
-        .collect().map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-    }
-    for (it <- 1 to 2) {
-      val stats = timed(s"lloyd iter $it stats collect") {
-        fit.select(element_at(graft.functions.NearestCells(
-              spark, col("embedding"), cents, 1), 1).as("cell"),
-            posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy(col("cell"), col("pos"))
-          .agg(sum(col("x").cast(
-            org.apache.spark.sql.types.DecimalType(28, 10))).as("sx"),
-            count(lit(1)).as("n"))
-          // already bounded by construction (groups = K×dim ≤ 4096×64);
-          // the explicit limit makes "every collect is limit-bounded"
-          // grep-enforceable across src/main (r8 advice)
-          .limit(semK * dim + 16)
-          .collect()
-      }
-      timed(s"lloyd iter $it driver update") {
-        val byCell = stats.groupBy(_.getInt(0))
-        cents = cents.zipWithIndex.map { case (old, ci) =>
-          byCell.get(ci) match {
-            case None => old
-            case Some(rows) =>
-              val mean = Array.fill(dim)(0.0)
-              rows.foreach { r =>
-                mean(r.getInt(1)) = r.getDecimal(2)
-                  .divide(java.math.BigDecimal.valueOf(r.getLong(3)),
-                    12, java.math.RoundingMode.HALF_UP)
-                  .doubleValue()
-              }
-              mean.toSeq
-          }
-        }
-      }
-    }
-    val (coarse, groups) = timed("coarsen") { queries.AnnOps.coarsen(cents) }
-    val corpus2l = emb.select(col("vec_id"), col("embedding"),
-      graft.functions.NearestCellTwoLevel(spark, col("embedding"),
-        coarse, cents, groups, 4).as("cell"))
-    timed("assignment pass (two-level, noop sink)") {
-      corpus2l.write.format("noop").mode("overwrite").save()
-    }
-    val corpusFlat = emb.select(col("vec_id"), col("embedding"),
-      element_at(graft.functions.NearestCells(
-        spark, col("embedding"), cents, 1), 1).as("cell"))
-    timed("assignment pass (flat, noop sink)") {
-      corpusFlat.write.format("noop").mode("overwrite").save()
-    }
-    // variant experiments: what makes the Lloyd stats pass slow?
-    timed("variant A: explode+decimal agg with FAKE cell (no kernel)") {
-      fit.select(pmod(col("vec_id"), lit(390)).cast("int").as("cell"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("x").cast(
-          org.apache.spark.sql.types.DecimalType(28, 10))).as("sx"),
-          count(lit(1)).as("n"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    timed("variant B: kernel cell + explode, DOUBLE sum") {
-      fit.select(element_at(graft.functions.NearestCells(
-            spark, col("embedding"), cents, 1), 1).as("cell"),
-          posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("n"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    timed("variant C: kernel cell in SEPARATE select, then explode+decimal") {
-      fit.select(element_at(graft.functions.NearestCells(
-            spark, col("embedding"), cents, 1), 1).as("cell"),
-          col("embedding"))
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("x").cast(
-          org.apache.spark.sql.types.DecimalType(28, 10))).as("sx"),
-          count(lit(1)).as("n"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    timed("cell histogram") {
-      corpus2l.groupBy(col("cell")).count()
-        .agg(count(lit(1)), max(col("count")), avg(col("count"))).show()
-    }
-    val dups = corpus2l.select(col("cell"), col("vec_id").as("a_id"),
-        col("embedding").as("av"))
-      .join(corpus2l.select(col("cell"), col("vec_id").as("b_id"),
-        col("embedding").as("bv")), Seq("cell"))
-      .where(col("b_id") < col("a_id"))
-      .where(graft.functions.CosineSimilarity(
-        spark, col("av"), col("bv")) >= 0.35)
-      .groupBy(col("a_id").as("vec_id"))
-      .agg(min(col("b_id")).as("dup_of"))
-    timed("within-cell dup join (noop sink)") {
-      dups.write.format("noop").mode("overwrite").save()
-    }
-    spark.stop()
-  }
-
   /** Per-stage row counts for the ngram candidate machinery
     * (ex-Diag3, r7 — attributes superlinear growth to a stage). */
   private def ngramStages(args: Array[String]): Unit = {
@@ -268,46 +133,6 @@ object Diag {
       }
       counts.foreach { case (k, v) => println(f"  con  $k%-16s $v%12d") }
     }
-    spark.stop()
-  }
-
-  /** Text-scan superlinearity attribution (ex-Diag4, r9). */
-  private def textScan(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("testdata-sf5")
-    val iters = if (args.length > 1) args(1).toInt else 3
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-diag4")
-    def timed(tag: String)(df: org.apache.spark.sql.DataFrame): Unit =
-      (1 to iters).foreach { i =>
-        val t0 = System.nanoTime()
-        Bench.materialize(df)
-        println(f"[diag4] $tag iter$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    val docs = graft.engine.Tables.documents(spark, sfDir)
-    timed("scan_text_only")(docs.select(length(col("text")).as("l")))
-    val proj = docs.select(
-      col("doc_id"),
-      size(filter(split(lower(col("text")), " "), t => t =!= ""))
-        .cast("long").as("ws_tokens"),
-      size(expr("regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]', 0)"))
-        .cast("long").as("bpe_tokens"))
-    timed("regex_proj_no_sort")(proj)
-    timed("regex_proj_sorted")(proj.orderBy("doc_id"))
-    timed("bpe_kernel_no_sort")(docs.select(col("doc_id"),
-      graft.functions.BpeTokenCount(spark, col("text")).as("n")))
-    // sort FIRST (samples only the cheap scan), project after — the
-    // projection is order-preserving, so output order is identical
-    val sortedFirst = docs.select(col("doc_id"), col("text"))
-      .orderBy("doc_id")
-      .select(
-        col("doc_id"),
-        size(filter(split(lower(col("text")), " "), t => t =!= ""))
-          .cast("long").as("ws_tokens"),
-        size(expr(
-          "regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]', 0)"))
-          .cast("long").as("bpe_tokens"))
-    timed("regex_sort_first")(sortedFirst)
-    sortedFirst.explain("formatted")
     spark.stop()
   }
 
@@ -400,91 +225,6 @@ object Diag {
           f"${(System.nanoTime() - t0) / 1e9}%.2f s ($pairs pairs)")
       }
     }
-    spark.stop()
-  }
-
-  /** q_dedup_incremental_near stage profiler (ex-DiagIncr, r12):
-    * batch gram extraction, candidate probe (semi-filtered vs
-    * unified), re-score — pass `nosemi` to drop the broadcast key
-    * semi-filter and measure its contribution. */
-  private def incr(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val idxDir = args(1)
-    val spark = Sessions.local("32", "graft-diagincr")
-    spark.conf.set(IncrementalDedup.IndexDirConf, idxDir)
-    def time(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"[diagincr] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-    }
-    val jt = 0.8
-    val batch = DedupOps.ngramGrams(spark, sfDir)
-      .where(col("doc_id") % 10 === 0)
-      .where(size(col("bg")) > 0)
-      .select(col("doc_id"), size(col("bg")).cast("long").as("n"), col("bg"))
-    time("batch_grams")(batch.count())
-    // read through the index API: the index is log-structured
-    // (gen_* subdirs, replaces-lists) — a flat parquet read of the
-    // roots would miss all of that
-    val (idxDocsAll, idxPostingsAll) = IncrementalDedup.indexFor(spark, sfDir)
-    // mirror the query's disjointness rule: the batch is authoritative
-    // for its doc_ids
-    val idxPostings = idxPostingsAll
-      .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
-      .select("g", "doc_id", "n")
-    val idxDocs = idxDocsAll
-      .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_anti")
-      .select("doc_id", "n", "bg")
-    val prefixG = batch
-      .select(col("doc_id").as("new_id"), col("n").as("new_n"),
-        posexplode(col("bg")).as(Seq("pos", "g")))
-      .where(col("pos") + 1 <=
-        col("new_n") - ceil(lit(jt) * col("new_n") - lit(1e-9)) + 1)
-
-    // A: semi-broadcast gram keys, then join
-    val keys = prefixG.select(col("g")).distinct()
-    val postFiltered = idxPostings.join(broadcast(keys), Seq("g"), "leftsemi")
-    val candA = prefixG
-      .join(postFiltered.select(col("g"), col("doc_id").as("old_id"),
-        col("n").as("old_n")), Seq("g"))
-      .where(least(col("new_n"), col("old_n")).cast("double")
-        / greatest(col("new_n"), col("old_n")) >= jt)
-      .select(col("new_id"), col("old_id")).distinct()
-    time("candidates_semibcast")(candA.count())
-
-    // B: unified probe — batch + index postings in one join
-    val batchPostings = batch.select(explode(col("bg")).as("g"),
-      col("doc_id"), col("n"))
-    val postAll = idxPostings.unionByName(batchPostings)
-    val postAllF =
-      if (args.length > 2 && args(2) == "nosemi") postAll
-      else postAll.join(broadcast(keys), Seq("g"), "leftsemi")
-    val candB = prefixG
-      .join(postAllF.select(col("g"), col("doc_id").as("o_id"),
-        col("n").as("o_n")), Seq("g"))
-      .where(col("o_id") =!= col("new_id"))
-      .where(least(col("new_n"), col("o_n")).cast("double")
-        / greatest(col("new_n"), col("o_n")) >= jt)
-      .select(least(col("new_id"), col("o_id")).as("a_id"),
-        greatest(col("new_id"), col("o_id")).as("b_id")).distinct()
-    time("candidates_unified")(candB.count())
-
-    val allDocs = idxDocs.unionByName(batch)
-    val scored = candB
-      .join(allDocs.select(col("doc_id").as("a_id"), col("bg").as("a_bg")),
-        Seq("a_id"))
-      .join(allDocs.select(col("doc_id").as("b_id"), col("bg").as("b_bg")),
-        Seq("b_id"))
-      .select(col("a_id"), col("b_id"),
-        graft.functions.SortedIntersectCount(spark,
-          col("a_bg"), col("b_bg")).as("n_common"),
-        size(col("a_bg")).cast("long").as("na"),
-        size(col("b_bg")).cast("long").as("nb"))
-      .withColumn("jaccard", col("n_common").cast("double")
-        / (col("na") + col("nb") - col("n_common")))
-      .where(col("jaccard") >= jt)
-    time("unified_scored")(scored.count())
-    time("unified_e2e_again")(scored.count())
     spark.stop()
   }
 

@@ -40,6 +40,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => graft.plans.ThresholdLevenshtein)
     e.injectOptimizerRule(_ => graft.plans.SortBelowExpensiveProject)
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.queries.BucketPairsStrategy)
     // SQL surface of the native as-of join: TVF emits the unresolved
     // node, the resolution rule completes it once the catalog has
     // resolved the relation children.

@@ -57,13 +57,17 @@ object Snapshot {
     * a date/tenant partition key makes later scans prunable and keeps
     * single files bounded. */
   def write(df: DataFrame, dest: String, partitionBy: Seq[String] = Nil): Long = {
-    val w = df.write.mode("overwrite")
+    import org.apache.spark.sql.functions.{count, lit}
+    val obs = org.apache.spark.sql.Observation()
+    val w = df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(dest)
-    // Validate AFTER writing from the parquet footers (metadata-only
-    // count) — one pass over the source, mirroring the reference's
-    // post-dump [ -s "$DUMP_FILE" ] ordering (backup.sh:215).
-    val n = df.sparkSession.read.parquet(dest).count()
+    // Validate AFTER writing, with the count observed on the write's own
+    // pass — one pass over the source, mirroring the reference's
+    // post-dump [ -s "$DUMP_FILE" ] ordering (backup.sh:215). The
+    // written files are counted only when no observation arrives.
+    val n = scala.util.Try(scala.concurrent.Await.result(obs.future, ObservedWait)
+      .getLong(0)).getOrElse(df.sparkSession.read.parquet(dest).count())
     if (n == 0L) throw new EmptySnapshotException(s"snapshot at $dest has no data")
     n
   }

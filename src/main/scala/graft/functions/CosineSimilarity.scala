@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -48,46 +49,20 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    // Ragged pair or null element → NULL, matching the composed
-    // zip_with/aggregate form and the DuckDB mirror (out-of-range list
-    // index → NULL) — keeps the BIT-IDENTICAL contract on all inputs.
-    if (n != y.numElements()) return null
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    dot / math.sqrt(na * nb)
+    val acc = new Array[Double](3)
+    if (CosineSimilarity.fold(a.asInstanceOf[ArrayData],
+        b.asInstanceOf[ArrayData], norms = true, acc))
+      acc(0) / math.sqrt(acc(1) * acc(2))
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val n = ctx.freshName("n")
-    val dot = ctx.freshName("dot")
-    val na = ctx.freshName("na")
-    val nb = ctx.freshName("nb")
-    val i = ctx.freshName("i")
-    val xi = ctx.freshName("xi")
-    val yi = ctx.freshName("yi")
+    val acc = ctx.addMutableState("double[]", "cosAcc",
+      v => s"$v = new double[3];")
     nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      int $n = $a.numElements();
-      if ($n != $b.numElements()) { ${ev.isNull} = true; }
-      else {
-        double $dot = 0.0, $na = 0.0, $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-          double $xi = (double) $a.getFloat($i);
-          double $yi = (double) $b.getFloat($i);
-          $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-        }
-        if (!${ev.isNull}) { ${ev.value} = $dot / Math.sqrt($na * $nb); }
-      }""")
+      if (graft.functions.CosineSimilarity$$.MODULE$$.fold($a, $b, true, $acc)) {
+        ${ev.value} = $acc[0] / Math.sqrt($acc[1] * $acc[2]);
+      } else { ${ev.isNull} = true; }""")
   }
 
   override protected def withNewChildrenInternal(
@@ -97,6 +72,36 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   val name = "cosine_sim"
+
+  /** The one cosine arithmetic, shared by the expression (interpreted
+    * and generated code), [[SquaredNorm]] and the bucket verifier
+    * (`queries.BucketPairs`): left folds from 0.0, over the elements in
+    * order with each float widened before the multiply, of x·y into
+    * `acc(0)` and, when `norms`, of x·x and y·y into `acc(1)` and
+    * `acc(2)` in the same traversal. False — a NULL cosine — for a
+    * ragged pair or a null element, as the composed form and the DuckDB
+    * mirror (out-of-range list index → NULL) give.
+    *
+    * `fold(x, x, norms = false, acc)` leaves in `acc(0)` exactly the
+    * x·x the three-sum form accumulates, so a caller holding both
+    * squared norms scores a pair with one dot product and gets the
+    * identical double. */
+  def fold(x: ArrayData, y: ArrayData, norms: Boolean, acc: Array[Double]): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return false
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return false
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi
+      if (norms) { na += xi * xi; nb += yi * yi }
+      i += 1
+    }
+    acc(0) = dot; acc(1) = na; acc(2) = nb
+    true
+  }
 
   val info = new ExpressionInfo(classOf[CosineSimilarity].getName, name)
 
@@ -118,4 +123,21 @@ object CosineSimilarity {
     register(spark)
     call_function(name, a, b)
   }
+}
+
+/** Squared L2 norm of an array<float> column by [[CosineSimilarity.fold]]:
+  * the per-vector half of the cosine, computed once per row so a pair
+  * verifier needs only the dot product. NULL for a null element. Built
+  * in Scala only (no SQL name). */
+case class SquaredNorm(child: Expression) extends UnaryExpression
+    with CodegenFallback {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val acc = new Array[Double](3)
+    if (CosineSimilarity.fold(x, x, norms = false, acc)) acc(0) else null
+  }
+  override protected def withNewChildInternal(c: Expression): SquaredNorm =
+    copy(child = c)
 }

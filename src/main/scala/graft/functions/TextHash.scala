@@ -78,8 +78,4 @@ object TextHash {
   def estJaccard(sigA: Column, sigB: Column, perms: Int): Column =
     size(filter(zip_with(sigA, sigB, (x, y) => x === y), b => b))
       .cast("double") / perms
-
-  /** Hamming distance between two SimHash fingerprints. */
-  def hamming(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b)).cast("long")
 }

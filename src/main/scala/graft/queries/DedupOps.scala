@@ -24,9 +24,8 @@ object DedupOps {
   private[graft] val Bands = 8
   private[graft] val RowsPerBand = 4
 
-  /** The random-hyperplane model for embedding LSH (seeded → identical
-    * across JVMs/plan branches); shared by q_sim_lsh_topk and
-    * q_dedup_embedding's candidate generator. */
+  /** The random-hyperplane model of q_sim_lsh_topk (seeded → identical
+    * across JVMs). */
   private[graft] val LshPlanes: Seq[Seq[Double]] = {
     val rnd = new scala.util.Random(42)
     Seq.fill(16)(Seq.fill(64)(rnd.nextGaussian()))
@@ -208,43 +207,23 @@ object DedupOps {
     Some(s"$simhashOracleCtes\n    SELECT doc_id, simhash FROM sh ORDER BY doc_id"))
 
   /** EXT: SimHash near-dup PAIRS via the Manku block-LSH shape (Manku,
-    * Jain & Sarma, WWW'07 §3): explode each fingerprint into
-    * [[SimBlocks]] (block_idx, block_val) keys, equi-join on them, keep
-    * pairs within hamming distance [[SimHamT]]. The block split makes
-    * recall EXACT at this threshold (pigeonhole above) while the join
-    * touches only block-collision candidates — never the doc×doc cross
-    * product. Candidate volume per block value is |bucket|²; 15-bit
-    * blocks give 32k buckets per index, and the hot-bucket overflow
-    * pattern of q_dedup_near (BucketCap + star pairs) is the documented
-    * escalation if a degenerate corpus (millions of identical docs)
-    * concentrates one value — exact dedup upstream removes exactly that
-    * mass. Both join branches shuffle the SAME (block_idx, block_val)
-    * projection, so the exchange is computed once and reused. */
+    * Jain & Sarma, WWW'07 §3): each fingerprint's [[SimBlocks]] block
+    * values are its bucket keys, and pairs within hamming distance
+    * [[SimHamT]] are kept. The block split makes recall EXACT at this
+    * threshold (pigeonhole above), while only block-collision candidates
+    * are ever scored — never the doc×doc cross product. Candidate volume
+    * per block value is |bucket|²; 15-bit blocks give 32k buckets per
+    * index, and the hot-bucket overflow pattern of q_dedup_near
+    * (BucketCap + star pairs) is the documented escalation if a
+    * degenerate corpus (millions of identical docs) concentrates one
+    * value — exact dedup upstream removes exactly that mass. */
   val dedupSimhashPairs: Q = Q(
     "q_dedup_simhash_pairs",
-    (s, d) => {
-      val sh = Tables.documents(s, d)
-        .where(size(TextHash.tokens(col("text"))) > 0)
-        .select(col("doc_id"),
-          graft.functions.SimHashPortable(s, col("text"), SimBits)
-            .as("simhash"))
-      val blocks = sh.select(col("doc_id"), col("simhash"),
-        posexplode(array((0 until SimBlocks).map(i =>
-          shiftrightunsigned(col("simhash"), i * SimBlockBits)
-            .bitwiseAND(lit((1L << SimBlockBits) - 1))): _*))
-          .as(Seq("block_idx", "block_val")))
-      val a = blocks.select(col("block_idx"), col("block_val"),
-        col("doc_id").as("a_id"), col("simhash").as("a_sh"))
-      val b = blocks.select(col("block_idx"), col("block_val"),
-        col("doc_id").as("b_id"), col("simhash").as("b_sh"))
-      a.join(b, Seq("block_idx", "block_val"))
-        .where(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          TextHash.hamming(col("a_sh"), col("b_sh")).as("hamming"))
-        .where(col("hamming") <= SimHamT)
-        .distinct()
-        .orderBy("a_id", "b_id")
-    },
+    (s, d) => simhashPairs(Tables.documents(s, d)
+      .where(size(TextHash.tokens(col("text"))) > 0)
+      .select(col("doc_id"),
+        graft.functions.SimHashPortable(s, col("text"), SimBits)
+          .as("simhash"))),
     Some(s"""$simhashOracleCtes,
     blocks AS (
       SELECT doc_id, simhash, bl AS block_idx,
@@ -258,6 +237,18 @@ object DedupOps {
     WHERE x.doc_id < y.doc_id
       AND bit_count(xor(x.simhash, y.simhash)) <= $SimHamT
     ORDER BY a_id, b_id"""))
+
+  /** (doc_id, simhash) rows → (a_id < b_id, hamming ≤ [[SimHamT]]) pairs,
+    * each once: a complete pairing of every block bucket
+    * ([[BucketPairs]]). A NULL simhash pairs with nothing. */
+  private[graft] def simhashPairs(sh: DataFrame): DataFrame =
+    BucketPairs(sh, col("doc_id"),
+      array((0 until SimBlocks).map(i =>
+        shiftrightunsigned(col("simhash"), i * SimBlockBits)
+          .bitwiseAND(lit((1L << SimBlockBits) - 1))): _*),
+      col("simhash"), BucketPairs.Complete, BucketPairs.Hamming(SimHamT))
+      .select(col("a_id"), col("b_id"), col("score").as("hamming"))
+      .orderBy("a_id", "b_id")
 
   /** Shared oracle CTEs: per-doc portable SimHash, bit-exact vs the
     * kernel (GramSketch.simhashPortable — same token split, same
@@ -851,77 +842,12 @@ object DedupOps {
   /** Mandated EXT: LSH-bucketed approximate nearest neighbors — random
     * hyperplane signatures (seeded, compile-time deterministic), 4-bit
     * band buckets, exact cosine re-rank of candidates only. The 100 TB
-    * path for q_sim_topk_cosine: probe and corpus shuffle on bucket key,
-    * never cross-joining. Approximate → no SQL oracle; DedupSpec checks
+    * path for q_sim_topk_cosine: probes meet the corpus only inside a
+    * shared band bucket, never cross-joining. DedupSpec checks
     * candidates against the brute-force ranking. */
   val simLshTopk: Q = Q(
     "q_sim_lsh_topk",
-    (s, d) => {
-      // One-pass native signature kernel: all 16 plane dots over a
-      // single read of the vector (HyperplaneSig's scaladoc has the
-      // interpreted-HOF cliff this replaces; bits are bit-identical to
-      // the composed 16× Vectors.dot form).
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"),
-          graft.functions.HyperplaneSig(
-            s, col("embedding"), DedupOps.LshPlanes).as("sig"))
-      // Candidate generation on KEY ROWS ONLY (r19, guide §2.3/§8): the
-      // r18 shape carried BOTH 64-float embeddings through the band
-      // join and deduped with a first()-SortAggregate — at sf20 that
-      // shuffled 4.3 GB of candidate pairs (qprofile: two stages of
-      // 656 s + 249 s summed executor time, 22.7 s + 12.7 s span) to
-      // move ~20 bytes of decision per pair. Candidates are now
-      // (probe_id, cand_id) only; vectors re-attach AFTER the distinct.
-      def bandedKeys(df: DataFrame, prefix: String) =
-        df.select(col("vec_id").as(s"${prefix}_id"),
-          explode(array((0 until 4).map(b =>
-            struct(lit(b).as("band_idx"),
-              shiftright(col("sig"), b * 4).bitwiseAND(15).as("band_val")))
-            : _*)).as("band"))
-          .select(col(s"${prefix}_id"),
-            col("band.band_idx").as("band_idx"),
-            col("band.band_val").as("band_val"))
-      // BOUNDED probe set — a top-k serving benchmark's probe count is
-      // a property of the workload, not the corpus. The r5 form
-      // (`vec_id % 100 == 0` alone) was a FRACTION of the corpus, so
-      // probes × bucket-size grew quadratically with the data (r6
-      // sf1→sf5 measured 16× for 5×); the id ceiling caps it at ≤200
-      // probes at any scale, making the query linear in the corpus
-      // (each probe touches its 4 buckets, buckets ∝ n/16).
-      val probePred = col("vec_id") % 100 === 0 && col("vec_id") < 20000
-      // FORCED broadcast is safe here by construction (≤200 probes × 4
-      // bands = ≤800 key rows at any scale); without the hint the
-      // planner broadcast the CORPUS side at small SFs (file-estimate
-      // under the 10 MB threshold) and fell back to shuffling the
-      // array-carrying corpus at sf20.
-      val probes = broadcast(bandedKeys(e.filter(probePred), "probe"))
-      val corpus = bandedKeys(e, "cand")
-      val cands = corpus.join(probes, Seq("band_idx", "band_val"))
-        .where(col("cand_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("cand_id")).distinct()
-      // Re-rank: attach vectors by id. The probe side is ≤200 rows —
-      // always broadcast. The corpus side rides the same size-gated
-      // broadcast discipline as q_dedup_embedding's re-rank
-      // (Similarity.reRankEmbeddings): broadcast when the inflated
-      // estimate fits, else degrade to the shuffled join (one exchange
-      // of the vectors — still strictly less than the r18 shape, which
-      // shuffled them per candidate pair instead of per vector).
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("cand_id").asc)
-      cands
-        .join(Similarity.reRankSide(
-          e.select(col("vec_id").as("cand_id"), col("embedding").as("cand_v")),
-          e), Seq("cand_id"))
-        .join(broadcast(e.filter(probePred).select(
-          col("vec_id").as("probe_id"), col("embedding").as("probe_v"))),
-          Seq("probe_id"))
-        .withColumn("cos", graft.functions.CosineSimilarity(
-          s, col("probe_v"), col("cand_v")))
-        .withColumn("k", row_number().over(w).cast("long"))
-        .where(col("k") <= 5)
-        .select("probe_id", "k", "cand_id", "cos")
-        .orderBy("probe_id", "k")
-    },
+    (s, d) => lshTopk(Tables.embeddings(s, d)),
     // The full LSH pipeline is declared semantics, mirrored bit-exactly
     // (same trick as q_dedup_embedding): plane literals round-trip
     // through shortest-repr doubles, each signature bit is a sign test
@@ -953,6 +879,35 @@ object DedupOps {
     SELECT probe_id, k, cand_id, cos
     FROM ranked WHERE k <= 5 ORDER BY probe_id, k"""
     })
+
+  /** (vec_id, embedding) rows → each probe's top 5 candidates by
+    * (cos DESC NULLS LAST, cand_id). Probes are a BOUNDED set — a top-k
+    * serving benchmark's probe count is a property of the workload, not
+    * the corpus: the id ceiling caps them at ≤200 at any scale, so the
+    * query stays linear in the corpus (each probe touches its 4 buckets,
+    * buckets ∝ n/16). Candidates are the members of a probe's band
+    * buckets ([[BucketPairs.Probes]]), scored beside the probe; a NULL
+    * signature (ragged or null-element vector) joins no bucket. */
+  private[graft] def lshTopk(e: DataFrame): DataFrame = {
+    val s = e.sparkSession
+    // one-pass native kernel: all 16 plane dots over one read of the
+    // vector, bit-identical to the composed 16× Vectors.dot form
+    val sig = e.select(col("vec_id"), col("embedding"),
+      graft.functions.HyperplaneSig(s, col("embedding"), LshPlanes).as("sig"))
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("cos").desc, col("cand_id").asc)
+    BucketPairs(sig, col("vec_id"),
+      array((0 until 4).map(b =>
+        shiftright(col("sig"), b * 4).bitwiseAND(15)): _*),
+      col("embedding"), BucketPairs.Probes, BucketPairs.Cosine(None),
+      probe = col("vec_id") % 100 === 0 && col("vec_id") < 20000)
+      .select(col("a_id").as("probe_id"), col("b_id").as("cand_id"),
+        col("score").as("cos"))
+      .withColumn("k", row_number().over(w).cast("long"))
+      .where(col("k") <= 5)
+      .select("probe_id", "k", "cand_id", "cos")
+      .orderBy("probe_id", "k")
+  }
 
   /** Blocks-per-prefix ceiling for the fuzzy-name pairwise path. The
     * 16-char prefix block was FIXTURE-COUPLED (r8 verdict): on

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the exact top-k broadcasts the (small) probe set and
   * streams the corpus — a BroadcastNestedLoopJoin whose cost is
-  * |probes|·|corpus|, linear in the 100 TB side. The all-pairs form is
-  * blocked on an equi key (label) so it hash-joins instead of crossing.
-  * The LSH variant (DedupOps.simLshTopk) is the true 100 TB path: both
-  * sides shuffle on bucket signature, never pairing across buckets.
+  * |probes|·|corpus|, linear in the 100 TB side. The embedding dedup
+  * and the LSH variant (DedupOps.simLshTopk) are the true 100 TB paths:
+  * rows meet only inside a shared (label,) band bucket, scored where
+  * both vectors sit ([[BucketPairs]]), never pairing across buckets.
   */
 object Similarity {
 
@@ -96,36 +96,6 @@ object Similarity {
     * Deterministic (vec_id order), mirrored in the oracle SQL. */
   private val BandWindow = 64
 
-  /** Ceiling on the estimated IN-MEMORY size for a forced broadcast()
-    * of the vector table (re-rank joins). 2 GiB ≈ 4·10⁶ 64-float
-    * vectors — comfortably inside executor memory; above it the hint
-    * would OOM instead of degrade, so the join reverts to the shuffled
-    * shape. Compared against the optimizer's file-derived estimate
-    * scaled by RowInflation, NOT the raw estimate: Spark's
-    * sizeInBytes is parquet-file-derived and ArrayType.defaultSize
-    * assumes ~1 element, so a 64-float embedding row is ~8× larger
-    * unpacked in the broadcast hash map than the estimate claims — an
-    * ungated raw comparison could approve a broadcast that lands past
-    * the 8 GB hard limit (r8 advice). */
-  private val BroadcastCapBytes = BigInt(2L) << 30
-
-  /** Measured parquet-estimate → unpacked-row inflation for the 64-float
-    * embedding schema (dictionary/RLE-compressed file bytes vs UnsafeRow
-    * + broadcast HashedRelation overhead). */
-  private val RowInflation = 8
-
-  /** Size-gated forced broadcast for a vector-table re-rank join
-    * (shared by q_dedup_embedding and q_sim_lsh_topk): broadcast()
-    * OOMs instead of degrading past broadcastable range, so the hint
-    * is applied only while the INFLATED optimizer estimate of the
-    * vector table `e` fits [[BroadcastCapBytes]]; above it the join
-    * falls back to the plain shuffled shape (slower, never fatal) —
-    * the 100 TB degradation path. */
-  private[queries] def reRankSide(side: DataFrame, e: DataFrame): DataFrame =
-    if (e.queryExecution.optimizedPlan.stats.sizeInBytes * RowInflation
-        <= BroadcastCapBytes) broadcast(side)
-    else side
-
   /** Mandated EXT: embedding-cosine near-duplicates — candidates from
     * an 8-band random-hyperplane LSH join WITHIN label (each bucket
     * member pairing with its ≤ BandWindow vec_id-order predecessors),
@@ -148,77 +118,7 @@ object Similarity {
     * asserted in DedupSpec. */
   val dedupEmbedding: Q = Q(
     "q_dedup_embedding",
-    (s, d) => {
-      val e = Tables.embeddings(s, d)
-        .where(size(col("embedding")) === 64)
-        .select(col("vec_id"), col("label"), col("embedding"),
-          graft.functions.HyperplaneSig(
-            s, col("embedding"), DedupPlanes).as("sig"))
-      // Narrow banded relation (no embedding payload) → the candidate
-      // shuffle moves (id, label, band) only; vectors rejoin by id for
-      // the exact re-rank.
-      val banded = e.select(col("vec_id"), col("label"),
-        explode(array((0 until DedupBands).map(b =>
-          struct(lit(b).as("band_idx"),
-            shiftright(col("sig"), b * DedupRowsPerBand)
-              .bitwiseAND((1 << DedupRowsPerBand) - 1).as("band_val"))): _*))
-          .as("band"))
-        .select(col("vec_id"), col("label"),
-          col("band.band_idx").as("band_idx"),
-          col("band.band_val").as("band_val"))
-      // Each member pairs with its ≤ BandWindow vec_id-order bucket
-      // PREDECESSORS, gathered by ONE bounded window collect_list over
-      // the bucket partition (r19, guide §2.4). The r18 shape computed
-      // a row_number position, exploded each member into its ≤ 64
-      // predecessor POSITIONS (~bands·BandWindow·n rows), and
-      // equi-joined back on the exact position — at sf20 (400k
-      // vectors) that exploded stream was a 1.3 GB exchange feeding a
-      // 200M-row sort-merge join (qprofile: 588 s + 450 s summed
-      // executor time). The sliding-frame list yields the IDENTICAL
-      // pair set (same bucket, same vec_id order, same ≤ BandWindow
-      // look-back; an empty frame on the bucket's first row is dropped
-      // by explode, matching the old pos > 1 filter) with zero joins:
-      // one bucket exchange, candidates generated partition-locally.
-      // Candidates stay bounded by construction (≤ bands·BandWindow·n).
-      val wPred = Window.partitionBy(col("label"), col("band_idx"),
-        col("band_val")).orderBy(col("vec_id"))
-        .rowsBetween(-BandWindow, -1)
-      // (Measured r19, NOT kept: distinct on (a_id, b_id) only with
-      // label re-attached via the a-side join — label is functionally
-      // determined by a_id so results are identical, but the sf20
-      // qprofile read the dedup exchange at 1.60 GB vs 1.54 GB keeping
-      // label in the key, i.e. the "narrower" key compressed worse and
-      // bought nothing. Keep label in the distinct.)
-      val cands = banded
-        .withColumn("a_ids", collect_list(col("vec_id")).over(wPred))
-        .select(col("label"), explode(col("a_ids")).as("a_id"),
-          col("vec_id").as("b_id"))
-        .select("label", "a_id", "b_id").distinct()
-      val w = Window.partitionBy(col("b_id"))
-        .orderBy(col("cos").desc, col("a_id").asc)
-      // BROADCAST the vector table into both re-rank joins: the
-      // candidate stream is ~bands·BandWindow (≈512)× larger than the
-      // vector table, so a sort-merge shape shuffles the big side
-      // twice to co-locate the small one (sf20 measured: 258 s, spill-
-      // bound). Broadcasting streams candidates through two in-memory
-      // hash joins instead (sf20: 32-42 s). broadcast() is a FORCED
-      // hint — past broadcastable range it OOMs rather than degrading —
-      // so it is gated on the optimizer's size estimate: above
-      // BroadcastCapBytes the join falls back to the plain shuffled
-      // shape (slower, never fatal), the 100 TB degradation path.
-      cands
-        .join(reRankSide(e.select(col("vec_id").as("a_id"),
-          col("embedding").as("av")), e), Seq("a_id"))
-        .join(reRankSide(e.select(col("vec_id").as("b_id"),
-          col("embedding").as("bv")), e), Seq("b_id"))
-        .withColumn("cos",
-          graft.functions.CosineSimilarity(s, col("av"), col("bv")))
-        .where(col("cos") >= 0.35)
-        .withColumn("k", row_number().over(w).cast("long"))
-        .where(col("k") <= NearK)
-        .select("label", "a_id", "b_id", "cos", "k")
-        .orderBy("label", "a_id", "b_id")
-    },
+    (s, d) => embeddingDedup(Tables.embeddings(s, d)),
     Some(s"""WITH sig AS (
       SELECT vec_id, label, embedding,
         ${(0 until DedupBands).map(b => s"(${sqlBandVal(b)}) AS band_$b")
@@ -254,6 +154,35 @@ object Similarity {
       FROM pairs)
     WHERE k <= $NearK
     ORDER BY label, a_id, b_id"""))
+
+  /** (vec_id, label, embedding) rows → q_dedup_embedding's pairs. Each
+    * 64-dim vector pairs with its ≤ BandWindow vec_id-order predecessors
+    * in every (label, band, band value) bucket ([[BucketPairs.LookBack]]),
+    * scored by the exact cosine beside them; the survivors of cos ≥ 0.35
+    * are few, so their distinct is cheap. A NULL signature (a null
+    * element) joins no bucket. */
+  private[graft] def embeddingDedup(e: DataFrame): DataFrame = {
+    val s = e.sparkSession
+    val sig = e.where(size(col("embedding")) === 64)
+      .select(col("vec_id"), col("label"), col("embedding"),
+        graft.functions.HyperplaneSig(
+          s, col("embedding"), DedupPlanes).as("sig"))
+    val w = Window.partitionBy(col("b_id"))
+      .orderBy(col("cos").desc, col("a_id").asc)
+    BucketPairs(sig, col("vec_id"),
+      array((0 until DedupBands).map(b =>
+        shiftright(col("sig"), b * DedupRowsPerBand)
+          .bitwiseAND((1 << DedupRowsPerBand) - 1)): _*),
+      col("embedding"), BucketPairs.LookBack(BandWindow),
+      BucketPairs.Cosine(Some(0.35)), block = Seq("label"))
+      .select(col("label"), col("a_id"), col("b_id"), col("score").as("cos"))
+      // one exchange on b_id serves the distinct and the top-k window
+      .repartition(col("b_id")).distinct()
+      .withColumn("k", row_number().over(w).cast("long"))
+      .where(col("k") <= NearK)
+      .select("label", "a_id", "b_id", "cos", "k")
+      .orderBy("label", "a_id", "b_id")
+  }
 
   /** Native `cosine_sim` driven through the SQL registration path:
     * the query text resolves the function from the session catalog —

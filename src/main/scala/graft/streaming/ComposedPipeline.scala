@@ -112,12 +112,12 @@ object ComposedPipeline {
     * that stays atomic on stores whose rename is a non-atomic copy). A
     * re-executed batch (its generation already visible) is a no-op; a
     * racing retry loses the commit and self-cleans its staging. Returns
-    * true when this call published. One listing per batch. */
+    * true when this call published. One listing per batch; `sessions`
+    * is non-empty (the caller has counted it). */
   private def applyGeneration(
       s: SparkSession, root: String, layout: Generations.Layout,
       sessions: DataFrame, batchId: Long)(
       publish: (DataFrame, String) => Any): Boolean = {
-    if (sessions.isEmpty) return false
     val done = ids(s, root, layout)
     if (done.contains(batchId)) return false // retry of a done batch
     try {

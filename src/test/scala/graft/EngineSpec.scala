@@ -570,6 +570,22 @@ class SnapshotSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
   }
 
+  test("write reads its source once and counts what it wrote; an empty source still throws") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_write_").toString
+    val src = parquetRows(s"$dir/src", 400)
+    var n = -1L
+    val (rows, actions) = passes { n = Snapshot.write(src, s"$dir/out") }
+    assert(n == 400L)
+    assert(rows == 400L && actions == 1,
+      s"write read $rows rows in $actions actions; expected 400 in 1")
+    assert(spark.read.parquet(s"$dir/out").count() == 400L)
+    intercept[Snapshot.EmptySnapshotException] {
+      Snapshot.write(src.where(org.apache.spark.sql.functions.lit(false)),
+        s"$dir/empty")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("empty snapshot fails with the exit-code-2 analog") {
     import org.apache.spark.sql.functions.lit
     val empty = Tables.nation(spark, sf).where(lit(false))

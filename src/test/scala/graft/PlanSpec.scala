@@ -495,4 +495,29 @@ class PlanSpec extends SparkSpec {
     assert(pruned.count() ==
       li.where(col("l_returnflag") === "R").count())
   }
+
+  test("candidate-pair families scan their table once, join nothing, " +
+      "and compute each signature once") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    Seq("q_dedup_simhash_pairs" -> "simhash_portable(",
+        "q_dedup_embedding" -> "hyperplane_sig(",
+        "q_sim_lsh_topk" -> "hyperplane_sig(").foreach { case (name, sig) =>
+      val df = q(name)
+      df.collect()
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val text = plan.toString
+      assert(Plans.collectWithSubqueries(plan) {
+        case s: FileSourceScanExec => s }.size == 1, s"$name:\n$text")
+      assert(Plans.collectWithSubqueries(plan) {
+        case j: BaseJoinExec => j }.isEmpty, s"$name:\n$text")
+      assert(text.sliding(sig.length).count(_ == sig) == 1, s"$name:\n$text")
+      assert(text.contains("BucketPairs"), s"$name:\n$text")
+    }
+  }
 }

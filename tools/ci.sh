@@ -4,9 +4,10 @@
 # sf0.001 end-to-end Verify smoke (every declared query executes and
 # writes its result parquet; the DuckDB oracle compare is the driver's
 # sf0.01 job, but tools/check_oracle.py runs here too when duckdb is
-# available), and with it the benchmark's cdc smoke: extract, publish,
+# available), and with it the benchmark's cdc smoke (extract, publish,
 # round trip, diff, merge and the streaming pipeline, each checked in
-# DuckDB.
+# DuckDB) and curation smoke (the dedup, similarity and text queries
+# against their DuckDB oracles).
 #
 # Usage: tools/ci.sh [testdata-dir]   (default /root/testdata/sf0.001)
 set -euo pipefail
@@ -89,12 +90,16 @@ echo "== ci: $n_out query results written =="
 if python3 -c 'import duckdb, pyarrow, pandas' 2>/dev/null; then
   echo "== ci: oracle compare =="
   python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
-  echo "== ci: cdc smoke @ $SF_DIR =="
-  # one workload prints its verdict as JSON and exits 0 either way
-  smoke=$(python3 perfbench/run.py --workload cdc --seconds 0 --data "$SF_DIR" | tail -n 1)
-  echo "$smoke"
-  python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r["correct"] and r["failed"] == 0 else 1)' "$smoke" \
-    || { echo "ci: cdc smoke failed its checks" >&2; exit 1; }
+  # one workload prints its verdict as JSON and exits 0 either way; the
+  # curation smoke runs the DuckDB oracles of q_dedup_embedding and
+  # q_sim_lsh_topk, which are skipped on the benchmark's own fixture
+  for workload in cdc curation; do
+    echo "== ci: $workload smoke @ $SF_DIR =="
+    smoke=$(python3 perfbench/run.py --workload "$workload" --seconds 0 --data "$SF_DIR" | tail -n 1)
+    echo "$smoke"
+    python3 -c 'import json, sys; r = json.loads(sys.argv[1]); sys.exit(0 if r["correct"] and r["failed"] == 0 else 1)' "$smoke" \
+      || { echo "ci: $workload smoke failed its checks" >&2; exit 1; }
+  done
 else
   echo "== ci: duckdb/pyarrow/pandas unavailable — oracle compare and cdc smoke skipped =="
 fi
