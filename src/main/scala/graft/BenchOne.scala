@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * Uses the same session shape as Bench; prints per-iteration seconds,
   * and under them the executor totals of that iteration's jobs
   * ([[ExecTotals]]): run and CPU time, GC, input, shuffle and spill
-  * bytes, and jobs, stages and tasks.
+  * bytes, jobs, stages and tasks, and the generated classes compiled
+  * (a later iteration that still compiles many is missing Spark's
+  * codegen cache). Queries run one at a time: the compile counter is
+  * JVM-wide.
   * Trailing key=value args become session conf (e.g.
   * `spark.graft.dedup.indexDir=/tmp/idx` to bench the index-probe path
   * — its iter1 then includes the one-time build+publish, iter2+ the
@@ -64,17 +67,21 @@ object BenchOne {
 /** Executor totals of the Spark jobs one call starts, summed from task
   * and stage events. Jobs are attributed through a local property set
   * on the calling thread (the threads AQE submits stages from inherit
-  * it), so work of other threads is not counted. */
+  * it), so work of other threads is not counted. The exception is
+  * `compiled`, the generated classes Janino compiled during the call
+  * (Spark's `CodegenMetrics`): that counter is JVM-wide, so it counts
+  * every thread of this JVM (and, under `local-cluster`, none of the
+  * executor JVMs). */
 private[graft] object ExecTotals {
   final class Totals {
     var jobs, stages, tasks, runMs, cpuNs, gcMs, inputBytes,
-      shuffleWriteBytes, shuffleReadBytes, spillBytes = 0L
+      shuffleWriteBytes, shuffleReadBytes, spillBytes, compiled = 0L
     private def mb(b: Long) = b / 1048576.0
     def line: String =
       f"run ${runMs / 1e3}%.2f s cpu ${cpuNs / 1e9}%.2f s gc ${gcMs / 1e3}%.2f s" +
         f" input ${mb(inputBytes)}%.1f MB shuffle write ${mb(shuffleWriteBytes)}%.1f MB" +
         f" read ${mb(shuffleReadBytes)}%.1f MB spill ${mb(spillBytes)}%.1f MB" +
-        s" jobs $jobs stages $stages tasks $tasks"
+        s" jobs $jobs stages $stages tasks $tasks compiled $compiled"
     override def toString: String = line
   }
 
@@ -107,6 +114,9 @@ private[graft] object ExecTotals {
     }
   }
 
+  private def compilations: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Runs `body` and returns its value with the totals of its jobs. */
   def measure[A](spark: SparkSession)(body: => A): (A, Totals) = {
     val sc = spark.sparkContext
@@ -115,7 +125,9 @@ private[graft] object ExecTotals {
     sc.addSparkListener(l)
     sc.setLocalProperty(Key, l.tag)
     try {
+      val compiled0 = compilations
       val a = body
+      l.t.compiled = compilations - compiled0
       org.apache.spark.sql.GraftPlanBridge.drainListeners(spark)
       (a, l.t)
     } finally {

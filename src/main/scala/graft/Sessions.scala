@@ -18,8 +18,20 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session tz: oracle parity depends on it.
   *  - the graft extension set (native functions, optimizer rules, the
   *    as-of join strategy, SQL parser extension).
+  *  - Spark's JVM-wide cache of generated classes holds one full pass
+  *    of the catalog ([[CodegenCacheEntries]]), or a repeating workload
+  *    misses on every access and recompiles every class with Janino in
+  *    every round (Spark's default of 100 entries is below what one
+  *    round of any benchmark workload compiles). The cache is sized when
+  *    the JVM first generates code, so only its first session sets it.
   */
 object Sessions {
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`): about twice the ~1,900
+    * distinct classes one pass over the 185-query catalog compiles,
+    * rounded up to a power of two. */
+  private[graft] val CodegenCacheEntries = 4096
+
   /** Multi-JVM override (VERDICT r15 missing #1): every run to r15
     * executed in ONE JVM (`local[n]`), which never tests that the
     * native kernels, typed Aggregators, the as-of strategy, the feed
@@ -103,6 +115,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -355,10 +355,13 @@ object Snapshot {
     resolved
   }
 
-  /** Read a pointer-committed generation. */
-  def readPointer(spark: SparkSession, root: String, gen: String): DataFrame =
+  /** Read a pointer-committed generation; a known `schema` spares the
+    * footer-reading job that infers it. */
+  def readPointer(
+      spark: SparkSession, root: String, gen: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
     resolvePointer(spark, root, gen) match {
-      case Some(obj) => spark.read.parquet(obj)
+      case Some(obj) => schema.fold(spark.read)(spark.read.schema).parquet(obj)
       case None => throw new EmptySnapshotException(
         s"no committed generation $gen under $root")
     }
@@ -718,7 +721,10 @@ object Snapshot {
     import org.apache.spark.sql.types._
     val obs = org.apache.spark.sql.Observation()
     write(df.observe(obs, count(lit(1)).as("n"), sum(rowHash(df)).as("digest")))
-    val back = spark.read.parquet(dest)
+    // read back with the frame's own schema, which the write just put in
+    // the footers: inferring it would start a footer-reading job. The
+    // fallback, verifyContent, reads with an inferred schema.
+    val back = spark.read.schema(df.schema).parquet(dest)
     // the manifest has min/max for every atomic orderable column
     val stats = if (!manifest) Nil else back.schema.fields.toSeq.filter(_.dataType match {
       case _: NumericType | StringType | BooleanType | DateType |

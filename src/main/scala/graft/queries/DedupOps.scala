@@ -3,7 +3,7 @@ package graft.queries
 import graft.Q
 import graft.engine.Tables
 import graft.functions.TextHash
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -177,6 +177,13 @@ object DedupOps {
   private val SimBlockBits = SimBits / SimBlocks
   private val SimHamT = SimBlocks - 1
 
+  /** The text has a token ([[TextHash.tokens]] is non-empty): it splits
+    * on ' ' and drops empty strings, so a token exists exactly when the
+    * text has a character other than ' ', which `trim` alone strips.
+    * NULL text drops. A generated-code predicate, so the filter neither
+    * interprets a higher-order function nor tokenizes a second time. */
+  private[graft] def hasToken(text: Column): Column = trim(text) =!= ""
+
   /** Mandated EXT: SimHash fingerprints — tf-weighted bit-majority
     * sketch over token hashes; near-dups differ in few bits (DedupSpec
     * asserts the hamming properties).
@@ -199,7 +206,7 @@ object DedupOps {
     "q_dedup_simhash",
     (s, d) =>
       Tables.documents(s, d)
-        .where(size(TextHash.tokens(col("text"))) > 0)
+        .where(hasToken(col("text")))
         .select(col("doc_id"),
           graft.functions.SimHashPortable(s, col("text"), SimBits)
             .as("simhash"))
@@ -220,7 +227,7 @@ object DedupOps {
   val dedupSimhashPairs: Q = Q(
     "q_dedup_simhash_pairs",
     (s, d) => simhashPairs(Tables.documents(s, d)
-      .where(size(TextHash.tokens(col("text"))) > 0)
+      .where(hasToken(col("text")))
       .select(col("doc_id"),
         graft.functions.SimHashPortable(s, col("text"), SimBits)
           .as("simhash"))),

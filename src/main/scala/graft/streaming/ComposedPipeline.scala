@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.engine.Generations
 
@@ -67,13 +68,14 @@ object ComposedPipeline {
     Generations.names(s, root, layout, GenRe.matches)
       .map(_.stripPrefix("gen_").toLong).sorted
 
-  /** Generation `id`'s data; a pointer read attaches its object dir. */
+  /** Generation `id`'s data; a pointer read attaches its object dir. A
+    * known `schema` spares the footer-reading job that infers it. */
   private def read(
       s: SparkSession, root: String, layout: Generations.Layout,
-      id: Long): DataFrame =
+      id: Long, schema: Option[StructType] = None): DataFrame =
     if (layout == Generations.Pointer)
-      graft.engine.Snapshot.readPointer(s, root, s"gen_$id")
-    else s.read.parquet(s"$root/gen_$id")
+      graft.engine.Snapshot.readPointer(s, root, s"gen_$id", schema)
+    else schema.fold(s.read)(s.read.schema).parquet(s"$root/gen_$id")
 
   /** Published generation ids under `root`. */
   def generationIds(s: SparkSession, root: String): Seq[Long] =
@@ -121,8 +123,9 @@ object ComposedPipeline {
     val done = ids(s, root, layout)
     if (done.contains(batchId)) return false // retry of a done batch
     try {
-      publish(merged(done.lastOption.map(read(s, root, layout, _)), sessions),
-        s"gen_$batchId")
+      // every generation holds the batches' columns (merged keeps them)
+      publish(merged(done.lastOption.map(read(s, root, layout, _,
+        Some(sessions.schema))), sessions), s"gen_$batchId")
       true
     } catch { case _: graft.engine.Snapshot.SnapshotExistsException => false }
   }

@@ -68,6 +68,21 @@ class DedupSpec extends SparkSpec {
     assert(ham(hashes(1L), hashes(3L)) < ham(hashes(1L), hashes(4L)))
   }
 
+  test("simhash token filter: the trim predicate keeps exactly the texts with a token") {
+    val texts = Seq[String](null, "", " ", "   ", "\t", "\n", " \t ", "a",
+      " a", "a ", "  a  b  ", "A B", "\u00a0", " \u3000 ", "x\u0000", "é ")
+      .toDF("text")
+    val kept = texts.select(col("text"),
+      coalesce(size(TextHash.tokens(col("text"))) > 0, lit(false)).as("old"),
+      coalesce(queries.DedupOps.hasToken(col("text")), lit(false)).as("new"))
+      .collect()
+    assert(kept.length == 16)
+    kept.foreach(r => assert(r.getBoolean(1) == r.getBoolean(2),
+      s"text ${Option(r.getString(0)).map(_.map(_.toInt))}: " +
+        s"tokens ${r.getBoolean(1)}, trim ${r.getBoolean(2)}"))
+    assert(kept.count(_.getBoolean(2)) == 12)
+  }
+
   test("simhash pairs: exact dups pair at hamming 0; unrelated never pair") {
     val pairs = Registry.byName("q_dedup_simhash_pairs").fn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap

@@ -570,6 +570,33 @@ class SnapshotSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
   }
 
+  test("publishAtomic reads its staged files back without inferring their schema") {
+    import org.apache.spark.scheduler._
+    val dir = java.nio.file.Files.createTempDirectory("graft_inference_").toString
+    val src = parquetRows(s"$dir/src", 400L)
+    // schema inference runs outside any SQL execution: a footer-reading job
+    val key = "graft.spec.inference"
+    val tag = java.util.UUID.randomUUID().toString
+    val outside = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => p.getProperty(key) == tag &&
+            p.getProperty(org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY) == null))
+          outside.add(e.stageInfos.map(_.name).mkString(", "))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(jobs)
+    sc.setLocalProperty(key, tag)
+    try assert(Snapshot.publishAtomic(spark, src, s"$dir/db_2024_08_01_000000").verified)
+    finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(jobs)
+    }
+    assert(outside.isEmpty, s"jobs outside a query: $outside")
+    Snapshot.delete(spark, dir)
+  }
+
   test("write reads its source once and counts what it wrote; an empty source still throws") {
     val dir = java.nio.file.Files.createTempDirectory("graft_write_").toString
     val src = parquetRows(s"$dir/src", 400)

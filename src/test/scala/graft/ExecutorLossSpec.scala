@@ -50,6 +50,9 @@ class ExecutorLossSpec extends SparkSpec {
         s"the scheduler must have seen the loss in a task end: $r")
       assert(r.getProperty("kill_digest") == r.getProperty("clean_digest"),
         s"recovery changed the answer: $r")
+      assert(r.getProperty("executor_codegen_cache_max_entries") ==
+        Sessions.CodegenCacheEntries.toString,
+        s"an executor JVM must size its codegen cache as the driver does: $r")
     } finally {
       java.nio.file.Files.delete(jars) // the link, never the install's jars
       org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
@@ -60,8 +63,8 @@ class ExecutorLossSpec extends SparkSpec {
 /** Child driver of [[ExecutorLossSpec]]. Runs [[ExecutorLossChild.Query]]
   * on `sfDir` once undisturbed and once under a [[KillListener]], and
   * writes both content digests and the listener's counts to
-  * `resultFile` (java properties). Exits non-zero only when a run
-  * throws.
+  * `resultFile` (java properties), with the codegen cache size a task
+  * on an executor JVM reads. Exits non-zero only when a run throws.
   *
   * Usage (with SPARK_GRAFT_MASTER=local-cluster[…] and
   * SPARK_SCALA_VERSION set, and a Spark home holding `jars`):
@@ -143,6 +146,10 @@ object ExecutorLossChild {
       // reliable checkpoints: a local checkpoint's blocks live on the
       // executor this run kills
       spark.sparkContext.setCheckpointDir(ckptDir)
+      // what an executor's first generated class sizes its cache from
+      val execCacheEntries = spark.range(1).map(_ =>
+        org.apache.spark.sql.internal.SQLConf.get.codegenCacheMaxEntries)(
+        org.apache.spark.sql.Encoders.scalaInt).head()
       val clean = digest(spark, sfDir)
       val listener = new KillListener(spark.sparkContext.applicationId)
       spark.sparkContext.addSparkListener(listener)
@@ -158,7 +165,8 @@ object ExecutorLossChild {
         "killed_pid" -> listener.killedPid.get().toString,
         "executors_removed" -> listener.executorsRemoved.get().toString,
         "lost_task_failures" -> listener.lostTaskFailures.get().toString,
-        "fetch_failures" -> listener.fetchFailures.get().toString
+        "fetch_failures" -> listener.fetchFailures.get().toString,
+        "executor_codegen_cache_max_entries" -> execCacheEntries.toString
       ).foreach { case (k, v) => r.setProperty(k, v) }
       System.err.println(s"[executor-loss] $r")
       val out = java.nio.file.Files.newOutputStream(

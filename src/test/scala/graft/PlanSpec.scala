@@ -498,6 +498,7 @@ class PlanSpec extends SparkSpec {
 
   test("candidate-pair families scan their table once, join nothing, " +
       "and compute each signature once") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -518,6 +519,10 @@ class PlanSpec extends SparkSpec {
         case j: BaseJoinExec => j }.isEmpty, s"$name:\n$text")
       assert(text.sliding(sig.length).count(_ == sig) == 1, s"$name:\n$text")
       assert(text.contains("BucketPairs"), s"$name:\n$text")
+      // no operator evaluates a higher-order function (an interpreted lambda)
+      val hofs = Plans.collectWithSubqueries(plan) { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h }))
+      assert(hofs.isEmpty, s"$name: ${hofs.mkString(", ")}\n$text")
     }
   }
 }

@@ -6,8 +6,9 @@
 # sf0.01 job, but tools/check_oracle.py runs here too when duckdb is
 # available), and with it the benchmark's cdc smoke (extract, publish,
 # round trip, diff, merge and the streaming pipeline, each checked in
-# DuckDB) and curation smoke (the dedup, similarity and text queries
-# against their DuckDB oracles).
+# DuckDB), curation smoke (the dedup, similarity and text queries
+# against their DuckDB oracles) and analytics smoke (the relational
+# queries against theirs).
 #
 # Usage: tools/ci.sh [testdata-dir]   (default /root/testdata/sf0.001)
 set -euo pipefail
@@ -92,8 +93,10 @@ if python3 -c 'import duckdb, pyarrow, pandas' 2>/dev/null; then
   python3 tools/check_oracle.py "$SF_DIR" "$OUT_DIR"
   # one workload prints its verdict as JSON and exits 0 either way; the
   # curation smoke runs the DuckDB oracles of q_dedup_embedding and
-  # q_sim_lsh_topk, which are skipped on the benchmark's own fixture
-  for workload in cdc curation; do
+  # q_sim_lsh_topk, which are skipped on the benchmark's own fixture;
+  # the analytics smoke checks its 14 queries against DuckDB through
+  # the benchmark's own harness
+  for workload in cdc curation analytics; do
     echo "== ci: $workload smoke @ $SF_DIR =="
     smoke=$(python3 perfbench/run.py --workload "$workload" --seconds 0 --data "$SF_DIR" | tail -n 1)
     echo "$smoke"
